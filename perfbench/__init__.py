@@ -1,0 +1,1 @@
+"""Paper-path benchmark of the extraction engine (see README.md)."""
