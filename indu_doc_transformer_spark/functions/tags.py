@@ -3,7 +3,7 @@
 The ordered-grouping semantics of the reference tokenizer
 (tag.py:340-400) do not map cleanly onto regexp_extract_all +
 higher-order functions (values must be sliced *between* separator
-matches and grouped by separator preserving order), so these three
+matches and grouped by separator preserving order), so these two
 kernels stay Python — but batched over Arrow, never per-row
 (SURVEY.md 2.10). Everything else in the assembly layer is native SQL.
 
@@ -25,25 +25,6 @@ from pyspark.sql.types import (
 
 from ..config import AspectsConfig
 from ..kernels import tagparse as tp
-
-
-def make_complete_tag_udf(config: AspectsConfig):
-    """(tag, footer_tags) -> footer-completed tag string (tag.py:178-224)."""
-    separators = tuple(config.separators)
-    cfg = AspectsConfig.from_list(
-        [{"Separator": s, "Aspect": a} for s, a in zip(config.separators, config.aspects)]
-    )
-
-    @F.pandas_udf(StringType())
-    def complete_tag(tags: pd.Series, footer_tags: pd.Series) -> pd.Series:
-        out = []
-        for tag, foot in zip(tags, footer_tags):
-            ft = list(foot) if foot is not None else []
-            out.append(tp.complete_tag_with_footer(tag or "", ft, cfg))
-        return pd.Series(out)
-
-    _ = separators
-    return complete_tag
 
 
 def make_tag_parts_udf(config: AspectsConfig):

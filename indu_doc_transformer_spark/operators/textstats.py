@@ -173,39 +173,6 @@ def gopher_keep(
     )
 
 
-def top_bigram_stats(df, id_col: str, text_col: str):
-    """Gopher repetition rule: the most frequent bigram's count and its
-    fraction of all bigrams per document (high fractions flag
-    boilerplate/templated text). One explode + two aggregations —
-    shuffles on (doc, gram) then doc, no per-doc Python."""
-    toks = _tokens(F.col(text_col))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.concat(
-            F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + 1)
-        ),
-    )
-    g = (
-        df.where(F.size(toks) >= 2)
-        .select(
-            F.col(id_col).alias("id"),
-            F.size(toks).cast("long").alias("total"),
-            F.explode(grams).alias("gram"),
-        )
-        .withColumn("total", F.col("total") - 1)
-    )
-    counts = g.groupBy("id", "total", "gram").agg(F.count("*").alias("cnt"))
-    return counts.groupBy("id", "total").agg(
-        F.max("cnt").alias("top_gram_count")
-    ).select(
-        F.col("id"),
-        "top_gram_count",
-        F.round(F.col("top_gram_count") / F.col("total").cast("double"), 6).alias(
-            "top_gram_frac"
-        ),
-    )
-
-
 def _gram_structs(toks: Column, ns: tuple) -> Column:
     """Flattened array of (n, gram) structs for every n in ``ns`` —
     the shared gram constructor for both repetition families (a change

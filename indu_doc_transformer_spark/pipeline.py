@@ -1,8 +1,9 @@
 """End-to-end extraction pipeline orchestration.
 
 Stage 1 (extract): documents -> salted mapInPandas kernel -> nested
-extraction table, written bucket-partitioned with a completed-bucket
-registry (kill-and-restart resumes idempotently).
+extraction table, written bucket-partitioned (one file per bucket per
+chunk) with a completed-bucket registry (kill-and-restart resumes
+idempotently).
 
 Stage 2 (assemble): read extraction output back (explicit
 materialization barrier: at 100 TB the extraction output is a real
@@ -68,8 +69,9 @@ def run_extraction(
 
     def process(chunk: DataFrame) -> DataFrame:
         pruned = chunk.select("url", "warc_ts", "html", "lang", "bucket")
-        # salt/repartition on the bucket key itself: co-locates the
-        # kernel work with the downstream partitioned write
+        # the kernel is salted on (bucket, url): hashing on bucket alone
+        # would leave some of the chunk's tasks with several buckets.
+        # run_checkpointed rebalances the output on bucket for the write.
         pruned = pruned.repartition(max(8, chunk_size), F.col("bucket"), F.col("url"))
         kernel = (
             ex._extract_batches
@@ -117,19 +119,17 @@ def run_metadata(
     self-describing without this."""
     import datetime
 
-    return spark.createDataFrame(
-        [
-            (
-                config.to_json_str(),
-                page_setups_to_json(page_setups),
-                ",".join(ENTITY_TABLES),
-                spark.version,
-                spark.sparkContext.applicationId,
-                datetime.datetime.now(datetime.timezone.utc).isoformat(),
-            )
-        ],
-        "aspects_config string, page_setups string, entity_tables string, "
-        "spark_version string, app_id string, created_utc string",
+    values = {
+        "aspects_config": config.to_json_str(),
+        "page_setups": page_setups_to_json(page_setups),
+        "entity_tables": ",".join(ENTITY_TABLES),
+        "spark_version": spark.version,
+        "app_id": spark.sparkContext.applicationId,
+        "created_utc": datetime.datetime.now(datetime.timezone.utc).isoformat(),
+    }
+    # literal columns on the JVM: no Python worker for a one-row table
+    return spark.range(1, numPartitions=1).select(
+        *[F.lit(v).alias(k) for k, v in values.items()]
     )
 
 

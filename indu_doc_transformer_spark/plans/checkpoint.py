@@ -3,18 +3,20 @@
 North rule: 'checkpoints completed partitions so a killed run resumes
 idempotently at 10^12-document scale'. Scheme (SURVEY.md 4.2):
 
-- the url space is bucketized by pmod(xxhash64(url), num_buckets) —
-  the same salt key the extraction stage repartitions on;
-- buckets are processed in chunks; each chunk's output lands in
-  bucket-partitioned storage with dynamic partition overwrite, then the
-  chunk's bucket ids are appended to a registry table;
-- restart filters the input with an anti-join against the registry
-  (here a simple NOT IN over the tiny registry), so completed buckets
-  are never recomputed and a half-written chunk is rewritten
-  idempotently (partition overwrite, deterministic GUIDs downstream).
+- the url space is bucketized by pmod(xxhash64(url), num_buckets);
+- buckets are processed in chunks; each chunk's output is rebalanced
+  on ``bucket`` and lands in bucket-partitioned storage with dynamic
+  partition overwrite, so every bucket holds one file per chunk (AQE
+  still splits a bucket larger than the advisory partition size);
+  then the chunk's bucket ids are appended to a registry table;
+- restart filters the input against the registry (here a simple
+  NOT IN over the tiny registry), so completed buckets are never
+  recomputed and a half-written chunk is rewritten idempotently
+  (partition overwrite, deterministic GUIDs downstream).
 
 The registry is tiny (num_buckets rows) — reading it to the driver is
-deliberate, not a scale problem.
+deliberate, not a scale problem. Its rows are built from literals on
+the JVM, so marking a chunk starts no Python worker.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.catalog import path_exists
 
 
 class ProcessingControl:
@@ -67,16 +71,22 @@ class BucketRegistry:
         self.path = path
 
     def completed(self) -> set[int]:
-        try:
-            return {r.bucket for r in self.spark.read.parquet(self.path).collect()}
-        except Exception:
+        """Registered bucket ids; empty only when no registry exists yet.
+        A registry that exists but cannot be read raises, rather than
+        restarting the run from zero."""
+        if not path_exists(self.spark, self.path):
             return set()
+        rows = self.spark.read.schema("bucket int").parquet(self.path).collect()
+        return {r.bucket for r in rows}
+
+    def frame(self, buckets: list[int]) -> DataFrame:
+        """One ``bucket int`` row per id, from literals on the JVM."""
+        return self.spark.range(1, numPartitions=1).select(
+            F.explode(F.array(*[F.lit(int(b)) for b in buckets])).alias("bucket")
+        )
 
     def mark(self, buckets: list[int]) -> None:
-        df = self.spark.createDataFrame(
-            [(int(b),) for b in buckets], schema="bucket int"
-        )
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        self.frame(buckets).write.mode("append").parquet(self.path)
 
 
 def bucket_col(num_buckets: int):
@@ -135,7 +145,7 @@ def run_checkpointed(
                 )
             try:
                 sub = docs.where(F.col("bucket").isin(todo))
-                out = process(sub)
+                out = process(sub).hint("rebalance", "bucket")
                 (
                     out.write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")

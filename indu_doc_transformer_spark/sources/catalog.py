@@ -50,6 +50,11 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 def table_exists(spark: SparkSession, path: str) -> bool:
     if USE_ICEBERG:
         return spark.catalog.tableExists(path)
+    return path_exists(spark, path)
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists on its Hadoop filesystem (no Spark job)."""
     jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)

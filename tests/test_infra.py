@@ -15,6 +15,41 @@ def test_bucket_registry_roundtrip(spark, tmp_path):
     assert reg.completed() == {0, 3, 5}
 
 
+def test_bucket_registry_unreadable_raises(spark, tmp_path):
+    """Only a missing registry means 'nothing done yet': one that exists
+    but cannot be read must fail the run, not restart it from zero."""
+    import pytest
+
+    from indu_doc_transformer_spark.plans.checkpoint import BucketRegistry
+
+    reg_dir = tmp_path / "reg"
+    reg_dir.mkdir()
+    (reg_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|footer"):
+        BucketRegistry(spark, str(reg_dir)).completed()
+
+
+def test_literal_tables_start_no_python_worker(spark):
+    """The registry rows and the run-metadata row are JVM literals: no
+    Python-fed RDD scan in their executed plans."""
+    from indu_doc_transformer_spark import pipeline
+    from indu_doc_transformer_spark.plans.checkpoint import BucketRegistry
+
+    frames = [
+        BucketRegistry(spark, "unused").frame([0, 3, 5]),
+        pipeline.run_metadata(spark),
+    ]
+    for df in frames:
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "Python" not in plan, plan
+    assert sorted(r.bucket for r in frames[0].collect()) == [0, 3, 5]
+    assert frames[0].dtypes == [("bucket", "int")]
+    meta_cols = ["aspects_config", "page_setups", "entity_tables",
+                 "spark_version", "app_id", "created_utc"]
+    assert frames[1].dtypes == [(c, "string") for c in meta_cols]
+
+
 def test_bucket_col_stable(spark):
     """Bucket ids are a pure function of url — stable across restarts
     (the registry contract depends on it)."""

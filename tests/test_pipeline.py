@@ -36,6 +36,23 @@ def test_full_pipeline_outputs(spark, tmp_path):
     assert sum(m["docs"] for m in stats["observed"]) == N
 
 
+def test_extracted_layout_one_file_per_bucket(spark, tmp_path):
+    """Each chunk writes one file into each of its buckets, however many
+    kernel tasks the chunk ran in."""
+    out = str(tmp_path / "out")
+    docs = corpus_df(spark, N, partitions=4)
+    pipeline.run_full(docs, out, num_buckets=8, chunk_size=2)
+    extracted = os.path.join(out, "extracted")
+    bucket_dirs = [d for d in os.listdir(extracted) if d.startswith("bucket=")]
+    assert len(bucket_dirs) == 8
+    for d in bucket_dirs:
+        files = os.listdir(os.path.join(extracted, d))
+        data = [f for f in files if not f.startswith((".", "_"))]
+        assert len(data) == 1, (d, files)
+    pm = spark.read.parquet(os.path.join(out, "metrics_partitions"))
+    assert pm.agg(F.sum("docs")).first()[0] == N
+
+
 def test_run_metadata_reconstructs_config(spark, tmp_path):
     """Run-metadata table (reference db.py:159-161,413-416): one row
     persisted with the assembly output from which the exact
