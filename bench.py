@@ -80,9 +80,10 @@ def main() -> None:
     # import + Arrow serde) so the timed run measures steady state
     ex.extract(corpus_df(spark, cpus * 4, partitions=cpus * 2)).count()
     # warm the assembly codegen path the same way: janino compiles the
-    # 9 request-branch classes ONCE per JVM (measured ~4-5s; the
-    # compile itself is profiled in scripts/profile_assembly.py) — the
-    # steady-state stage cost is what the benchmark measures
+    # 9 request-branch classes ONCE per JVM (measured ~4-5s; the traced
+    # run `perfbench/run.py --workload pipeline --trace 1` splits the
+    # assembly plan build from its jobs) — the steady-state stage cost
+    # is what the benchmark measures
     _wt = asm.assemble(ex.rows_table(ex.extract(corpus_df(spark, 64, partitions=4))))
     _ = _wt["xtargets"].count() + _wt["connections"].count()
     spark.catalog.clearCache()

@@ -12,9 +12,12 @@ quirk (characters of an embedded GUID joined by ':') via
 ``sql_charjoin``. Exact parity is pinned by tests against
 kernels/tagparse.py, which is itself pinned against the reference.
 
-All builders come in two flavors: pyspark Column functions and SQL
-string templates (used inside higher-order-function lambdas where
-Column objects can't reach).
+The entity GUIDs come as pyspark Column functions, with SQL string
+templates (``sql_*``) for higher-order-function lambdas where Column
+objects can't reach. The four attribute GUIDs (``*_attribute_guid``)
+are SQL text only: their arguments are SQL expressions and they return
+one, because their only caller is the SQL-text request layer of
+operators/assembly.py.
 """
 
 from __future__ import annotations
@@ -170,37 +173,30 @@ def pin_chain_expr(pin_col: str, role: str, link_guid_col: str) -> Column:
     )
 
 
-def simple_attribute_guid(name: Column, value: Column) -> Column:
+def simple_attribute_guid(name: str, value: str) -> str:
     """attributes.py:252-259."""
-    return md5_uuid(F.concat(name, F.lit(":"), value))
+    return sql_md5_uuid(f"concat({name}, ':', {value})")
 
 
-def routing_tracks_attribute_guid(name: Column, tracks: Column) -> Column:
+def routing_tracks_attribute_guid(name: str, tracks: str) -> str:
     """attributes.py:373-381 — tracks array sorted then ';'-joined."""
-    return md5_uuid(
-        F.concat(name, F.lit(":"), F.array_join(F.array_sort(tracks), ";"))
-    )
+    return sql_md5_uuid(f"concat({name}, ':', array_join(array_sort({tracks}), ';'))")
 
 
-def plc_address_attribute_guid(address: Column, meta: Column) -> Column:
+def plc_address_attribute_guid(address: str, meta: str) -> str:
     """attributes.py:492-500 — sorted 'k=v' pairs ';'-joined.
 
     ``meta`` is a map<string,string>; array_sort on the entries array
     sorts by key first, matching Python's sorted(dict.items()).
     """
-    kv = F.transform(
-        F.array_sort(F.map_entries(meta)),
-        lambda e: F.concat(e["key"], F.lit("="), e["value"]),
-    )
-    return md5_uuid(F.concat(address, F.lit(":"), F.array_join(kv, ";")))
+    kv = f"transform(array_sort(map_entries({meta})), kv -> concat(kv.key, '=', kv.value))"
+    return sql_md5_uuid(f"concat({address}, ':', array_join({kv}, ';'))")
 
 
-def pdf_location_attribute_guid(page_no: Column, loc_repr: Column) -> Column:
+def pdf_location_attribute_guid(page_no: str, loc_repr: str) -> str:
     """attributes.py:623-630 — 'location:{page_no}:{bbox tuple repr}'.
 
     loc_repr is the Python-tuple repr emitted by the kernel
     (kernels/tagparse.pdf_location_repr) so the hash input is
     byte-identical to the reference."""
-    return md5_uuid(
-        F.concat(F.lit("location:"), page_no.cast("string"), F.lit(":"), loc_repr)
-    )
+    return sql_md5_uuid(f"concat('location:', cast({page_no} as string), ':', {loc_repr})")

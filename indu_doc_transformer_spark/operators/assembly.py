@@ -1,6 +1,5 @@
 """Relational entity assembly: normalized extraction rows -> deduplicated
-entity tables, entirely in DataFrame algebra, in a SINGLE pass over the
-rows table.
+entity tables, entirely in DataFrame algebra.
 
 This is the Spark-first re-expression of the reference's God factory
 layer (god.py:237-565) and per-type page handlers
@@ -9,16 +8,21 @@ in-memory dicts row by row, we:
 
 - project every row into an array of typed *requests* (xtarget /
   connection / connection-with-link / aspect / error / attribute-pool)
-  with one CASE over page_type — ';'-products (J6) and the terminal
-  _1/_2 side split (T9) are built inside array transforms, so the whole
-  handler layer is ONE scan + ONE explode (the previous design scanned
-  the rows table once per handler branch — 8 passes at 10^12-row scale),
+  in nine per-page-type branches, unioned into one requests table
+  (``requests_table``). ';'-products (J6) and the terminal _1/_2 side
+  split (T9) are built inside array transforms; each branch is one
+  filtered scan + one explode,
 - complete tags against footers in the extraction kernel (the '_c:'
   columns — no per-row Python here at all),
 - compute every GUID as a native md5 expression (F8 — join
   elimination: FK assignment never joins, both sides hash),
 - finalize with groupBy(guid) merges: max type priority (A4),
   first-wins entities (A1,A5-A8), set-union attachments (A3,A6).
+
+The request branches are SQL text built by plain Python (no JVM
+round trip until ``selectExpr``); the text interpolates constants only
+— column names, map-key and message literals — never row data. The
+finishers (``finish``) use the Column DSL.
 
 Dedup-by-GUID replaces dedup-on-create; Catalyst plans partial/final
 hash aggregation (the reference's sub_god merge, A9) automatically.
@@ -40,42 +44,26 @@ ATTR_TYPE = "array<struct<guid:string,name:string,type:string,value_json:string>
 EMPTY_ATTRS = f"cast(array() as {ATTR_TYPE})"
 
 # unified request struct: one array element per factory call
-_REQ_FIELDS = [
-    ("kind", "string"),        # xreq | conn | cwl | aspect | error
-    ("raw_tag", "string"),     # xreq/aspect
-    ("raw_tag_c", "string"),
-    ("target_type", "string"),
-    ("through_tag", "string"),  # conn/cwl
-    ("through_tag_c", "string"),
-    ("src_tag", "string"),      # conn (pre-split); cwl uses *_pin_tag
-    ("src_tag_c", "string"),
-    ("dst_tag", "string"),
-    ("dst_tag_c", "string"),
-    ("src_pin_tag", "string"),  # cwl
-    ("src_pin_tag_c", "string"),
-    ("dst_pin_tag", "string"),
-    ("dst_pin_tag_c", "string"),
-    ("message", "string"),      # error
-]
-REQ_TYPE = (
-    "struct<"
-    + ",".join(f"{n}:{t}" for n, t in _REQ_FIELDS)
-    + f",attrs:{ATTR_TYPE},link_attrs:{ATTR_TYPE},"
-    + f"through_attrs:{ATTR_TYPE},loc_attrs:{ATTR_TYPE}>"
+_REQ_STRINGS = (
+    "kind",           # xreq | conn | cwl | aspect | error | pool
+    "raw_tag",        # xreq/aspect
+    "raw_tag_c",
+    "target_type",
+    "through_tag",    # conn/cwl
+    "through_tag_c",
+    "src_tag",        # conn (pre-split); cwl uses *_pin_tag
+    "src_tag_c",
+    "dst_tag",
+    "dst_tag_c",
+    "src_pin_tag",    # cwl
+    "src_pin_tag_c",
+    "dst_pin_tag",
+    "dst_pin_tag_c",
+    "message",        # error
 )
+_REQ_ATTRS = ("attrs", "link_attrs", "through_attrs", "loc_attrs")
 
 TYPE_PRIORITY = {"cable": 3, "device": 2, "strip": 1, "other": 0}
-
-# (applicationId, page_type) -> (pre, req) unresolved expression trees;
-# see Assembler._branch_exprs. Config-independent by construction (the
-# branch builders use only class-level constants; AspectsConfig feeds
-# the finisher UDFs, never the request projections). The lock guards
-# mutation only — requests_table builds the nine branches from a
-# thread pool, and an unguarded evict-while-insert raced.
-import threading as _threading
-
-_BRANCH_EXPR_CACHE: dict = {}
-_BRANCH_EXPR_LOCK = _threading.Lock()
 
 
 def _pri(type_col: Column) -> Column:
@@ -88,108 +76,111 @@ def _pri_name(pri_col: Column) -> Column:
     return c.when(pri_col == 1, "strip").otherwise("other")
 
 
-def _g(cols: Column, name: str) -> Column:
+def _concat_str(*parts) -> Column:
+    return F.concat(*[p if isinstance(p, Column) else F.lit(p) for p in parts])
+
+
+# -- request-layer SQL text (constants only, never row data) -----------
+
+
+def _q(s: str) -> str:
+    """SQL string literal for a constant."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _g(cols: str, name: str) -> str:
     """str(row[name]).strip() with missing-key -> '' (handler accessor)."""
-    return F.trim(F.coalesce(F.try_element_at(cols, F.lit(name)), F.lit("")))
+    return f"trim(coalesce(try_element_at({cols}, {_q(name)}), ''))"
 
 
-def _simple_attrs(cols: Column, exclude: list[str]) -> Column:
-    """SIMPLE attributes from every non-excluded, non-meta, non-empty
-    column (page_processor.py:122-130 pattern)."""
-    entries = F.filter(
-        F.map_entries(cols),
-        lambda e: (~e["key"].isin(exclude))
-        & (~e["key"].startswith("_"))
-        & (e["key"] != "")
-        & (F.trim(e["value"]) != ""),
-    )
-    return F.transform(
-        entries,
-        lambda e: F.struct(
-            G.simple_attribute_guid(e["key"], F.trim(e["value"])).alias("guid"),
-            e["key"].alias("name"),
-            F.lit("SIMPLE").alias("type"),
-            F.to_json(F.struct(F.trim(e["value"]).alias("value"))).alias("value_json"),
-        ),
+def _split(expr: str) -> str:
+    return f"split({expr}, ';')"
+
+
+def _zip(fields: dict[str, str]) -> str:
+    """arrays_zip with named fields (SQL arrays_zip names them by ordinal)."""
+    names = ",".join(f"{n}:string" for n in fields)
+    return f"cast(arrays_zip({', '.join(fields.values())}) as array<struct<{names}>>)"
+
+
+def _kept_entries(cols: str, exclude: list[str]) -> str:
+    """Map entries that become attributes: not excluded, not meta ('_'),
+    non-empty key and trimmed value (page_processor.py:122-130)."""
+    return (
+        f"filter(map_entries({cols}), e -> e.key NOT IN ({', '.join(map(_q, exclude))})"
+        " AND NOT startswith(e.key, '_') AND e.key != '' AND trim(e.value) != '')"
     )
 
 
-def _loc_attrs() -> Column:
+def _attr(guid: str, name: str, attr_type: str, value_json: str) -> str:
+    return (
+        f"struct({guid} AS guid, {name} AS name, {_q(attr_type)} AS type,"
+        f" {value_json} AS value_json)"
+    )
+
+
+def _simple_attrs(cols: str, exclude: list[str]) -> str:
+    """SIMPLE attributes from every kept column."""
+    v = "trim(e.value)"
+    attr = _attr(
+        G.simple_attribute_guid("e.key", v), "e.key", "SIMPLE",
+        f"to_json(struct({v} AS value))",
+    )
+    return f"transform({_kept_entries(cols, exclude)}, e -> {attr})"
+
+
+def _loc_attrs() -> str:
     """0/1-element array with the PDF_LOCATION attribute."""
-    attr = F.struct(
-        G.pdf_location_attribute_guid(F.col("page_no"), F.col("loc_repr")).alias("guid"),
-        F.lit("location").alias("name"),
-        F.lit("PDF_LOCATION").alias("type"),
-        F.to_json(
-            F.struct(F.col("loc_repr").alias("bbox"), F.col("page_no").alias("page_no"))
-        ).alias("value_json"),
+    attr = _attr(
+        G.pdf_location_attribute_guid("page_no", "loc_repr"), "'location'", "PDF_LOCATION",
+        "to_json(struct(loc_repr AS bbox, page_no AS page_no))",
     )
-    return F.when(F.col("loc_repr").isNotNull(), F.array(attr)).otherwise(
-        F.expr(EMPTY_ATTRS)
-    )
+    return f"CASE WHEN loc_repr IS NOT NULL THEN array({attr}) ELSE {EMPTY_ATTRS} END"
 
 
-def _routing_attr(route_col: Column) -> Column:
-    tracks = F.split(route_col, ";")
+def _routing_attr(route: str) -> str:
+    tracks = _split(route)
     # value_json uses the sorted tracks: the guid is order-insensitive
     # (attributes.py:373-381) so first-wins dedup over differently-
     # ordered track lists would otherwise be nondeterministic
-    return F.struct(
-        G.routing_tracks_attribute_guid(F.lit("route"), tracks).alias("guid"),
-        F.lit("route").alias("name"),
-        F.lit("ROUTING_TRACKS").alias("type"),
-        F.to_json(F.struct(F.array_sort(tracks).alias("tracks"))).alias("value_json"),
+    return _attr(
+        G.routing_tracks_attribute_guid("'route'", tracks), "'route'", "ROUTING_TRACKS",
+        f"to_json(struct(array_sort({tracks}) AS tracks))",
     )
 
 
-def _plc_attr(cols: Column) -> Column:
+def _plc_attr(cols: str) -> str:
     """PLC_ADDRESS attribute: address + sorted k=v metadata
     (attributes.py:492-500)."""
-    entries = F.array_sort(
-        F.transform(
-            F.filter(
-                F.map_entries(cols),
-                lambda e: (~e["key"].isin(["tag", "plc_addr"]))
-                & (~e["key"].startswith("_"))
-                & (e["key"] != "")
-                & (F.trim(e["value"]) != ""),
-            ),
-            lambda e: F.struct(e["key"].alias("key"), F.trim(e["value"]).alias("value")),
-        )
+    entries = (
+        f"array_sort(transform({_kept_entries(cols, ['tag', 'plc_addr'])},"
+        " e -> struct(e.key AS key, trim(e.value) AS value)))"
     )
+    meta = f"map_from_entries({entries})"
     addr = _g(cols, "plc_addr")
-    return F.struct(
-        G.plc_address_attribute_guid(addr, F.map_from_entries(entries)).alias("guid"),
-        addr.alias("name"),
-        F.lit("PLC_ADDRESS").alias("type"),
-        F.to_json(F.struct(F.map_from_entries(entries).alias("meta"))).alias("value_json"),
+    return _attr(
+        G.plc_address_attribute_guid(addr, meta), addr, "PLC_ADDRESS",
+        f"to_json(struct({meta} AS meta))",
     )
 
 
-def _req(**fields) -> Column:
-    """Build one request struct, nulling unset fields."""
-    parts = []
-    for name, _t in _REQ_FIELDS:
-        parts.append(
-            (fields[name] if name in fields else F.lit(None).cast("string")).alias(name)
-        )
-    for name in ("attrs", "link_attrs", "through_attrs", "loc_attrs"):
-        parts.append(
-            (fields[name] if name in fields else F.expr(EMPTY_ATTRS)).alias(name)
-        )
-    return F.struct(*parts)
+def _req(kind: str, **fields: str) -> str:
+    """One request struct; unset fields are NULL / empty attribute arrays."""
+    fields["kind"] = _q(kind)
+    parts = [f"{fields.get(n, 'CAST(NULL AS STRING)')} AS {n}" for n in _REQ_STRINGS]
+    parts += [f"{fields.get(n, EMPTY_ATTRS)} AS {n}" for n in _REQ_ATTRS]
+    return f"struct({', '.join(parts)})"
 
 
-def _err_req(msg: Column) -> Column:
-    return _req(kind=F.lit("error"), message=msg)
-
-
-def _one(req: Column) -> Column:
-    return F.array(req)
-
-
-def _concat_str(*parts) -> Column:
-    return F.concat(*[p if isinstance(p, Column) else F.lit(p) for p in parts])
+def _skipped(bad: str, ok: str, what: str, *exprs: str) -> str:
+    """``ok`` unless ``bad``; then one error request 'row #N skipped: '
+    + ``what``, whose '{}' holes take ``exprs`` in order."""
+    pieces = ("row #{} skipped: " + what).split("{}")
+    parts = [_q(pieces[0])]
+    for e, lit in zip(("row_idx",) + exprs, pieces[1:]):
+        parts += [e] + ([_q(lit)] if lit else [])
+    err = _req("error", message=f"concat({', '.join(parts)})")
+    return f"CASE WHEN {bad} THEN array({err}) ELSE {ok} END"
 
 
 class Assembler:
@@ -201,61 +192,42 @@ class Assembler:
         self.tag_parts = make_tag_parts_udf(config)
         self.single_aspect = make_single_aspect_udf(config)
 
-    # -- per-type request builders (each returns array<request>) -------
+    # -- per-type request builders (each returns array<request> SQL) ----
 
-    def _connection_list(self, cols: Column, attrs: Column, loc: Column) -> Column:
+    def _connection_list(self, cols: str, attrs: str, loc: str) -> str:
         tag_from, tag_to = _g(cols, "src_pin_tag"), _g(cols, "dst_pin_tag")
-        bad = (tag_from == "") | (tag_to == "")
-        ok = _one(
-            _req(
-                kind=F.lit("cwl"),
-                src_pin_tag=tag_from,
-                src_pin_tag_c=_g(cols, "_c:src_pin_tag"),
-                dst_pin_tag=tag_to,
-                dst_pin_tag_c=_g(cols, "_c:dst_pin_tag"),
-                link_attrs=attrs,
-                attrs=attrs,
-                loc_attrs=loc,
-            )
+        ok = _req(
+            "cwl",
+            src_pin_tag=tag_from,
+            src_pin_tag_c=_g(cols, "_c:src_pin_tag"),
+            dst_pin_tag=tag_to,
+            dst_pin_tag_c=_g(cols, "_c:dst_pin_tag"),
+            link_attrs=attrs,
+            attrs=attrs,
+            loc_attrs=loc,
         )
-        err = _one(
-            _err_req(
-                _concat_str(
-                    "row #", F.col("row_idx"),
-                    " skipped: one/both of the connection targets are empty "
-                    "(is that intended?): `", tag_from, "` `", tag_to, "`",
-                )
-            )
+        return _skipped(
+            f"({tag_from} = '' OR {tag_to} = '')", f"array({ok})",
+            "one/both of the connection targets are empty (is that intended?): `{}` `{}`",
+            tag_from, tag_to,
         )
-        return F.when(bad, err).otherwise(ok)
 
-    def _device_tag_list(self, cols: Column, attrs: Column) -> Column:
+    def _device_tag_list(self, cols: str, attrs: str) -> str:
         tag = _g(cols, "tag")
-        ok = _one(
-            _req(
-                kind=F.lit("xreq"),
-                raw_tag=tag,
-                raw_tag_c=_g(cols, "_c:tag"),
-                target_type=F.lit("device"),
-                attrs=attrs,
-            )
+        ok = _req(
+            "xreq", raw_tag=tag, raw_tag_c=_g(cols, "_c:tag"),
+            target_type="'device'", attrs=attrs,
         )
-        err = _one(
-            _err_req(
-                _concat_str(
-                    "row #", F.col("row_idx"),
-                    " skipped: empty device tag (is that intended?): `", tag, "`",
-                )
-            )
+        return _skipped(
+            f"{tag} = ''", f"array({ok})",
+            "empty device tag (is that intended?): `{}`", tag,
         )
-        return F.when(tag == "", err).otherwise(ok)
 
-    def _cable_overview(self, cols: Column, attrs: Column, loc: Column) -> Column:
+    def _cable_overview(self, cols: str, attrs: str, loc: str) -> str:
         tag = _g(cols, "cable_tag")
         tag_from, tag_to = _g(cols, "src_tag"), _g(cols, "dst_tag")
-        bad = (tag == "") | ((tag_from == "") & (tag_to == ""))
         conn = _req(
-            kind=F.lit("conn"),
+            "conn",
             through_tag=tag,
             through_tag_c=_g(cols, "_c:cable_tag"),
             src_tag=tag_from,
@@ -268,191 +240,125 @@ class Assembler:
         )
         # one-sided rows register attributes but create nothing
         # (page_processor.py:193-213): emit a pool-only request
-        pool = _req(kind=F.lit("pool"), attrs=attrs)
-        ok = F.when((tag_from != "") & (tag_to != ""), _one(conn)).otherwise(_one(pool))
-        err = _one(
-            _err_req(
-                _concat_str(
-                    "row #", F.col("row_idx"),
-                    " skipped: empty cable tag (is that intended?): `", tag,
-                    "` from=`", tag_from, "` to=`", tag_to, "`",
-                )
-            )
+        pool = _req("pool", attrs=attrs)
+        ok = (
+            f"CASE WHEN ({tag_from} != '' AND {tag_to} != '') THEN array({conn})"
+            f" ELSE array({pool}) END"
         )
-        return F.when(bad, err).otherwise(ok)
+        return _skipped(
+            f"({tag} = '' OR ({tag_from} = '' AND {tag_to} = ''))", ok,
+            "empty cable tag (is that intended?): `{}` from=`{}` to=`{}`",
+            tag, tag_from, tag_to,
+        )
 
-    def _topology(self, cols: Column, attrs: Column, loc: Column) -> Column:
+    def _topology(self, cols: str, attrs: str, loc: str) -> str:
         tag = _g(cols, "designation")
         tags_src, tags_dst = _g(cols, "src_tags"), _g(cols, "dst_tags")
         tags_route = _g(cols, "route")
-        bad = (tag == "") | (tags_src == "") | (tags_dst == "") | (tags_route == "")
         # J6: cartesian of ';'-split src x dst (page_processor.py:299-304)
         # as nested transforms over pre-zipped arrays (each split is
         # evaluated once as a transform input, not per element)
-        src_zip = F.arrays_zip(
-            F.split(tags_src, ";").alias("r"),
-            F.split(_g(cols, "_c:src_tags"), ";").alias("c"),
+        src_zip = _zip({"r": _split(tags_src), "c": _split(_g(cols, "_c:src_tags"))})
+        dst_zip = _zip({"r": _split(tags_dst), "c": _split(_g(cols, "_c:dst_tags"))})
+        conn = _req(
+            "conn",
+            through_tag=tag,
+            through_tag_c=_g(cols, "_c:designation"),
+            src_tag="s.r",
+            src_tag_c="s.c",
+            dst_tag="d.r",
+            dst_tag_c="d.c",
+            through_attrs=attrs,
+            loc_attrs=loc,
         )
-        dst_zip = F.arrays_zip(
-            F.split(tags_dst, ";").alias("r"),
-            F.split(_g(cols, "_c:dst_tags"), ";").alias("c"),
+        pairs = f"flatten(transform({src_zip}, s -> transform({dst_zip}, d -> {conn})))"
+        return _skipped(
+            f"({tag} = '' OR {tags_src} = '' OR {tags_dst} = '' OR {tags_route} = '')",
+            f"concat({pairs}, array({_req('pool', attrs=attrs)}))",
+            "empty topology tag (is that intended?): `{}` from=`{}` to=`{}` route=`{}`",
+            tag, tags_src, tags_dst, tags_route,
         )
-        pairs = F.flatten(
-            F.transform(
-                src_zip,
-                lambda s: F.transform(
-                    dst_zip,
-                    lambda d: _req(
-                        kind=F.lit("conn"),
-                        through_tag=tag,
-                        through_tag_c=_g(cols, "_c:designation"),
-                        src_tag=s["r"],
-                        src_tag_c=s["c"],
-                        dst_tag=d["r"],
-                        dst_tag_c=d["c"],
-                        through_attrs=attrs,
-                        loc_attrs=loc,
-                    ),
-                ),
-            )
-        )
-        ok = F.concat(pairs, _one(_req(kind=F.lit("pool"), attrs=attrs)))
-        err = _one(
-            _err_req(
-                _concat_str(
-                    "row #", F.col("row_idx"),
-                    " skipped: empty topology tag (is that intended?): `", tag,
-                    "` from=`", tags_src, "` to=`", tags_dst,
-                    "` route=`", tags_route, "`",
-                )
-            )
-        )
-        return F.when(bad, err).otherwise(ok)
 
-    def _wires(self, cols: Column, attrs: Column, loc: Column) -> Column:
+    def _wires(self, cols: str, attrs: str, loc: str) -> str:
         tag_src, tag_dst = _g(cols, "src_pin_tag"), _g(cols, "dst_pin_tag")
-        bad = (tag_src == "") | (tag_dst == "")
-        ok = _one(
-            _req(
-                kind=F.lit("cwl"),
-                src_pin_tag=tag_src,
-                src_pin_tag_c=_g(cols, "_c:src_pin_tag"),
-                dst_pin_tag=tag_dst,
-                dst_pin_tag_c=_g(cols, "_c:dst_pin_tag"),
-                link_attrs=attrs,
-                attrs=attrs,
-                loc_attrs=loc,
-            )
+        ok = _req(
+            "cwl",
+            src_pin_tag=tag_src,
+            src_pin_tag_c=_g(cols, "_c:src_pin_tag"),
+            dst_pin_tag=tag_dst,
+            dst_pin_tag_c=_g(cols, "_c:dst_pin_tag"),
+            link_attrs=attrs,
+            attrs=attrs,
+            loc_attrs=loc,
         )
-        err = _one(
-            _err_req(
-                _concat_str(
-                    "row #", F.col("row_idx"),
-                    " skipped: empty wire connection info (is that intended?): from=`",
-                    tag_src, "` to=`", tag_dst, "`",
-                )
-            )
+        return _skipped(
+            f"({tag_src} = '' OR {tag_dst} = '')", f"array({ok})",
+            "empty wire connection info (is that intended?): from=`{}` to=`{}`",
+            tag_src, tag_dst,
         )
-        return F.when(bad, err).otherwise(ok)
 
-    def _cable_diagram(self, cols: Column, attrs: Column, loc: Column) -> Column:
+    def _cable_diagram(self, cols: str, attrs: str, loc: str) -> str:
         """Also reused for each terminal-diagram side (T9)."""
         tag = _g(cols, "cable_tag")
         tag_src, tag_dst = _g(cols, "src_tag"), _g(cols, "dst_tag")
         pin_src, pin_dst = _g(cols, "src_pin"), _g(cols, "dst_pin")
-        bad = (tag_src == "") & (tag_dst == "") & (pin_src == "") & (pin_dst == "")
-        ts, cts = F.split(tag_src, ";"), F.split(_g(cols, "_c:src_tag"), ";")
-        ps = F.split(pin_src, ";")
-        cs, ccs = F.split(tag, ";"), F.split(_g(cols, "_c:cable_tag"), ";")
-        td, ctd = F.split(tag_dst, ";"), F.split(_g(cols, "_c:dst_tag"), ";")
-        pd = F.split(pin_dst, ";")
+        ts, ps, cs = _split(tag_src), _split(pin_src), _split(tag)
+        td, pd = _split(tag_dst), _split(pin_dst)
         # zip of src triples x dst pairs (page_processor.py:408-422);
         # Python zip truncates to the shortest list -> slice+least
-        src_zip = F.slice(
-            F.arrays_zip(ts.alias("t"), cts.alias("ct"), ps.alias("p"),
-                         cs.alias("c"), ccs.alias("cc")),
-            1, F.least(F.size(ts), F.size(ps), F.size(cs)),
+        src_zip = _zip({
+            "t": ts, "ct": _split(_g(cols, "_c:src_tag")), "p": ps,
+            "c": cs, "cc": _split(_g(cols, "_c:cable_tag")),
+        })
+        dst_zip = _zip({"t": td, "ct": _split(_g(cols, "_c:dst_tag")), "p": pd})
+        link = _req(
+            "cwl",
+            through_tag="CASE WHEN sp.c != '' THEN sp.c END",
+            through_tag_c="sp.cc",
+            src_pin_tag="concat(sp.t, ':', sp.p)",
+            src_pin_tag_c="concat(sp.ct, ':', sp.p)",
+            dst_pin_tag="concat(dp.t, ':', dp.p)",
+            dst_pin_tag_c="concat(dp.ct, ':', dp.p)",
+            link_attrs=attrs,
+            loc_attrs=loc,
         )
-        dst_zip = F.slice(
-            F.arrays_zip(td.alias("t"), ctd.alias("ct"), pd.alias("p")),
-            1, F.least(F.size(td), F.size(pd)),
+        pairs = (
+            f"flatten(transform(slice({src_zip}, 1, least(size({ts}), size({ps}), size({cs}))),"
+            f" sp -> transform(slice({dst_zip}, 1, least(size({td}), size({pd}))),"
+            f" dp -> {link})))"
         )
-        pairs = F.flatten(
-            F.transform(
-                src_zip,
-                lambda sp: F.transform(
-                    dst_zip,
-                    lambda dp: _req(
-                        kind=F.lit("cwl"),
-                        through_tag=F.when(sp["c"] != "", sp["c"]),
-                        through_tag_c=sp["cc"],
-                        src_pin_tag=F.concat(sp["t"], F.lit(":"), sp["p"]),
-                        src_pin_tag_c=F.concat(sp["ct"], F.lit(":"), sp["p"]),
-                        dst_pin_tag=F.concat(dp["t"], F.lit(":"), dp["p"]),
-                        dst_pin_tag_c=F.concat(dp["ct"], F.lit(":"), dp["p"]),
-                        link_attrs=attrs,
-                        loc_attrs=loc,
-                    ),
-                ),
-            )
-        )
-        ok = F.concat(pairs, _one(_req(kind=F.lit("pool"), attrs=attrs)))
-        err = _one(
-            _err_req(
-                _concat_str(
-                    "row #", F.col("row_idx"),
-                    " skipped: empty cable diagram info (is that intended?): `", tag,
-                    "` from=`", tag_src, "``", pin_src,
-                    "` to=`", tag_dst, "``", pin_dst, "` ",
-                )
-            )
-        )
-        return F.when(bad, err).otherwise(ok)
-
-    def _structure(self, cols: Column, attrs: Column) -> Column:
-        return _one(
-            _req(kind=F.lit("aspect"), raw_tag=_g(cols, "tag"), attrs=attrs)
+        return _skipped(
+            f"({tag_src} = '' AND {tag_dst} = '' AND {pin_src} = '' AND {pin_dst} = '')",
+            f"concat({pairs}, array({_req('pool', attrs=attrs)}))",
+            "empty cable diagram info (is that intended?): `{}` from=`{}``{}` to=`{}``{}` ",
+            tag, tag_src, pin_src, tag_dst, pin_dst,
         )
 
-    def _plc(self, cols: Column, attrs: Column) -> Column:
+    def _structure(self, cols: str, attrs: str) -> str:
+        return f"array({_req('aspect', raw_tag=_g(cols, 'tag'), attrs=attrs)})"
+
+    def _plc(self, cols: str, attrs: str) -> str:
         tag, plc_addr = _g(cols, "tag"), _g(cols, "plc_addr")
-        bad = (tag == "") | (plc_addr == "")
-        ok = _one(
-            _req(
-                kind=F.lit("xreq"),
-                raw_tag=tag,
-                raw_tag_c=_g(cols, "_c:tag"),
-                target_type=F.lit("device"),
-                attrs=attrs,
-            )
+        ok = _req(
+            "xreq", raw_tag=tag, raw_tag_c=_g(cols, "_c:tag"),
+            target_type="'device'", attrs=attrs,
         )
-        err = _one(
-            _err_req(
-                _concat_str(
-                    "row #", F.col("row_idx"),
-                    " skipped: empty PLC diagram info (is that intended?): `",
-                    tag, "` addr=`", plc_addr, "`",
-                )
-            )
+        return _skipped(
+            f"({tag} = '' OR {plc_addr} = '')", f"array({ok})",
+            "empty PLC diagram info (is that intended?): `{}` addr=`{}`",
+            tag, plc_addr,
         )
-        return F.when(bad, err).otherwise(ok)
 
     @staticmethod
-    def _terminal_side(prefix: str) -> Column:
+    def _terminal_side(prefix: str) -> str:
         """_1/_2-prefixed columns merged over the base columns
         (page_processor.py:503-521)."""
-        base = F.map_filter(
-            F.col("cols"), lambda k, v: ~(k.startswith("_1") | k.startswith("_2"))
+        base = "map_filter(cols, (k, v) -> NOT (startswith(k, '_1') OR startswith(k, '_2')))"
+        side = (
+            f"transform_keys(map_filter(cols, (k, v) -> startswith(k, {_q(prefix)})),"
+            " (k, v) -> substring(k, 3, 100000))"
         )
-
-        def keep(k, v):
-            return k.startswith(prefix)
-
-        def strip(k, v):
-            return F.substring(k, 3, 100000)
-
-        side = F.transform_keys(F.map_filter(F.col("cols"), keep), strip)
-        return F.map_concat(base, side)
+        return f"map_concat({base}, {side})"
 
     _SIMPLE_EXCLUDE = {
         "connection_list": ["src_pin_tag", "dst_pin_tag", "name"],
@@ -464,88 +370,61 @@ class Assembler:
         "structure_identifier_overview": ["tag"],
     }
 
-    def _branch_exprs(self, page_type: str) -> tuple[list, "Column"]:
-        """The branch's unresolved expression trees: an ordered list of
-        precomputed (name, Column) pairs plus the request-array Column.
+    def _branch_exprs(self, page_type: str) -> tuple[list[tuple[str, str]], str]:
+        """The branch's SQL text: an ordered list of precomputed
+        (name, expression) columns plus the request-array expression.
 
-        Pure plan-building (no DataFrame, no jobs): every Column here
-        references input columns by NAME only and depends on nothing but
-        ``page_type`` and class-level constants, so the trees are
-        memoized per (application, page_type) in ``_BRANCH_EXPR_CACHE``
-        — building them is thousands of py4j round-trips (~3-5s for all
-        nine branches, guide §1.2 "per-task work" at the driver), paid
-        once per JVM instead of once per assemble() call.
+        Plain string building: nothing here touches the JVM, so there is
+        nothing to cache. The precomputed ``_loc_a``/``_attrs`` (terminal:
+        ``_cols1/2``, ``_attrs1/2``) hold the md5+to_json attribute
+        arrays, evaluated once per row instead of once per emitted
+        request element.
         """
-        cols = F.col("cols")
-        pre: list = [("_loc_a", _loc_attrs())]
-
-        def base_attrs(c: Column, ptype: str) -> Column:
-            return F.concat(_simple_attrs(c, self._SIMPLE_EXCLUDE[ptype]), F.col("_loc_a"))
-
-        attrs, loc_a = F.col("_attrs"), F.col("_loc_a")
+        pre = [("_loc_a", _loc_attrs())]
+        excl = self._SIMPLE_EXCLUDE.get(page_type)
+        base = f"concat({_simple_attrs('cols', excl)}, _loc_a)" if excl else None
         if page_type == "connection_list":
-            pre.append(("_attrs", base_attrs(cols, page_type)))
-            req = self._connection_list(cols, attrs, loc_a)
+            pre.append(("_attrs", base))
+            req = self._connection_list("cols", "_attrs", "_loc_a")
         elif page_type == "device_tag_list":
-            pre.append(("_attrs", base_attrs(cols, page_type)))
-            req = self._device_tag_list(cols, attrs)
+            pre.append(("_attrs", base))
+            req = self._device_tag_list("cols", "_attrs")
         elif page_type == "cable_overview":
-            pre.append(("_attrs", base_attrs(cols, page_type)))
-            req = self._cable_overview(cols, attrs, loc_a)
+            pre.append(("_attrs", base))
+            req = self._cable_overview("cols", "_attrs", "_loc_a")
         elif page_type == "topology":
-            pre.append(
-                (
-                    "_attrs",
-                    F.concat(
-                        base_attrs(cols, page_type),
-                        F.array(_routing_attr(_g(cols, "route"))),
-                    ),
-                )
-            )
-            req = self._topology(cols, attrs, loc_a)
+            route = _routing_attr(_g("cols", "route"))
+            pre.append(("_attrs", f"concat({base}, array({route}))"))
+            req = self._topology("cols", "_attrs", "_loc_a")
         elif page_type == "wires_part_list":
-            pre.append(
-                (
-                    "_attrs",
-                    F.concat(
-                        base_attrs(cols, page_type),
-                        F.when(
-                            _g(cols, "route") != "",
-                            F.array(_routing_attr(_g(cols, "route"))),
-                        ).otherwise(F.expr(EMPTY_ATTRS)),
-                    ),
-                )
+            route = _g("cols", "route")
+            routing = (
+                f"CASE WHEN {route} != '' THEN array({_routing_attr(route)})"
+                f" ELSE {EMPTY_ATTRS} END"
             )
-            req = self._wires(cols, attrs, loc_a)
+            pre.append(("_attrs", f"concat({base}, {routing})"))
+            req = self._wires("cols", "_attrs", "_loc_a")
         elif page_type == "cable_diagram":
-            pre.append(("_attrs", base_attrs(cols, page_type)))
-            req = self._cable_diagram(cols, attrs, loc_a)
+            pre.append(("_attrs", base))
+            req = self._cable_diagram("cols", "_attrs", "_loc_a")
         elif page_type == "terminal_diagram":
             cable_excl = self._SIMPLE_EXCLUDE["cable_diagram"]
-            pre.extend(
-                [
-                    ("_cols1", self._terminal_side("_1")),
-                    ("_cols2", self._terminal_side("_2")),
-                    (
-                        "_attrs1",
-                        F.concat(_simple_attrs(F.col("_cols1"), cable_excl), loc_a),
-                    ),
-                    (
-                        "_attrs2",
-                        F.concat(_simple_attrs(F.col("_cols2"), cable_excl), loc_a),
-                    ),
-                ]
-            )
-            req = F.concat(
-                self._cable_diagram(F.col("_cols1"), F.col("_attrs1"), loc_a),
-                self._cable_diagram(F.col("_cols2"), F.col("_attrs2"), loc_a),
+            pre += [
+                ("_cols1", self._terminal_side("_1")),
+                ("_cols2", self._terminal_side("_2")),
+                ("_attrs1", f"concat({_simple_attrs('_cols1', cable_excl)}, _loc_a)"),
+                ("_attrs2", f"concat({_simple_attrs('_cols2', cable_excl)}, _loc_a)"),
+            ]
+            req = (
+                f"concat({self._cable_diagram('_cols1', '_attrs1', '_loc_a')},"
+                f" {self._cable_diagram('_cols2', '_attrs2', '_loc_a')})"
             )
         elif page_type == "structure_identifier_overview":
-            pre.append(("_attrs", base_attrs(cols, page_type)))
-            req = self._structure(cols, attrs)
+            pre.append(("_attrs", base))
+            req = self._structure("cols", "_attrs")
         elif page_type == "plc_diagram":
-            pre.append(("_attrs", F.concat(F.array(_plc_attr(cols)), loc_a)))
-            req = self._plc(cols, attrs)
+            pre.append(("_attrs", f"concat(array({_plc_attr('cols')}), _loc_a)"))
+            req = self._plc("cols", "_attrs")
         else:  # pragma: no cover - guarded by HANDLED_PAGE_TYPES
             raise KeyError(page_type)
         return pre, req
@@ -554,43 +433,18 @@ class Assembler:
         """One per-page-type branch: filter -> branch-specific precompute
         -> request projection -> explode.
 
-        Design note (measured, scripts/profile_union.py): a single CASE
-        projection over all 9 handlers compiles to one giant janino
-        class (~35s one-time compile, and too wide for whole-stage
-        codegen). Nine small per-type projections compile in ~2s each
-        and execute codegen'd, cutting the assembly fixed cost >2x.
-        Each branch re-scans the rows input with a pushable
-        page_type filter — at warehouse scale the rows stage table is
-        partitioned by page_type, so the 9 scans prune to 1 full pass.
-
-        The precomputed ``_attrs``/``_loc_a`` (and terminal ``_cols1/2``)
-        columns hold the expensive md5+to_json attribute arrays so they
-        are evaluated once per row, never per emitted request element.
-        The expression trees come from the per-application memo (see
-        ``_branch_exprs``); only the cheap filter/withColumn/select
-        application happens per call.
+        Nine small per-type projections, not one CASE over page_type:
+        a single projection over all nine handlers compiled to one giant
+        janino class (~35s one-time compile, too wide for whole-stage
+        codegen); the small ones compile in ~2s each and run codegen'd.
+        Each branch re-scans the rows input with a pushable page_type
+        filter — at warehouse scale the rows stage table is partitioned
+        by page_type, so the 9 scans prune to 1 full pass.
         """
-        sc = rows.sparkSession.sparkContext
-        key = (sc.applicationId, type(self).__qualname__, page_type)
-        cached = _BRANCH_EXPR_CACHE.get(key)
-        if cached is None:
-            # build OUTSIDE the lock (py4j-heavy, parallelizes across
-            # the branch thread pool); mutate under it
-            cached = self._branch_exprs(page_type)
-            with _BRANCH_EXPR_LOCK:
-                # drop entries from previous (stopped) applications:
-                # their py4j column handles point into a dead JVM
-                stale = [
-                    k for k in list(_BRANCH_EXPR_CACHE)
-                    if k[0] != sc.applicationId
-                ]
-                for k in stale:
-                    _BRANCH_EXPR_CACHE.pop(k, None)
-                _BRANCH_EXPR_CACHE[key] = cached
-        pre, req = cached
-        b = rows.where(F.col("page_type") == page_type)
-        for name, col in pre:
-            b = b.withColumn(name, col)
+        pre, req = self._branch_exprs(page_type)
+        b = rows.where(f"page_type = {_q(page_type)}")
+        for name, expr in pre:
+            b = b.selectExpr("*", f"{expr} AS {name}")
         # explode_outer + isNotNull instead of a bare explode: the
         # non-outer Generate plants an implicit `size(reqs)>0` filter
         # that the optimizer pushes BELOW the request projection by
@@ -601,13 +455,10 @@ class Assembler:
         # (never NULL), and for a NULL/empty array both forms drop the
         # row (outer emits r=NULL which the filter removes).
         return (
-            b.withColumn("reqs", req)
-            .select(
-                "url", "page_no", "footer_tags",
-                F.explode_outer("reqs").alias("r"),
-            )
-            .where(F.col("r").isNotNull())
-            .select("url", "page_no", "footer_tags", "r.*")
+            b.selectExpr("*", f"{req} AS reqs")
+            .selectExpr("url", "page_no", "footer_tags", "explode_outer(reqs) AS r")
+            .where("r IS NOT NULL")
+            .selectExpr("url", "page_no", "footer_tags", "r.*")
         )
 
     HANDLED_PAGE_TYPES = (
@@ -628,18 +479,10 @@ class Assembler:
         """The typed-request stage table: union of the 9 per-page-type
         branches. At warehouse scale this is a real intermediate table
         (write it, then run ``finish`` as a separate restartable job)."""
-        from concurrent.futures import ThreadPoolExecutor
-
         rows = rows.select(
             "url", "page_no", "page_type", "footer_tags", "row_idx", "cols", "loc_repr"
         )
-        # branch construction is pure plan building (no jobs); the cost
-        # is py4j round-trip latency, which parallelizes across threads
-        # (measured 5.4s -> 3.0s at 9 branches)
-        with ThreadPoolExecutor(len(self.HANDLED_PAGE_TYPES)) as pool:
-            parts = list(
-                pool.map(lambda pt: self._branch(rows, pt), self.HANDLED_PAGE_TYPES)
-            )
+        parts = [self._branch(rows, pt) for pt in self.HANDLED_PAGE_TYPES]
         reqs = parts[0]
         for p in parts[1:]:
             reqs = reqs.unionByName(p)

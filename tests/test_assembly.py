@@ -142,3 +142,101 @@ def test_invalid_tag_path_parity(spark):
     g_x = {(r.guid, r.tag, r.target_type) for r in tables["xtargets"].collect()}
     e_x = {(x["guid"], x["tag"], x["target_type"]) for x in oracle.xtargets.values()}
     assert g_x == e_x
+
+
+def test_cold_request_build_py4j_round_trips(spark, monkeypatch):
+    """The nine request branches are SQL text built in Python; only the
+    selectExpr/where applications cross to the JVM, so a cold
+    requests_table build (fresh Assembler subclass, nothing warmed)
+    stays within 2,000 py4j round trips."""
+    from py4j.java_gateway import GatewayClient
+
+    class FreshAssembler(asm_op.Assembler):
+        pass
+
+    rows = ex.rows_table(ex.extract(corpus_df(spark, 8, partitions=2), num_partitions=2))
+    assembler = FreshAssembler()
+    calls = 0
+    original = GatewayClient.send_command
+
+    def counting(client, *args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return original(client, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    assembler.requests_table(rows)
+    monkeypatch.undo()
+    assert 0 < calls <= 2000
+
+
+def test_quoting_hostile_attributes_match_oracle(spark):
+    """Attribute keys and values holding SQL/JSON metacharacters ('
+    \\ ` newline) and non-ASCII text pass through the request layer as
+    data: device_tag_list, topology and terminal_diagram rows must give
+    the oracle's entity sets."""
+    from indu_doc_transformer_spark.config import DEFAULT_ASPECTS
+    from indu_doc_transformer_spark.kernels.assemble import Assembly
+    from indu_doc_transformer_spark.kernels.layout import (
+        _COMPLETE_COLUMNS, _complete_cell, _completed_key,
+    )
+    from indu_doc_transformer_spark.kernels.tagparse import footer_parts
+
+    hostile = ["it's", "back\\slash", "tick`tock", "line\nbreak", "Grüße ✓ 日本", "') OR ('1"]
+
+    def attrs(prefix=""):
+        return {prefix + k: f"  {v}{i}  " for i, (k, v) in
+                enumerate(zip(hostile, reversed(hostile)))}
+
+    footer = ["=F1", "+L1"]
+    pages = [
+        ("device_tag_list", [{"tag": "-K1", **attrs()}, {"tag": "-K'2", "x": "ü\\'"},
+                             {"tag": "", **attrs()}]),
+        ("topology", [{"designation": "-W1", "src_tags": "-M1;-M2", "dst_tags": "-K1",
+                       "route": "R`2;R'1;Ω3", **attrs()}]),
+        ("terminal_diagram", [{
+            "_1cable_tag": "-W2", "_1src_tag": "-X1", "_1src_pin": "1", "_1dst_tag": "-K1",
+            "_1dst_pin": "A'1", "_2cable_tag": "-W3", "_2src_tag": "-X2", "_2src_pin": "2",
+            "_2dst_tag": "-K2", "_2dst_pin": "Ä2", **attrs("_1"), "shared`key": "v\\\n'",
+        }]),
+    ]
+    fparts = footer_parts(footer, DEFAULT_ASPECTS)
+    data, oracle = [], Assembly()
+    for page_no, (page_type, rows) in enumerate(pages, start=1):
+        for idx, cols in enumerate(rows):
+            for cc in _COMPLETE_COLUMNS[page_type]:
+                if cc in cols:
+                    cols[_completed_key(cc)] = _complete_cell(
+                        cols[cc], fparts, DEFAULT_ASPECTS, {}
+                    )
+            loc_repr = repr((1.0, 2.0, float(idx), 4.0)) if idx % 2 == 0 else None
+            row = {"row_idx": idx, "cols": cols, "loc_repr": loc_repr}
+            data.append(("doc'1", page_no, page_type, footer, idx, cols, loc_repr))
+            oracle.process_row("doc'1", page_no, page_type, footer, row)
+    rows = spark.createDataFrame(
+        data,
+        "url string, page_no int, page_type string, footer_tags array<string>, "
+        "row_idx int, cols map<string,string>, loc_repr string",
+    )
+    got = {k: v.collect() for k, v in asm_op.assemble(rows).items()}
+
+    g = {(r.guid, r.name, r.type, r.value_json) for r in got["attributes"]}
+    e = {(a["guid"], a["name"], a["type"], a["value_json"]) for a in oracle.attributes.values()}
+    assert g == e
+    assert {"SIMPLE", "ROUTING_TRACKS", "PDF_LOCATION"} <= {a[2] for a in g}
+    assert set(hostile) <= {a[1] for a in g}
+    assert {(r.object_guid, r.attribute_guid) for r in got["object_attributes"]} == (
+        oracle.object_attrs
+    )
+    assert {(r.guid, r.tag, r.target_type) for r in got["xtargets"]} == {
+        (x["guid"], x["tag"], x["target_type"]) for x in oracle.xtargets.values()
+    }
+    assert {(r.guid, r.name, r.connection_guid, r.src_pin_name, r.dest_pin_name)
+            for r in got["links"]} == {
+        (l["guid"], l["name"], l["connection_guid"], l["src_pin_name"], l["dest_pin_name"])
+        for l in oracle.links.values()
+    }
+    assert {(r.url, r.page_no, r.object_guid, r.object_type) for r in got["lineage"]} == (
+        oracle.lineage
+    )
+    assert sorted(tuple(r) for r in got["errors"]) == sorted(oracle.errors)
