@@ -24,7 +24,8 @@ from pyspark.sql.functions import broadcast
 
 
 def _distinct_grams(text, n: int):
-    """Distinct whitespace-token n-grams of a text column, md5-hashed."""
+    """Distinct whitespace-token n-grams of a text column, md5-hashed:
+    the SQL reference of ``_distinct_grams_udf``."""
     toks = F.split(F.lower(F.trim(text)), r"\s+")
     grams = F.when(
         F.size(toks) >= n,
@@ -37,43 +38,30 @@ def _distinct_grams(text, n: int):
 
 
 def _distinct_grams_udf(n: int):
-    """Arrow-batched kernel form of ``_distinct_grams`` — bit-identical
-    semantics (the textstats fast/SQL-parity pattern; pinned by
+    """Arrow-batched kernel form of ``_distinct_grams``, which stays as
+    its SQL reference (pinned by
     tests/test_operators.py::test_decontam_gram_kernel_matches_sql):
-
-    - Spark ``trim`` strips ASCII spaces only -> ``str.strip(' ')``;
-    - java-regex ``\\s+`` == python ``re.ASCII`` ``\\s+`` (same 6-char
-      class), leading/trailing empty tokens kept on both engines;
-    - NULL text -> size(NULL)=NULL -> empty gram array;
-    - ``array_distinct`` keeps first occurrence -> ``dict.fromkeys``;
-    - md5 over UTF-8 bytes on both sides.
+    the split contract of ``kernels.tokens``, NULL text -> no grams
+    (size(NULL) is NULL), ``array_distinct`` keeps the first occurrence
+    -> ``dict.fromkeys``, md5 over UTF-8 bytes on both sides.
 
     Motivation (guide §4.2): the SQL form is an interpreted
     higher-order md5 fold — measured 28.8s single-task for the sf1.0
     training side where the kernel form does the same work in ~2s of
-    total CPU. The SQL form stays as the parity oracle (fast=False)."""
+    total CPU."""
     import hashlib
-    import re
 
-    from pyspark.sql.types import ArrayType, StringType
+    from ..kernels.tokens import ngrams, split_tokens
 
-    ws = re.compile(r"\s+", re.ASCII)
-
-    @F.pandas_udf(ArrayType(StringType()))
+    @F.pandas_udf("array<string>")
     def kernel(texts: pd.Series) -> pd.Series:
+        md5 = hashlib.md5
         out = []
         for t in texts:
             if t is None:
                 out.append([])
                 continue
-            toks = ws.split(t.strip(" ").lower())
-            if len(toks) < n:
-                out.append([])
-                continue
-            md5 = hashlib.md5
-            grams = dict.fromkeys(
-                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-            )
+            grams = dict.fromkeys(ngrams(split_tokens(t), n))
             out.append([md5(g.encode()).hexdigest() for g in grams])
         return pd.Series(out)
 
@@ -88,7 +76,6 @@ def ngram_contamination(
     n: int = 8,
     max_frac: float = 0.2,
     broadcast_max_bench_bytes: int = 512 << 20,
-    fast: bool = True,
 ) -> DataFrame:
     """Per training document: the fraction of its distinct n-grams that
     appear anywhere in the benchmark set, plus the keep decision.
@@ -119,14 +106,8 @@ def ngram_contamination(
     # ONE pass over the training side: the gram construction (the
     # dominant per-row cost) is evaluated once; explode_outer keeps
     # zero-gram docs; the broadcast LEFT join marks benchmark hits
-    # without dropping clean grams. fast=True routes gram hashing
-    # through the Arrow kernel (default; the interpreted higher-order
-    # md5 fold stays as the fast=False parity oracle — the
-    # test_gram_stats_fast_matches_sql pattern).
-    grams_of = (
-        (lambda c: _distinct_grams_udf(n)(c)) if fast
-        else (lambda c: _distinct_grams(c, n))
-    )
+    # without dropping clean grams.
+    grams_of = _distinct_grams_udf(n)
     exploded = train.select(
         F.col(id_col).alias("id"), grams_of(F.col(text_col)).alias("grams")
     ).select(
@@ -135,11 +116,9 @@ def ngram_contamination(
         F.explode_outer("grams").alias("gram"),
     )
     # explode_outer + isNotNull (guide §4.4, the repo-wide rule): a
-    # bare explode's pushed size()>0 filter re-runs the gram
-    # construction once more per bench row on the fast=False parity
-    # path (the kernel path is barrier-protected but gets the same
-    # shape for uniformity). Gram hashes are md5 hex strings, never
-    # NULL; NULL/empty arrays drop in both forms.
+    # bare explode's pushed size()>0 filter would re-evaluate the gram
+    # construction. Gram hashes are md5 hex strings, never NULL;
+    # NULL/empty arrays drop in both forms.
     bg = (
         bench.select(F.explode_outer(grams_of(F.col(text_col))).alias("gram"))
         .where(F.col("gram").isNotNull())

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.cache import register_cache
-from .textstats import norm_text
+from .textstats import _tokens, norm_text
 
 
 def word_shingles(c: Column, k: int = 3) -> Column:
@@ -79,22 +79,13 @@ def jaccard(a: Column, b: Column) -> Column:
 
 def _shingle_sig_udf(num_hashes: int, k: int):
     """Arrow-batched kernel computing (shingles, minhash signature) —
-    bit-identical to the SQL builders above (same normalization, same
-    md5-hex lexicographic mins) but ~10x faster than interpreted
-    higher-order expressions. Parity is pinned by
-    tests/test_operators.py::test_minhash_fast_matches_sql."""
+    bit-identical to the SQL builders above (the collapse contract of
+    ``kernels.tokens``, same md5-hex lexicographic mins) but ~10x
+    faster than interpreted higher-order expressions. Parity is pinned
+    by tests/test_operators.py::test_minhash_fast_matches_sql."""
     import hashlib
-    import re
 
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-    ws = re.compile(r"\s+", re.ASCII)
-    schema = StructType(
-        [
-            StructField("sh", ArrayType(StringType())),
-            StructField("sig", ArrayType(StringType())),
-        ]
-    )
+    from ..kernels.tokens import collapse_tokens, ngrams
 
     # seed-prefix digests are hashed once per batch and copy()d per
     # shingle, and each shingle is encoded once, not once per seed —
@@ -105,15 +96,19 @@ def _shingle_sig_udf(num_hashes: int, k: int):
     # plain bytes; hashlib objects are not picklable.
     prefixes = [f"{seed}:".encode() for seed in range(1, num_hashes + 1)]
 
-    @F.pandas_udf(schema)
+    @F.pandas_udf("struct<sh:array<string>,sig:array<string>>")
     def kernel(texts: pd.Series) -> pd.DataFrame:
         seed_bases = [hashlib.md5(p) for p in prefixes]
         shs, sigs = [], []
         for t in texts:
-            norm = ws.sub(" ", t or "").strip().lower()
-            toks = norm.split(" ")
-            n = max(len(toks) - (k - 1), 1)
-            sh = list(dict.fromkeys(" ".join(toks[i : i + k]) for i in range(n)))
+            if t is None:  # SQL: one NULL shingle, NULL array_min per seed
+                shs.append([None])
+                sigs.append([None] * num_hashes)
+                continue
+            # fewer than k tokens: one shingle of all of them, as SQL's
+            # sequence(1, greatest(size - (k - 1), 1))
+            toks = collapse_tokens(t)
+            sh = list(dict.fromkeys(ngrams(toks, min(k, len(toks)))))
             sbytes = [s.encode() for s in sh]
             sig = []
             for base in seed_bases:
@@ -266,23 +261,22 @@ def simhash64(c: Column) -> Column:
 
 def _simhash_udf():
     """Arrow-batched SimHash-64 kernel, bit-identical to the
-    ``simhash64`` SQL formulation (same normalization, distinct
-    whitespace tokens, md5-nibble votes) but ~10-100x faster than the
-    interpreted higher-order expression. Parity pinned by
-    tests/test_operators.py::test_simhash_fast_matches_sql."""
+    ``simhash64`` SQL formulation (the collapse contract of
+    ``kernels.tokens``, distinct tokens, md5-nibble votes) but
+    ~10-100x faster than the interpreted higher-order expression.
+    Parity pinned by tests/test_operators.py::test_simhash_fast_matches_sql."""
     import hashlib
-    import re
 
-    from pyspark.sql.types import StringType
+    from ..kernels.tokens import collapse_tokens
 
-    ws = re.compile(r"\s+", re.ASCII)
-
-    @F.pandas_udf(StringType())
+    @F.pandas_udf("string")
     def kernel(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            norm = ws.sub(" ", t or "").strip().lower()
-            toks = list(dict.fromkeys(norm.split(" ")))
+            if t is None:  # SQL: every bit's vote sum is NULL -> 0
+                out.append("0" * 16)
+                continue
+            toks = dict.fromkeys(collapse_tokens(t))
             votes = [0] * 64
             for tok in toks:
                 h = hashlib.md5(tok.encode()).hexdigest()
@@ -899,33 +893,33 @@ def line_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _span_windows(toks: Column, k: int) -> Column:
+    """SQL reference of ``_span_windows_udf``: (start, md5) of every
+    k-token window of a ``_tokens`` array, ``start`` 1-based; empty
+    when there are fewer than k tokens."""
+    return F.when(
+        F.size(toks) >= k,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (k - 1)),
+            lambda i: F.struct(
+                i.alias("start"),
+                F.md5(F.array_join(F.slice(toks, i, k), " ")).alias("h"),
+            ),
+        ),
+    ).otherwise(F.expr("cast(array() as array<struct<start:int,h:string>>)"))
+
+
 def _span_windows_udf(k: int):
     """Arrow-batched kernel for the k-token window hashes of
-    ``duplicate_span_removal`` — bit-identical to the SQL fold below
-    (same tokenization contract as decontam._distinct_grams_udf:
-    ASCII-space trim, java-\\s+ split with kept empties, NULL -> empty,
-    md5 over UTF-8; positions 1-based like the SQL sequence). The SQL
-    form stays as the fast=False parity oracle
-    (tests/test_operators.py::test_span_window_kernel_matches_sql)."""
+    ``duplicate_span_removal`` — bit-identical to ``_span_windows``
+    (the split contract of ``kernels.tokens``, NULL -> empty, md5 over
+    UTF-8), pinned by
+    tests/test_operators.py::test_span_window_kernel_matches_sql."""
     import hashlib
-    import re
 
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from ..kernels.tokens import ngrams, split_tokens
 
-    ws = re.compile(r"\s+", re.ASCII)
-    schema = ArrayType(
-        StructType(
-            [StructField("start", IntegerType()), StructField("h", StringType())]
-        )
-    )
-
-    @F.pandas_udf(schema)
+    @F.pandas_udf("array<struct<start:int,h:string>>")
     def kernel(texts: pd.Series) -> pd.Series:
         md5 = hashlib.md5
         out = []
@@ -933,14 +927,10 @@ def _span_windows_udf(k: int):
             if t is None:
                 out.append([])
                 continue
-            toks = ws.split(t.strip(" ").lower())
-            if len(toks) < k:
-                out.append([])
-                continue
             out.append(
                 [
-                    (i + 1, md5(" ".join(toks[i : i + k]).encode()).hexdigest())
-                    for i in range(len(toks) - k + 1)
+                    (i, md5(g.encode()).hexdigest())
+                    for i, g in enumerate(ngrams(split_tokens(t), k), 1)
                 ]
             )
         return pd.Series(out)
@@ -949,7 +939,7 @@ def _span_windows_udf(k: int):
 
 
 def duplicate_span_removal(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8, fast: bool = True
+    df: DataFrame, id_col: str, text_col: str, k: int = 8
 ) -> DataFrame:
     """ExactSubstr-style duplicated-span removal (the Lee et al.
     "Deduplicating Training Data Makes Language Models Better"
@@ -968,32 +958,15 @@ def duplicate_span_removal(
     over the hot hash); flagged starts join back id-keyed; the
     coverage filter is a native higher-order exists per token. Two
     shuffles: hash agg + id-keyed rebuild."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    base = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
-    # fast=True hashes the k-token windows in the Arrow kernel (the
-    # decontam gram-kernel pattern); fast=False keeps the interpreted
-    # SQL fold as the parity oracle. Either way the explode is
+    base = df.select(F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("toks"))
+    # the k-token windows are hashed in the Arrow kernel; the explode is
     # explode_outer + isNotNull (guide §4.4): a bare explode's pushed
-    # size()>0 filter would re-run the whole window construction per
-    # row. Window elements are constructed structs (never NULL);
-    # short docs' empty arrays drop identically in both forms.
-    if fast:
-        win_arr = _span_windows_udf(k)(F.col(text_col))
-        wins_src = df.select(F.col(id_col).alias("id"), win_arr.alias("wa"))
-    else:
-        win_arr = F.when(
-            F.size("toks") >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - (k - 1)),
-                lambda i: F.struct(
-                    i.alias("start"),
-                    F.md5(F.array_join(F.slice("toks", i, k), " ")).alias("h"),
-                ),
-            ),
-        ).otherwise(
-            F.expr("cast(array() as array<struct<start:int,h:string>>)")
-        )
-        wins_src = base.select("id", win_arr.alias("wa"))
+    # size()>0 filter would re-run the window construction per row.
+    # Window elements are constructed structs (never NULL); short docs'
+    # empty arrays drop in both forms.
+    wins_src = df.select(
+        F.col(id_col).alias("id"), _span_windows_udf(k)(F.col(text_col)).alias("wa")
+    )
     wins = (
         wins_src.select("id", F.explode_outer("wa").alias("w"))
         .where(F.col("w").isNotNull())

@@ -8,13 +8,15 @@ ANSI/DuckDB SQL so the driver's oracle can verify them value-for-value
 to 6 decimals on both sides.
 
 Exception, deliberately: the two per-document n-gram statistics
-(top_ngram_stats / dup_ngram_char_stats) default to an Arrow-batched
-kernel — the SQL form explodes O(tokens x |ns|) gram rows through two
-shuffles and interpreted higher-order gram construction for what is a
-per-row statistic (measured 22.6s + 46.4s for 10k docs at sf0.1 vs
-~2s for the kernel). The kernel emits exact integers; division and
-rounding stay in SQL, and the SQL form remains available (fast=False)
-as the parity oracle.
+(top_ngram_stats / dup_ngram_char_stats) run an Arrow-batched kernel —
+the SQL form explodes O(tokens x |ns|) gram rows through two shuffles
+and interpreted higher-order gram construction for what is a per-row
+statistic (measured 22.6s + 46.4s for 10k docs at sf0.1 vs ~2s for
+the kernel). The kernel emits exact integers; division and rounding
+stay in SQL. The SQL forms stay as private reference functions
+(``_top_ngram_stats_sql`` / ``_dup_ngram_char_stats_sql``): the DuckDB
+oracles mirror them and the parity test compares the kernel path
+against them.
 """
 
 from __future__ import annotations
@@ -37,7 +39,8 @@ _PUNCT_RE = r"[^A-Za-z0-9\s]"
 
 def norm_text(c: Column) -> Column:
     """normalize_string analog (common_utils.py:12-24): lower, trim,
-    collapse whitespace."""
+    collapse whitespace. ``split(norm_text(c), ' ')`` is the SQL twin of
+    the collapse contract (``kernels.tokens.collapse_tokens``)."""
     return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
 
 
@@ -60,6 +63,7 @@ def punct_ratio(c: Column) -> Column:
 
 
 def _tokens(c: Column) -> Column:
+    """SQL twin of the split contract (``kernels.tokens.split_tokens``)."""
     return F.split(F.lower(F.trim(c)), r"\s+")
 
 
@@ -216,13 +220,12 @@ def _gram_stats_table(df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tup
     pushed through the projection by Catalyst, duplicating the kernel
     evaluation per consumer (the distinct_tags lesson) — a map
     OPERATOR is evaluated exactly once, with the filter above it.
-    Tokenization mirrors _tokens exactly: Spark trim strips 0x20 only,
-    Java \\s is ASCII (re.ASCII), a leading separator yields a leading
-    empty token."""
-    import re
+    Tokenization is the split contract of ``kernels.tokens`` (the twin
+    of ``_tokens``); NULL text tokenizes as '' (ntok 1), which the
+    callers' ntok filters drop for any n >= 2, as size(NULL) does in SQL."""
     from typing import Iterator
 
-    ws = re.compile(r"\s+", re.ASCII)
+    from ..kernels.tokens import ngrams, split_tokens
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from collections import Counter
@@ -230,30 +233,16 @@ def _gram_stats_table(df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tup
         for pdf in batches:
             ntoks, chars, tops, dups = [], [], [], []
             for t in pdf["_t"]:
-                toks = ws.split((t or "").strip(" ").lower())
-                n_tok = len(toks)
-                ntoks.append(n_tok)
+                toks = split_tokens(t or "")
+                ntoks.append(len(toks))
                 chars.append(len(" ".join(toks)))
-                top_row, dup_row = [], []
-                for n in ns_top:
-                    if n_tok >= n:
-                        c = Counter(
-                            " ".join(toks[i : i + n]) for i in range(n_tok - n + 1)
-                        )
-                        top_row.append(max(c.values()))
-                    else:
-                        top_row.append(0)
+                tops.append(
+                    [max(Counter(ngrams(toks, n)).values(), default=0) for n in ns_top]
+                )
+                dup_row = []
                 for n in ns_dup:
-                    if n_tok >= n:
-                        c = Counter(
-                            " ".join(toks[i : i + n]) for i in range(n_tok - n + 1)
-                        )
-                        dup_row.append(
-                            sum(cnt * len(g) for g, cnt in c.items() if cnt > 1)
-                        )
-                    else:
-                        dup_row.append(0)
-                tops.append(top_row)
+                    c = Counter(ngrams(toks, n))
+                    dup_row.append(sum(cnt * len(g) for g, cnt in c.items() if cnt > 1))
                 dups.append(dup_row)
             yield pd.DataFrame(
                 {
@@ -274,37 +263,37 @@ def _gram_stats_table(df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tup
     )
 
 
-def top_ngram_stats(
-    df, id_col: str, text_col: str, ns: tuple = (2, 3, 4), fast: bool = True
-):
+def top_ngram_stats(df, id_col: str, text_col: str, ns: tuple = (2, 3, 4)):
     """Gopher repetition rules generalized: the top n-gram fraction for
-    each n in ``ns`` per document.
-
-    ``fast`` (default) runs the Arrow gram-stats kernel — a map-only
-    pass, ZERO shuffles (the statistic is per-document; see
-    _gram_stats_udf for the measured 10x). ``fast=False`` keeps the
-    pure-SQL form (one explode of (n, gram) structs + two shuffles),
-    which doubles as the parity oracle for the kernel and as the
-    engine-portable reference the DuckDB oracle mirrors."""
-    if fast:
-        k = _gram_stats_table(df, id_col, text_col, tuple(ns), ()).where(
-            F.col("ntok") >= 2
-        )
-        cols = [
-            F.round(
-                F.coalesce(
-                    F.when(
-                        F.col("ntok") >= n,
-                        F.element_at(F.col("top"), i + 1)
-                        / (F.col("ntok") - (n - 1)).cast("double"),
-                    ),
-                    F.lit(0.0),
+    each n in ``ns`` per document, from the Arrow gram-stats kernel —
+    a map-only pass, ZERO shuffles (the statistic is per-document; see
+    ``_gram_stats_table`` for the measured 10x). ``_top_ngram_stats_sql``
+    is its SQL reference."""
+    k = _gram_stats_table(df, id_col, text_col, tuple(ns), ()).where(
+        F.col("ntok") >= 2
+    )
+    cols = [
+        F.round(
+            F.coalesce(
+                F.when(
+                    F.col("ntok") >= n,
+                    F.element_at(F.col("top"), i + 1)
+                    / (F.col("ntok") - (n - 1)).cast("double"),
                 ),
-                6,
-            ).alias(f"top{n}_frac")
-            for i, n in enumerate(ns)
-        ]
-        return k.select("id", *cols)
+                F.lit(0.0),
+            ),
+            6,
+        ).alias(f"top{n}_frac")
+        for i, n in enumerate(ns)
+    ]
+    return k.select("id", *cols)
+
+
+def _top_ngram_stats_sql(df, id_col: str, text_col: str, ns: tuple = (2, 3, 4)):
+    """SQL reference of ``top_ngram_stats`` (one explode of (n, gram)
+    structs + two shuffles): the engine-portable form the DuckDB
+    oracles mirror and the parity test compares the kernel path
+    against."""
     toks = _tokens(F.col(text_col))
     n_tok = F.size(toks)
     all_g = _gram_structs(toks, ns)
@@ -346,7 +335,7 @@ def repetition_keep(
 
 
 def dup_ngram_char_stats(
-    df, id_col: str, text_col: str, ns: tuple = (5, 6, 7, 8, 9, 10), fast: bool = True
+    df, id_col: str, text_col: str, ns: tuple = (5, 6, 7, 8, 9, 10)
 ):
     """The other half of Gopher's repetition table: for each n in
     ``ns``, the fraction of (normalized) characters covered by n-grams
@@ -354,33 +343,39 @@ def dup_ngram_char_stats(
     grams, capped at 1.0 (overlapping grams overcount, same as the
     published implementations).
 
-    ``fast`` (default) = the zero-shuffle Arrow gram-stats kernel
-    (integer char masses per doc; division/cap/round in SQL — see
-    _gram_stats_udf). ``fast=False`` = the pure-SQL form (ONE explode
-    + two shuffles for all six n's), kept as the kernel's parity
-    oracle and the DuckDB-mirrorable reference."""
-    if fast:
-        k = _gram_stats_table(df, id_col, text_col, (), tuple(ns)).where(
-            F.col("ntok") >= min(ns)
-        )
-        cols = [
-            F.round(
-                F.coalesce(
-                    F.when(
-                        F.col("ntok") >= n,
-                        F.least(
-                            F.lit(1.0),
-                            F.element_at(F.col("dup"), i + 1)
-                            / F.col("chars").cast("double"),
-                        ),
+    Runs the zero-shuffle Arrow gram-stats kernel (integer char masses
+    per doc; division/cap/round in SQL — see ``_gram_stats_table``).
+    ``_dup_ngram_char_stats_sql`` is its SQL reference."""
+    k = _gram_stats_table(df, id_col, text_col, (), tuple(ns)).where(
+        F.col("ntok") >= min(ns)
+    )
+    cols = [
+        F.round(
+            F.coalesce(
+                F.when(
+                    F.col("ntok") >= n,
+                    F.least(
+                        F.lit(1.0),
+                        F.element_at(F.col("dup"), i + 1)
+                        / F.col("chars").cast("double"),
                     ),
-                    F.lit(0.0),
                 ),
-                6,
-            ).alias(f"dup{n}_frac")
-            for i, n in enumerate(ns)
-        ]
-        return k.select("id", *cols)
+                F.lit(0.0),
+            ),
+            6,
+        ).alias(f"dup{n}_frac")
+        for i, n in enumerate(ns)
+    ]
+    return k.select("id", *cols)
+
+
+def _dup_ngram_char_stats_sql(
+    df, id_col: str, text_col: str, ns: tuple = (5, 6, 7, 8, 9, 10)
+):
+    """SQL reference of ``dup_ngram_char_stats`` (ONE explode + two
+    shuffles for all six n's): the engine-portable form the DuckDB
+    oracles mirror and the parity test compares the kernel path
+    against."""
     toks = _tokens(F.col(text_col))
     n_tok = F.size(toks)
     char_len = F.length(F.array_join(toks, " ")).cast("long")

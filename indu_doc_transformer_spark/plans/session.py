@@ -18,6 +18,11 @@ from pyspark.sql import SparkSession
 # so production configs should drop this to ~256.
 ARROW_BATCH = 2048
 
+# Spark lower()/upper() on non-ASCII text follow the JVM default locale
+# (under tr_TR, 'I' lowers to dotless 'ı'); the Python kernels' str.lower
+# and the DuckDB oracles are locale-free, so the locale is pinned.
+JVM_LOCALE = "-Duser.language=en -Duser.country=US"
+
 
 def get_spark(
     master: str | None = None,
@@ -66,6 +71,8 @@ def get_spark(
         # deployments size executors separately (guide §5).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.extraJavaOptions", JVM_LOCALE)
+        .config("spark.executor.extraJavaOptions", JVM_LOCALE)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

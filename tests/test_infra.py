@@ -110,6 +110,38 @@ def test_package_zip_importable(tmp_path):
     subprocess.run([sys.executable, "-c", code], check=True, cwd=str(tmp_path))
 
 
+def test_spark_lower_ignores_jvm_locale(tmp_path):
+    """get_spark pins the JVM locale: with a Turkish default locale,
+    Spark lower() still equals Python's str.lower (what the Arrow text
+    kernels use) on dotted/dotless I, final sigma and ß. A fresh
+    subprocess, because the JVM reads its locale once, at start-up."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    text = "TİTLE II ΣΑΣ Straße"
+    script = (
+        "from indu_doc_transformer_spark.plans.session import get_spark\n"
+        "s = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        f"print(ascii(s.sql(\"select lower('{text}') l\").first().l))\n"
+        "s.stop()\n"
+    )
+    repo = str(pathlib.Path(__file__).resolve().parents[1])
+    env = dict(
+        os.environ,
+        JAVA_TOOL_OPTIONS="-Duser.language=tr -Duser.country=TR",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]),
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300, cwd=str(tmp_path), env=env,
+    )
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert r.stdout.strip().splitlines()[-1] == ascii(text.lower())
+
+
 def test_iceberg_branch_smoke(monkeypatch):
     """The production Iceberg code path (never executable in this
     sandbox — no runtime jar) must not rot: with USE_ICEBERG patched

@@ -9,12 +9,19 @@ from pyspark.sql import functions as F
 from indu_doc_transformer_spark.operators import dedup as dd
 from indu_doc_transformer_spark.operators import multimodal as mm
 from indu_doc_transformer_spark.operators import similarity as sim
+from token_cases import TOKEN_CASES
 
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
     "from the warm windowsill and the birds sing in the garden"
 )
+
+
+def with_shared_cases(spark, df):
+    """``df`` plus the shared adversarial tokenization rows (ids 100+)."""
+    rows = [(100 + i, text) for i, (text, _, _) in enumerate(TOKEN_CASES)]
+    return df.unionByName(spark.createDataFrame(rows, df.schema))
 
 
 @pytest.fixture(scope="module")
@@ -63,18 +70,18 @@ def test_minhash_lsh_finds_planted_neardup(docs):
 
 def test_simhash_fast_matches_sql(spark, docs):
     """The Arrow SimHash kernel must be bit-identical to the SQL
-    formulation (the DuckDB oracle checks the SQL one)."""
-    from pyspark.sql import functions as F
-
+    formulation (the DuckDB oracle checks the SQL one), also on the
+    shared adversarial tokenization cases."""
+    df = with_shared_cases(spark, docs)
     sql_side = {
         r.doc_id: r.s
-        for r in docs.select("doc_id", dd.simhash64(F.col("text")).alias("s")).collect()
+        for r in df.select("doc_id", dd.simhash64(F.col("text")).alias("s")).collect()
     }
-    fast = {
+    kernel = {
         r.doc_id: r.s
-        for r in docs.select("doc_id", dd._simhash_udf()(F.col("text")).alias("s")).collect()
+        for r in df.select("doc_id", dd._simhash_udf()(F.col("text")).alias("s")).collect()
     }
-    assert sql_side == fast and len(fast) == 5
+    assert sql_side == kernel and len(kernel) == 5 + len(TOKEN_CASES)
 
 
 def test_simhash_neardup_pairs(spark, docs):
@@ -93,17 +100,17 @@ def test_simhash_neardup_pairs(spark, docs):
 
 def test_minhash_fast_matches_sql(spark, docs):
     """The Arrow kernel must be bit-identical to the SQL formulation
-    (the DuckDB oracle checks the SQL one)."""
-    from pyspark.sql import functions as F
-
-    sql_side = docs.select(
+    (the DuckDB oracle checks the SQL one), also on the shared
+    adversarial tokenization cases."""
+    df = with_shared_cases(spark, docs)
+    sql_side = df.select(
         "doc_id",
         dd.word_shingles(F.col("text"), 3).alias("sh"),
     ).withColumn("sig", dd.minhash_signature(F.col("sh"), 16))
-    fast = docs.select("doc_id", dd._shingle_sig_udf(16, 3)(F.col("text")).alias("ss"))
+    kernel = df.select("doc_id", dd._shingle_sig_udf(16, 3)(F.col("text")).alias("ss"))
     a = {r.doc_id: (list(r.sh), list(r.sig)) for r in sql_side.collect()}
-    b = {r.doc_id: (list(r.ss.sh), list(r.ss.sig)) for r in fast.collect()}
-    assert a == b
+    b = {r.doc_id: (list(r.ss.sh), list(r.ss.sig)) for r in kernel.collect()}
+    assert a == b and len(b) == 5 + len(TOKEN_CASES)
 
 
 def test_simhash_identical_docs_equal(docs):
@@ -167,10 +174,11 @@ def test_ann_bruteforce_norm_precompute_parity(spark):
 
 
 def test_decontam_gram_kernel_matches_sql(spark):
-    """fast=True (Arrow gram kernel) must reproduce the fast=False
-    interpreted-SQL form exactly — including NULL text, empty text,
-    whitespace-only text, leading/trailing separators, tabs/newlines,
-    non-ASCII, and docs shorter than n."""
+    """The Arrow gram kernel must reproduce its interpreted-SQL
+    reference ``_distinct_grams`` exactly (order + values) — including
+    NULL text, empty text, whitespace-only text, leading/trailing
+    separators, tabs/newlines, non-ASCII, docs shorter than n, and the
+    shared adversarial tokenization cases."""
     from indu_doc_transformer_spark.operators import decontam as dc
 
     rows = [
@@ -185,34 +193,25 @@ def test_decontam_gram_kernel_matches_sql(spark):
         (8, "a b c d a b c d a b c d"),
         (9, "x" * 50 + " y z w v u t s"),
     ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    train = df.where(F.col("doc_id") % 2 == 0)
-    bench = df.where(F.col("doc_id") % 2 == 1)
-    for n in (2, 4):
-        a = {
-            tuple(r)
-            for r in dc.ngram_contamination(
-                train, bench, "doc_id", "text", n=n, fast=True
-            ).collect()
-        }
-        b = {
-            tuple(r)
-            for r in dc.ngram_contamination(
-                train, bench, "doc_id", "text", n=n, fast=False
-            ).collect()
-        }
-        assert a == b
-    # gram arrays themselves bit-identical (order + values)
-    k = dc._distinct_grams_udf(3)(F.col("text"))
-    s = dc._distinct_grams(F.col("text"), 3)
-    pairs = df.select(k.alias("a"), s.alias("b")).collect()
-    assert all(list(r.a) == list(r.b) for r in pairs)
+    df = with_shared_cases(
+        spark, spark.createDataFrame(rows, "doc_id bigint, text string")
+    )
+    for n in (2, 3, 4):
+        k = dc._distinct_grams_udf(n)(F.col("text"))
+        s = dc._distinct_grams(F.col("text"), n)
+        pairs = df.select("doc_id", k.alias("a"), s.alias("b")).collect()
+        assert len(pairs) == len(rows) + len(TOKEN_CASES)
+        for r in pairs:
+            assert list(r.a) == list(r.b), (n, r.doc_id)
 
 
 def test_span_window_kernel_matches_sql(spark):
-    """duplicate_span_removal fast=True (Arrow window-hash kernel) must
-    reproduce the fast=False SQL fold exactly — nulls, whitespace-only,
-    short docs, repeated boilerplate, non-ASCII."""
+    """duplicate_span_removal's Arrow window-hash kernel must reproduce
+    its SQL reference ``_span_windows`` exactly (order + values) —
+    nulls, whitespace-only, short docs, repeated boilerplate,
+    non-ASCII, and the shared adversarial tokenization cases."""
+    from indu_doc_transformer_spark.operators.textstats import _tokens
+
     rows = [
         (0, "a b c d e f g a b c d e f g tail one two"),
         (1, "a b c d e f g prefix a b c d e f g"),
@@ -223,21 +222,16 @@ def test_span_window_kernel_matches_sql(spark):
         (6, "ÅÄÖ ü ü ü ü ü ü ü ü ss"),
         (7, "  leading and trailing  "),
     ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    df = with_shared_cases(
+        spark, spark.createDataFrame(rows, "doc_id bigint, text string")
+    )
     for k in (3, 7):
-        a = {
-            tuple(r)
-            for r in dd.duplicate_span_removal(
-                df, "doc_id", "text", k=k, fast=True
-            ).collect()
-        }
-        b = {
-            tuple(r)
-            for r in dd.duplicate_span_removal(
-                df, "doc_id", "text", k=k, fast=False
-            ).collect()
-        }
-        assert a == b
+        a = dd._span_windows_udf(k)(F.col("text"))
+        b = dd._span_windows(_tokens(F.col("text")), k)
+        pairs = df.select("doc_id", a.alias("a"), b.alias("b")).collect()
+        assert len(pairs) == len(rows) + len(TOKEN_CASES)
+        for r in pairs:
+            assert [tuple(w) for w in r.a] == [tuple(w) for w in r.b], (k, r.doc_id)
 
 
 def test_guid_charjoin_matches_charjoin_on_guid_inputs(spark):
@@ -1091,11 +1085,12 @@ def test_decontamination_broadcast_gate_degrades_gracefully(spark):
 
 
 def test_gram_stats_fast_matches_sql(spark):
-    """The Arrow gram-stats kernel must be bit-identical to the
-    explode+groupBy SQL form — adversarial tokenization cases: null,
-    empty, single token, tabs/newlines (Spark trim strips 0x20 only,
-    so a leading tab yields a leading empty token), unicode case
-    folding, heavy repetition, punctuation-glued tokens."""
+    """The Arrow gram-stats kernel path of both operators must be
+    bit-identical to its explode+groupBy SQL reference — adversarial
+    tokenization cases: null, empty, single token, tabs/newlines (Spark
+    trim strips 0x20 only, so a leading tab yields a leading empty
+    token), unicode case folding, heavy repetition, punctuation-glued
+    tokens, and the shared adversarial tokenization cases."""
     from indu_doc_transformer_spark.operators import textstats as ts
 
     rows = [
@@ -1109,17 +1104,17 @@ def test_gram_stats_fast_matches_sql(spark):
         (7, "p! q? r. s, " * 5),
         (8, "  spaces   collapse    here between   tokens   "),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for fn in (ts.top_ngram_stats, ts.dup_ngram_char_stats):
-        fast = {
-            r.id: tuple(r)[1:]
-            for r in fn(df, "doc_id", "text", fast=True).collect()
-        }
-        slow = {
-            r.id: tuple(r)[1:]
-            for r in fn(df, "doc_id", "text", fast=False).collect()
-        }
-        assert fast == slow, fn.__name__
+    df = with_shared_cases(
+        spark, spark.createDataFrame(rows, "doc_id long, text string")
+    )
+    for fn, ref in (
+        (ts.top_ngram_stats, ts._top_ngram_stats_sql),
+        (ts.dup_ngram_char_stats, ts._dup_ngram_char_stats_sql),
+    ):
+        kernel = {r.id: tuple(r)[1:] for r in fn(df, "doc_id", "text").collect()}
+        sql = {r.id: tuple(r)[1:] for r in ref(df, "doc_id", "text").collect()}
+        assert kernel == sql, fn.__name__
+        assert set(kernel) >= {100, 101, 102}, fn.__name__
 
 
 def test_dup_ngram_char_stats_planted(spark):
