@@ -1690,8 +1690,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # DuckDB oracle SQL. Shared fragments:
-_NORM = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
+# _NORM/_TOKS mirror the kernels/tokens.py contracts (Spark's `trim`
+# and Java `\s`). DuckDB's bare trim(x) also strips U+00A0, U+2000 and
+# U+3000, and RE2's \s misses U+000B, so both are spelled out.
+_WS = "[ \\t\\n\\x0B\\f\\r]+"
+_NORM = f"lower(trim(regexp_replace(text, '{_WS}', ' ', 'g'), ' '))"
+_TOKS = f"regexp_split_to_array(lower(trim(text, ' ')), '{_WS}')"
 # DuckDB mirror of _structured_text() (3-token lines, 6-token
 # paragraphs, hash->#) — ONE definition shared by every oracle that
 # needs the rendition, so a change can't silently diverge per-oracle.

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_ASPECTS, AspectsConfig
 from ..functions import guids as G
 from ..functions.tags import make_single_aspect_udf, make_tag_parts_udf
+from ..plans.cache import release_local_checkpoint
 
 ATTR_TYPE = "array<struct<guid:string,name:string,type:string,value_json:string>>"
 EMPTY_ATTRS = f"cast(array() as {ATTR_TYPE})"
@@ -489,10 +490,14 @@ class Assembler:
         return reqs
 
     def assemble(self, rows: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
-        """persist=True caches the two fan-out points (the exploded
-        requests feed 6 finisher families; conn_all feeds 5 outputs) —
-        at warehouse scale the same role is played by materializing
-        stage tables."""
+        """persist=True materializes every shared intermediate once,
+        before any output is written: the rows input and the exploded
+        requests (eager localCheckpoints), the two tag-parser results
+        (eager localCheckpoints, so no entity plan evaluates Python),
+        and the conn_all/xall fan-out frames (coalesced, lazily
+        persisted); the errors union is coalesced too. At warehouse
+        scale the same role is played by materializing stage tables.
+        persist=False keeps every plan lazy."""
         if persist:
             # materialize the branch INPUT once (guide §2.4 "two
             # operations keyed the same way can share one pass"): the
@@ -527,9 +532,7 @@ class Assembler:
             # the rows checkpoint fed exactly that materialization —
             # release its blocks now instead of holding a second copy
             # of the corpus in executor storage until context cleanup
-            from .dedup import _release_local_checkpoint
-
-            _release_local_checkpoint(rows)
+            release_local_checkpoint(rows)
         return self.finish(reqs, persist=persist)
 
     def finish(self, reqs: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
@@ -637,8 +640,12 @@ class Assembler:
         )
         if persist:
             # feeds connections, links, pins, xtargets (3 roles), lineage
-            # (plan is small once reqs is checkpointed -> lazy cache)
-            conn_all = conn_all.persist()
+            # (plan is small once reqs is checkpointed -> lazy cache).
+            # coalesce first, for the reason reqs is coalesced: the
+            # union keeps both children's partitions, the cache freezes
+            # that count, and every consumer scan would fan out into it
+            n = reqs.sparkSession.sparkContext.defaultParallelism
+            conn_all = conn_all.coalesce(n).persist()
 
         connections = conn_all.select(
             F.col("conn_guid").alias("guid"), "src_guid", "dst_guid", "through_guid"
@@ -706,7 +713,9 @@ class Assembler:
             xall = xall.unionByName(p)
         xall = xall.withColumn("guid", G.xtarget_guid(F.col("completed")))
         if persist:
-            xall = xall.persist()  # feeds xtargets, aspects, attachments, lineage
+            # feeds xtargets, distinct_tags, attachments, lineage; a
+            # 4-child union, coalesced before caching like conn_all
+            xall = xall.coalesce(n).persist()
 
         xtargets = (
             xall.groupBy("guid")
@@ -725,10 +734,11 @@ class Assembler:
         )
         distinct_tags = distinct_tags.withColumn("parts", self.tag_parts(F.col("tag")))
         if persist:
-            # tiny (one row per unique tag) but feeds 4 outputs, and a
-            # filter on the pandas-UDF output column would otherwise
-            # duplicate the whole aggregate+UDF subtree per consumer
-            distinct_tags = distinct_tags.persist()
+            # tiny (one row per unique tag) but feeds 3 outputs: parse
+            # each tag once, here, before any write, so no entity plan
+            # evaluates Python (a lazy persist() would run the UDF
+            # inside whichever entity write came first)
+            distinct_tags = distinct_tags.localCheckpoint(eager=True)
         invalid_errors = distinct_tags.where(F.size("parts") == 0).select(
             F.col("at.url").alias("url"),
             F.col("at.page_no").alias("page_no"),
@@ -790,6 +800,9 @@ class Assembler:
             )
         )
         parsed = aspect_req.withColumn("p", self.single_aspect(F.col("raw_tag")))
+        if persist:
+            # feeds errors, aspects and attachments: parsed once, here
+            parsed = parsed.localCheckpoint(eager=True)
         aspect_errors = parsed.where(F.col("p.status") != 0).select(
             "url", "page_no", F.lit("WARNING").alias("severity"),
             F.when(
@@ -877,6 +890,11 @@ class Assembler:
             .unionByName(invalid_errors)
             .unionByName(aspect_errors)
         )
+        if persist:
+            # the only entity union with no exchange before its write:
+            # it would run one write task per partition of each of its
+            # five children
+            errors = errors.coalesce(n)
 
         return {
             "xtargets": xtargets,

@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.cache import register_cache
+from ..plans.cache import register_cache, release_local_checkpoint
 from .textstats import _tokens, norm_text
 
 
@@ -351,20 +351,6 @@ def simhash_near_dup_pairs(
     )
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of a localCheckpoint'ed DataFrame's cached
-    RDD blocks. Without this, an iterative loop holds O(iterations)
-    checkpointed label-table copies in executor storage until JVM GC +
-    ContextCleaner get around to them. Reaches through the LogicalRDD
-    plan node (pinned pyspark build); a harmless no-op if the
-    internals move — the blocks then just wait for context cleanup as
-    before."""
-    try:  # pragma: no cover - py4j internals
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def connected_components(
     edges: DataFrame, src: str = "id_a", dst: str = "id_b", max_iters: int = 25
 ) -> DataFrame:
@@ -420,14 +406,14 @@ def connected_components(
         )
         new = new.localCheckpoint(eager=True)
         changed = new.where(F.col("ncomp2") != F.col("comp")).count()
-        _release_local_checkpoint(prev)  # new is materialized; prev is dead
+        release_local_checkpoint(prev)  # new is materialized; prev is dead
         prev = new
         labels = new.select("id", F.col("ncomp2").alias("comp"))
         if changed == 0:
             break
     else:  # pragma: no cover - diameter > max_iters
         raise RuntimeError(f"connected_components: no convergence in {max_iters} iters")
-    _release_local_checkpoint(sym)
+    release_local_checkpoint(sym)
     return labels
 
 
@@ -504,7 +490,7 @@ def connected_components_star(
     for _ in range(max_iters):
         e2 = small_star(large_star(e)).localCheckpoint(eager=True)
         sig2 = checksum(e2)
-        _release_local_checkpoint(prev)
+        release_local_checkpoint(prev)
         prev = e2
         e = e2
         if sig2 == sig:

@@ -15,14 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_ASPECTS, AspectsConfig
-
-
-def _path_levels(config: AspectsConfig):
-    """tag -> parts map via the same pandas UDF the assembly layer
-    uses (shared kernel, shared parity pins)."""
-    from ..functions.tags import make_tag_parts_udf
-
-    return make_tag_parts_udf(config)
+from ..functions.tags import make_tag_parts_udf
 
 
 def aspect_tree(
@@ -31,9 +24,9 @@ def aspect_tree(
     """Prefix tree by aspect levels (A14, manager.py:317-345 get_tree):
     grouping over the first `depth` hierarchy levels with the tag set
     collected at each leaf — the manual-rollup-as-groupBy recast."""
-    parts_udf = _path_levels(config)
     seps = config.separators[:depth]
-    df = xtargets.withColumn("parts", parts_udf(F.col("tag")))
+    # tag -> parts map via the same pandas UDF the assembly layer uses
+    df = xtargets.withColumn("parts", make_tag_parts_udf(config)(F.col("tag")))
     levels = [
         F.concat(
             F.lit(sep),

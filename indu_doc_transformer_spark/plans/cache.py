@@ -30,6 +30,20 @@ def register_cache(df: DataFrame, cache: list | None) -> DataFrame:
     return df
 
 
+def release_local_checkpoint(df: DataFrame) -> None:
+    """Best-effort release of a localCheckpoint'ed DataFrame's cached
+    RDD blocks once its last consumer has been materialized. Without
+    this, an iterative loop holds O(iterations) checkpointed copies in
+    executor storage until JVM GC + ContextCleaner get around to them.
+    Reaches through the LogicalRDD plan node (pinned pyspark build); a
+    harmless no-op if the internals move — the blocks then just wait
+    for context cleanup as before."""
+    try:  # pragma: no cover - py4j internals
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
+
+
 @contextmanager
 def temp_caches():
     """Scope for operator caches::

@@ -15,14 +15,28 @@ N_DOCS = 150
 
 
 @pytest.fixture(scope="module")
-def results(spark):
+def tables(spark):
     docs = corpus_df(spark, N_DOCS, partitions=8)
     extracted = ex.extract(docs, num_partitions=8)
-    rows = ex.rows_table(extracted)
-    tables = asm_op.assemble(rows)
+    return asm_op.assemble(ex.rows_table(extracted))
+
+
+@pytest.fixture(scope="module")
+def results(tables):
     collected = {k: v.collect() for k, v in tables.items()}
     oracle = assemble_documents(generate_corpus(N_DOCS))
     return collected, oracle
+
+
+def test_entity_plans_evaluate_no_python(tables):
+    """assemble parses every tag before it returns: none of the ten
+    entity plans holds a Python-eval node, so writing them starts no
+    Python worker."""
+    assert len(tables) == 10
+    for name, df in tables.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan, name
+        assert "BatchEvalPython" not in plan, name
 
 
 def test_xtargets_match(results):

@@ -1,10 +1,12 @@
 """The tokenization core (kernels/tokens.py), without a Spark session:
-its two contracts on the shared adversarial cases, and the rule that no
-other module compiles its own whitespace tokenizer."""
+its two contracts on the shared adversarial cases, the DuckDB oracle
+fragments that mirror them, and the rule that no other module compiles
+its own whitespace tokenizer."""
 
 import pathlib
 import re
 
+import duckdb
 import pytest
 
 from indu_doc_transformer_spark.kernels import tokens
@@ -18,6 +20,34 @@ CASES = [c for c in TOKEN_CASES if c[0] is not None]
 def test_contracts_on_shared_cases(text, split, collapse):
     assert tokens.split_tokens(text) == split
     assert tokens.collapse_tokens(text) == collapse
+
+
+# DuckDB lower() maps İ to plain i (Java and Python: i + U+0307) and
+# never emits final ς, so these cases differ in case mapping, not in
+# whitespace; strict, so a fix shows up as XPASS
+_DUCKDB_LOWER_GAP = pytest.mark.xfail(
+    strict=True, reason="DuckDB lower() differs on U+0130 and final sigma"
+)
+DUCKDB_CASES = [
+    pytest.param(*c, marks=_DUCKDB_LOWER_GAP) if any(ch in c[0] for ch in "\u0130\u03a3")
+    else c
+    for c in CASES
+]
+
+
+@pytest.mark.parametrize("text,split,collapse", DUCKDB_CASES)
+def test_duckdb_fragments_match_contracts(text, split, collapse):
+    """The oracle SQL's _TOKS/_NORM fragments give the contracts' tokens."""
+    import __spark_entry__ as entry
+
+    con = duckdb.connect()
+    toks, norm = con.execute(
+        f"SELECT {entry._TOKS}, regexp_split_to_array({entry._NORM}, ' ')"
+        " FROM (SELECT ?::VARCHAR AS text)",
+        [text],
+    ).fetchone()
+    assert toks == tokens.split_tokens(text)
+    assert norm == tokens.collapse_tokens(text)
 
 
 def test_ngrams_windows():

@@ -56,5 +56,12 @@ TOKEN_CASES = [
         ["", "leading", "tab", "then", "words", "leading", "tab", "then", "words"],
         ["leading", "tab", "then", "words", "leading", "tab", "then", "words"],
     ),
+    # U+000B is Java and re.ASCII \s (RE2's \s misses it); Spark trim
+    # keeps it, so split yields empty edge tokens
+    (
+        "\u000bvertical tab\u000bsplits vertical tab splits\u000b",
+        ["", "vertical", "tab", "splits", "vertical", "tab", "splits", ""],
+        ["vertical", "tab", "splits", "vertical", "tab", "splits"],
+    ),
 ]
 
