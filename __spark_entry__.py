@@ -1690,12 +1690,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # DuckDB oracle SQL. Shared fragments:
-# _NORM/_TOKS mirror the kernels/tokens.py contracts (Spark's `trim`
-# and Java `\s`). DuckDB's bare trim(x) also strips U+00A0, U+2000 and
-# U+3000, and RE2's \s misses U+000B, so both are spelled out.
-_WS = "[ \\t\\n\\x0B\\f\\r]+"
-_NORM = f"lower(trim(regexp_replace(text, '{_WS}', ' ', 'g'), ' '))"
-_TOKS = f"regexp_split_to_array(lower(trim(text, ' ')), '{_WS}')"
+# every oracle whose Spark twin uses Spark's `trim` (ASCII space only)
+# and Java's `\s` class goes through these. DuckDB's bare trim(x) also
+# strips U+00A0, U+2000 and U+3000, and RE2's \s misses U+000B, so both
+# are spelled out. _norm/_toks mirror the kernels/tokens.py contracts
+# (collapse, split); _ntoks is textstats.ws_token_count.
+_WS_CHARS = " \\t\\n\\x0B\\f\\r"
+_WS = f"[{_WS_CHARS}]+"
+
+
+def _norm(c: str) -> str:
+    return f"lower(trim(regexp_replace({c}, '{_WS}', ' ', 'g'), ' '))"
+
+
+def _toks(c: str) -> str:
+    return f"regexp_split_to_array(lower(trim({c}, ' ')), '{_WS}')"
+
+
+def _ntoks(c: str) -> str:
+    return f"len(regexp_split_to_array(trim({c}, ' '), '{_WS}'))"
+
+
+_NORM = _norm("text")
+_TOKS = _toks("text")
+_NTOKS = _ntoks("text")
 # DuckDB mirror of _structured_text() (3-token lines, 6-token
 # paragraphs, hash->#) — ONE definition shared by every oracle that
 # needs the rendition, so a change can't silently diverge per-oracle.
@@ -2144,16 +2162,16 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS merged
             FROM g GROUP BY guid
         """,
-        "q_token_counts": """
+        "q_token_counts": f"""
             SELECT doc_id,
-                   len(regexp_split_to_array(trim(text), '\\s+')) AS ws_tokens,
-                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS bpe_tokens
+                   {_NTOKS} AS ws_tokens,
+                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9{_WS_CHARS}]')) AS bpe_tokens
             FROM documents
         """,
         "q_quality": f"""
             WITH t AS (
               SELECT doc_id, text,
-                     len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS np,
+                     len(regexp_extract_all(text, '[^A-Za-z0-9{_WS_CHARS}]')) AS np,
                      {_TOKS} AS toks
               FROM documents
             )
@@ -2183,9 +2201,9 @@ def oracle_sql() -> dict[str, str]:
             ),
             m AS (
               SELECT doc_id, s,
-                     regexp_split_to_array(lower(trim(s)), '\\s+') AS stoks,
-                     list_filter(list_transform(regexp_split_to_array(s, '\\n'), x -> trim(x)), x -> x != '') AS lines,
-                     list_filter(list_transform(regexp_split_to_array(s, '\\n{{2,}}'), x -> trim(x)), x -> x != '') AS paras
+                     {_toks("s")} AS stoks,
+                     list_filter(list_transform(regexp_split_to_array(s, '\\n'), x -> trim(x, ' ')), x -> x != '') AS lines,
+                     list_filter(list_transform(regexp_split_to_array(s, '\\n{{2,}}'), x -> trim(x, ' ')), x -> x != '') AS paras
               FROM s0
             ),
             r AS (
@@ -2223,7 +2241,7 @@ def oracle_sql() -> dict[str, str]:
             ),
             t AS (
               SELECT doc_id,
-                     regexp_split_to_array(lower(trim(s)), '\\s+') AS toks
+                     {_toks("s")} AS toks
               FROM s0
             ),
             base AS (
@@ -2313,20 +2331,20 @@ def oracle_sql() -> dict[str, str]:
                    cast(floor(sum(rarity) / count(*)) as bigint) AS rarity_avg
             FROM r GROUP BY doc_id
         """,
-        "q_token_shards": """
+        "q_token_shards": f"""
             WITH t AS (
               SELECT doc_id,
-                     cast(len(regexp_split_to_array(trim(text), '\\s+')) as bigint) AS n_tokens
+                     cast({_NTOKS} as bigint) AS n_tokens
               FROM documents
             )
             SELECT doc_id, n_tokens,
                    cast(floor((sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_tokens) / 2000.0) as bigint) AS shard_id
             FROM t
         """,
-        "q_shard_manifest": """
+        "q_shard_manifest": f"""
             WITH t AS (
               SELECT doc_id,
-                     cast(len(regexp_split_to_array(trim(text), '\\s+')) as bigint) AS n_tokens,
+                     cast({_NTOKS} as bigint) AS n_tokens,
                      cast('0x' || substr(md5(cast(doc_id as varchar) || ':' || text), 1, 15) as bigint) AS h
               FROM documents
             ),
@@ -2357,7 +2375,7 @@ def oracle_sql() -> dict[str, str]:
         "q_corpus_report": f"""
             WITH b AS (
               SELECT source,
-                     cast(len(regexp_split_to_array(trim(text), '\\s+'))
+                     cast({_NTOKS}
                           as bigint) AS n,
                      md5({_NORM}) AS fp
               FROM documents
@@ -2370,10 +2388,10 @@ def oracle_sql() -> dict[str, str]:
                      AS exact_dup_frac
             FROM b GROUP BY source
         """,
-        "q_dup_span_removal": """
+        "q_dup_span_removal": f"""
             WITH t AS (
               SELECT doc_id,
-                     regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+                     {_TOKS} AS toks
               FROM documents
             ),
             w AS (
@@ -2396,7 +2414,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id, toks, starts,
                      list_filter(
                        list_transform(generate_series(1, len(toks)),
-                                      i -> {'pos': i, 't': toks[i]}),
+                                      i -> {{'pos': i, 't': toks[i]}}),
                        s -> len(list_filter(starts,
                               st -> st <= s.pos AND s.pos < st + 5)) = 0
                      ) AS kt
@@ -2421,10 +2439,10 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN mx >= 0.3 THEN 0 ELSE 1 END AS keep
             FROM m
         """,
-        "q_sequence_pack": """
+        "q_sequence_pack": f"""
             WITH t AS (
               SELECT doc_id,
-                     cast(len(regexp_split_to_array(trim(text), '\\s+')) as bigint) AS n_tokens
+                     cast({_NTOKS} as bigint) AS n_tokens
               FROM documents
             ),
             c AS (
@@ -2466,7 +2484,7 @@ def oracle_sql() -> dict[str, str]:
             ),
             m AS (
               SELECT doc_id, s,
-                     list_filter(list_transform(regexp_split_to_array(s, '\\n'), x -> trim(x)), x -> x != '') AS lines
+                     list_filter(list_transform(regexp_split_to_array(s, '\\n'), x -> trim(x, ' ')), x -> x != '') AS lines
               FROM d
             ),
             r AS (
@@ -2474,7 +2492,7 @@ def oracle_sql() -> dict[str, str]:
                      cast(len(lines) as int) AS n_lines,
                      cast(len(list_filter(lines,
                          l -> regexp_matches(l, '[.!?\"]$')
-                              AND len(regexp_split_to_array(l, '\\s+')) >= 3)) as int) AS n_kept,
+                              AND len(regexp_split_to_array(l, '{_WS}')) >= 3)) as int) AS n_kept,
                      CASE WHEN contains(lower(s), '{{') OR contains(lower(s), 'lorem ipsum')
                                OR contains(lower(s), 'javascript') THEN 1 ELSE 0 END AS bad_token
               FROM m
@@ -2521,7 +2539,7 @@ def oracle_sql() -> dict[str, str]:
               FROM s0,
                    unnest(list_transform(regexp_split_to_array(s, '\\n'),
                                          (x, i) -> struct_pack(line := x, pos := i))) AS t(u)
-              WHERE trim(u.line) != ''
+              WHERE trim(u.line, ' ') != ''
             ),
             f AS (
               SELECT doc_id, pos, line,
@@ -2556,8 +2574,8 @@ def oracle_sql() -> dict[str, str]:
                           THEN 1 ELSE 0 END AS gopher_keep
               FROM (
                 SELECT doc_id, text, toks,
-                       list_filter(list_transform(regexp_split_to_array(text, '\\n'), x -> trim(x)), x -> x != '') AS lines,
-                       list_filter(list_transform(regexp_split_to_array(text, '\\n{{2,}}'), x -> trim(x)), x -> x != '') AS paras
+                       list_filter(list_transform(regexp_split_to_array(text, '\\n'), x -> trim(x, ' ')), x -> x != '') AS lines,
+                       list_filter(list_transform(regexp_split_to_array(text, '\\n{{2,}}'), x -> trim(x, ' ')), x -> x != '') AS paras
                 FROM tr
               )
             ),
@@ -2645,10 +2663,10 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN contam_frac <= 0.2 THEN 1 ELSE 0 END AS keep
             FROM m
         """,
-        "q_dedup_keep_list": """
+        "q_dedup_keep_list": f"""
             WITH d AS (
               SELECT doc_id,
-                     md5(lower(trim(regexp_replace(substr(text,1,30), '\\s+', ' ', 'g')))) AS fp
+                     md5({_norm("substr(text,1,30)")}) AS fp
               FROM documents
             )
             SELECT doc_id FROM (
@@ -2708,8 +2726,8 @@ def oracle_sql() -> dict[str, str]:
                OR (session_end_us // 1000 + 300000)
                   < (SELECT max(epoch_us(ts)) // 1000 - 600000 FROM events)
         """,
-        "q_exact_dedup": """
-            SELECT md5(lower(trim(regexp_replace(substr(text,1,30), '\\s+', ' ', 'g')))) AS fp,
+        "q_exact_dedup": f"""
+            SELECT md5({_norm("substr(text,1,30)")}) AS fp,
                    count(*) AS dup_count, min(doc_id) AS keep_id
             FROM documents GROUP BY fp HAVING count(*) > 1
         """,
@@ -3427,7 +3445,7 @@ def oracle_sql() -> dict[str, str]:
         """,
     }
     d["q_asof_join_bucketed"] = d["q_asof_join"]  # identical semantics
-    d["q_training_mixture"] = """
+    d["q_training_mixture"] = f"""
         WITH b AS (
           SELECT doc_id, source, text,
                  cast(list_sum(list_transform(generate_series(1, 4), i ->
@@ -3444,7 +3462,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         t AS (
           SELECT doc_id, source,
-                 cast(len(regexp_split_to_array(trim(text), '\\s+')) as bigint) AS n_tokens
+                 cast({_NTOKS} as bigint) AS n_tokens
           FROM keep
         )
         SELECT doc_id, source, n_tokens,
@@ -3601,21 +3619,21 @@ def oracle_sql() -> dict[str, str]:
     # over the xtargets entity SQL (search.py run_parser/_partial)
     d["x_search_targets"] = f"""
         SELECT guid FROM ({d["q_xtargets_from_rows"]})
-        WHERE contains(lower(trim(regexp_replace(tag, '\\s+', ' ', 'g'))), '=f1')
-          AND contains(lower(trim(regexp_replace(target_type, '\\s+', ' ', 'g'))),
+        WHERE contains({_norm("tag")}, '=f1')
+          AND contains({_norm("target_type")},
                        'device')
     """
     # '@links.attributes(Color)': connections having >=1 link whose
     # search-attribute map contains the key 'color' (attr_search_map:
     # SIMPLE -> normalized name, ROUTING_TRACKS -> 'tracks',
     # PLC_ADDRESS -> raw meta keys)
-    d["x_search_connections"] = _finisher_cte() + """
+    d["x_search_connections"] = _finisher_cte() + f"""
         , la AS (
           SELECT conn_guid, unnest(link_attrs) AS a FROM link_g
         )
         SELECT DISTINCT conn_guid AS guid FROM la
         WHERE (a.type = 'SIMPLE'
-               AND lower(trim(regexp_replace(a.name, '\\s+', ' ', 'g'))) = 'color')
+               AND {_norm("a.name")} = 'color')
            OR (a.type = 'ROUTING_TRACKS' AND 'tracks' = 'color')
            OR (a.type = 'PLC_ADDRESS'
                AND list_contains(json_keys(a.value_json, '$.meta'), 'color'))

@@ -180,6 +180,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             control=control, on_chunk=on_chunk, page_setups_json=setups_json,
         )
         print()
+        print(f"Extraction: {stats['processed_chunks']} chunk(s) run, "
+              f"{stats['chunk_size']} bucket(s) per chunk, "
+              f"{stats['kernel_partitions']} kernel task(s) per chunk")
         if stats.get("stopped"):
             print("Processing stopped. Re-run with the same --out to resume "
                   f"({stats['processed_chunks']} chunks completed this run).")

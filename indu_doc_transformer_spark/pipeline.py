@@ -3,7 +3,10 @@
 Stage 1 (extract): documents -> salted mapInPandas kernel -> nested
 extraction table, written bucket-partitioned (one file per bucket per
 chunk) with a completed-bucket registry (kill-and-restart resumes
-idempotently).
+idempotently). The resume grain (``num_buckets``, what the registry
+records) is separate from the work grain (buckets per chunk and kernel
+tasks per chunk), which comes from the input's size estimate and the
+session (plans.checkpoint.work_grain).
 
 Stage 2 (assemble): read extraction output back (explicit
 materialization barrier: at 100 TB the extraction output is a real
@@ -30,7 +33,7 @@ from .config import (
 )
 from .operators import assembly as asm_op
 from .operators import extraction as ex
-from .plans.checkpoint import run_checkpointed
+from .plans.checkpoint import input_bytes, run_checkpointed, work_grain
 from .sources.catalog import read_table, write_table
 
 ENTITY_TABLES = [
@@ -51,7 +54,7 @@ def run_extraction(
     docs: DataFrame,
     out_dir: str,
     num_buckets: int = 32,
-    chunk_size: int = 8,
+    chunk_size: int | None = None,
     control=None,
     on_chunk=None,
     page_setups_json: str | None = None,
@@ -61,10 +64,32 @@ def run_extraction(
     plans.checkpoint.ProcessingControl for cooperative stop (a stopped
     run resumes from the bucket registry); ``on_chunk`` is a progress
     callback (idx, n_chunks, buckets); ``page_setups_json`` overrides
-    the built-in page setups (CLI -e/--extraction-settings)."""
+    the built-in page setups (CLI -e/--extraction-settings).
+
+    ``num_buckets`` is the resume grain; the work grain is separate.
+    ``chunk_size=None`` derives the buckets per chunk from the input's
+    size estimate: all buckets in one chunk when the input fits in one
+    wave of ``defaultParallelism`` tasks of
+    ``spark.sql.files.maxPartitionBytes`` each, else chunks of 8
+    buckets. The kernel stage of every chunk runs in a multiple of
+    ``defaultParallelism`` tasks of at most that many input bytes. The
+    estimate is the size of the scanned source (see
+    ``plans.checkpoint.input_bytes``): a filtered or limited input
+    should pass ``chunk_size`` itself. The returned stats carry the
+    chosen ``chunk_size`` and ``kernel_partitions``."""
 
     from pyspark.sql import Observation
 
+    spark = docs.sparkSession
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    chunk_size, kernel_partitions = work_grain(
+        input_bytes(docs),
+        sql_conf.filesMaxPartitionBytes(),
+        spark.sparkContext.defaultParallelism,
+        num_buckets,
+        chunk_size,
+        unknown_bytes=sql_conf.defaultSizeInBytes(),
+    )
     observations: list[Observation] = []
 
     def process(chunk: DataFrame) -> DataFrame:
@@ -72,7 +97,7 @@ def run_extraction(
         # the kernel is salted on (bucket, url): hashing on bucket alone
         # would leave some of the chunk's tasks with several buckets.
         # run_checkpointed rebalances the output on bucket for the write.
-        pruned = pruned.repartition(max(8, chunk_size), F.col("bucket"), F.col("url"))
+        pruned = pruned.repartition(kernel_partitions, F.col("bucket"), F.col("url"))
         kernel = (
             ex._extract_batches
             if page_setups_json is None
@@ -101,6 +126,8 @@ def run_extraction(
     # an interrupted chunk's observation never resolves — only read
     # observations for chunks that ran to completion
     stats["observed"] = [o.get for o in observations[: stats["processed_chunks"]]]
+    stats["chunk_size"] = chunk_size
+    stats["kernel_partitions"] = kernel_partitions
     return stats
 
 
@@ -171,10 +198,13 @@ def run_full(
     control=None,
     on_chunk=None,
     page_setups_json: str | None = None,
-    chunk_size: int = 8,
+    chunk_size: int | None = None,
 ) -> dict:
     """Both stages. A stop request during extraction skips assembly
-    (the registry keeps the completed buckets; rerun to finish)."""
+    (the registry keeps the completed buckets; rerun to finish).
+    ``num_buckets`` is the resume grain; ``chunk_size=None`` derives
+    the work grain from the input and the session (see
+    ``run_extraction``)."""
     stats = run_extraction(
         docs, out_dir, num_buckets, chunk_size,
         control=control, on_chunk=on_chunk, page_setups_json=page_setups_json,

@@ -14,6 +14,14 @@ idempotently at 10^12-document scale'. Scheme (SURVEY.md 4.2):
   recomputed and a half-written chunk is rewritten idempotently
   (partition overwrite, deterministic GUIDs downstream).
 
+The resume grain and the work grain are separate. ``num_buckets`` is
+the resume grain: the unit the registry records. How many buckets one
+chunk carries, and how many tasks one chunk's work runs in, is the
+work grain; ``work_grain`` derives both from the input's size estimate
+and the session, so an input that fits in one wave of tasks runs as one
+chunk of one task per core, and a larger one as chunks of 8 buckets,
+each run in byte-sized tasks.
+
 The registry is tiny (num_buckets rows) — reading it to the driver is
 deliberate, not a scale problem. Its rows are built from literals on
 the JVM, so marking a chunk starts no Python worker.
@@ -91,6 +99,62 @@ class BucketRegistry:
 
 def bucket_col(num_buckets: int):
     return F.pmod(F.xxhash64(F.col("url")), F.lit(num_buckets)).cast("int")
+
+
+# buckets per chunk for an input larger than one wave of tasks, or
+# with no size estimate
+MULTI_CHUNK = 8
+
+
+def work_grain(
+    size_bytes: int,
+    target_bytes: int,
+    cores: int,
+    num_buckets: int,
+    chunk_size: int | None = None,
+    *,
+    unknown_bytes: int,
+) -> tuple[int, int]:
+    """(buckets per chunk, tasks per chunk) for ``size_bytes`` of input
+    split into ``num_buckets`` buckets, with ``target_bytes`` of input
+    per task on ``cores`` task slots.
+
+    An input that fits in one wave (``cores`` tasks of ``target_bytes``)
+    is one chunk of all buckets; a larger one runs in chunks of
+    ``MULTI_CHUNK`` buckets. An explicit ``chunk_size`` is honoured. A
+    chunk runs in the fewest tasks of at most ``target_bytes`` each,
+    rounded up to a multiple of ``cores`` (so no core idles for a
+    wave). An estimate of ``unknown_bytes`` (the session's
+    spark.sql.defaultSizeInBytes) or more means the size is unknown:
+    chunks of ``MULTI_CHUNK`` buckets, one task per core."""
+    unknown = size_bytes >= unknown_bytes
+    if chunk_size is None:
+        one_wave = not unknown and size_bytes <= cores * target_bytes
+        chunk_size = num_buckets if one_wave else MULTI_CHUNK
+    chunk_size = min(max(1, chunk_size), num_buckets)
+    if unknown:
+        return chunk_size, cores
+    tasks = _ceil_div(size_bytes * chunk_size, num_buckets * target_bytes)
+    return chunk_size, cores * max(1, _ceil_div(tasks, cores))
+
+
+def _ceil_div(a: int, b: int) -> int:
+    return -(-a // b)
+
+
+def input_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of the source ``df`` scans: the sum over
+    its plan's leaves (file bytes for a parquet/Iceberg scan). No Spark
+    job runs. The leaves, not the root, because a projection scales an
+    estimate by default column widths, which would turn the
+    Long.MaxValue of an unsized leaf into a finite-looking number. A
+    filter, limit or sample above the scan is not counted: such an
+    input is sized as its whole source, so a caller that narrows a
+    large table should pass ``chunk_size`` itself."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return sum(
+        int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size())
+    )
 
 
 def run_checkpointed(

@@ -62,6 +62,90 @@ def test_bucket_col_stable(spark):
     assert all(0 <= x < 16 for x in a)
 
 
+# spark.sql.defaultSizeInBytes at its default, Long.MaxValue: the size
+# estimate of a plan leaf with no statistic
+UNSIZED = 2**63 - 1
+
+
+def test_work_grain_small_input_is_one_chunk_of_one_task_per_core():
+    from indu_doc_transformer_spark.plans.checkpoint import work_grain
+
+    # the pipeline benchmark's 2,000 pages under a 12 MiB target
+    assert work_grain(640_960, 12 << 20, 4, 32, unknown_bytes=UNSIZED) == (32, 4)
+    assert work_grain(0, 128 << 20, 4, 32, unknown_bytes=UNSIZED) == (32, 4)
+    assert work_grain(1, 1, 1, 1, unknown_bytes=UNSIZED) == (1, 1)
+    # exactly one wave of tasks is still one chunk
+    assert work_grain(4 * (128 << 20), 128 << 20, 4, 32, unknown_bytes=UNSIZED) == (32, 4)
+
+
+def test_work_grain_large_input_is_several_byte_sized_chunks():
+    from indu_doc_transformer_spark.plans.checkpoint import work_grain
+
+    target, cores, buckets = 128 << 20, 4, 32
+    # one byte over a wave: 8-bucket chunks of a quarter wave, one task per core
+    assert work_grain(4 * target + 1, target, cores, buckets, unknown_bytes=UNSIZED) == (8, 4)
+    # 2 GiB: a chunk of 8 of the 64 MiB buckets fills 4 tasks
+    assert work_grain(2 << 30, target, cores, buckets, unknown_bytes=UNSIZED) == (8, 4)
+    # 64 GiB: 16 GiB per chunk, 128 tasks of 128 MiB
+    assert work_grain(64 << 30, target, cores, buckets, unknown_bytes=UNSIZED) == (8, 128)
+    for nbytes in (3 << 30, 10**11, 7 * 10**12):
+        chunk, parts = work_grain(nbytes, target, 7, buckets, unknown_bytes=UNSIZED)
+        assert chunk == 8 and parts % 7 == 0
+        # no task carries more than the target
+        assert parts * target >= nbytes * chunk / buckets
+
+
+def test_work_grain_unknown_size_keeps_eight_bucket_chunks():
+    from indu_doc_transformer_spark.plans.checkpoint import work_grain
+
+    assert work_grain(UNSIZED, 128 << 20, 4, 32, unknown_bytes=UNSIZED) == (8, 4)
+    assert work_grain(UNSIZED, 128 << 20, 6, 4, unknown_bytes=UNSIZED) == (4, 6)
+    # a leaf sum above the marker (two unsized leaves) is unknown too
+    assert work_grain(2 * UNSIZED, 128 << 20, 4, 32, unknown_bytes=UNSIZED) == (8, 4)
+    # the marker is the session's spark.sql.defaultSizeInBytes
+    assert work_grain(10**6, 128 << 20, 4, 32, unknown_bytes=10**6) == (8, 4)
+
+
+def test_work_grain_explicit_chunk_size_is_honoured_and_clamped():
+    from indu_doc_transformer_spark.plans.checkpoint import work_grain
+
+    assert work_grain(640_960, 12 << 20, 4, 32, 2, unknown_bytes=UNSIZED) == (2, 4)
+    assert work_grain(64 << 30, 128 << 20, 4, 32, 2, unknown_bytes=UNSIZED) == (2, 32)
+    assert work_grain(UNSIZED, 128 << 20, 4, 32, 3, unknown_bytes=UNSIZED) == (3, 4)
+    for nbytes in (0, 640_960, 64 << 30, UNSIZED):
+        for chunk_size in (None, 0, 1, 31, 32, 33, 1000):
+            chunk, parts = work_grain(
+                nbytes, 128 << 20, 4, 32, chunk_size, unknown_bytes=UNSIZED
+            )
+            assert 1 <= chunk <= 32 and parts >= 4 and parts % 4 == 0
+
+
+def test_input_bytes_reads_leaf_estimates_without_a_job(spark, tmp_path):
+    """File bytes for a parquet scan, also under a narrowing projection;
+    the unknown marker for an RDD-backed input, also under a projection."""
+    from indu_doc_transformer_spark.plans.checkpoint import input_bytes
+    from indu_doc_transformer_spark.sources.corpus import corpus_df
+
+    unsized = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+
+    rdd_docs = corpus_df(spark, 8, partitions=2)
+    path = str(tmp_path / "docs")
+    rdd_docs.write.parquet(path)
+    file_bytes = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    docs = spark.read.parquet(path)
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    assert input_bytes(docs) == file_bytes
+    assert input_bytes(docs.select("url", "html")) == file_bytes
+    assert input_bytes(rdd_docs) >= unsized
+    assert input_bytes(rdd_docs.select("url")) >= unsized
+    assert len(tracker.getJobIdsForGroup(None) or []) == before
+
+
 def test_catalog_roundtrip(spark, tmp_path):
     from indu_doc_transformer_spark.sources.catalog import read_table, table_exists, write_table
 

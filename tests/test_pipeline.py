@@ -53,6 +53,66 @@ def test_extracted_layout_one_file_per_bucket(spark, tmp_path):
     assert pm.agg(F.sum("docs")).first()[0] == N
 
 
+def _parquet_docs(spark, path, n=N):
+    """A file-backed documents input (one file), so it has a size estimate."""
+    corpus_df(spark, n, partitions=4).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _assert_same_rows(a, b):
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_derived_grain_small_input_one_chunk(spark, tmp_path):
+    """Default arguments on a small file-backed input: one chunk, one
+    registry mark for all buckets, one kernel task per core, and the
+    same tables as a one-bucket-per-chunk run."""
+    from unittest.mock import patch
+
+    from indu_doc_transformer_spark.plans.checkpoint import ProcessingControl
+
+    docs = _parquet_docs(spark, str(tmp_path / "docs"))
+    cores = spark.sparkContext.defaultParallelism
+    out = str(tmp_path / "derived")
+    tracker = spark.sparkContext.statusTracker()
+    marks = []
+    real_mark = BucketRegistry.mark
+
+    def mark(self, buckets):
+        marks.append(sorted(buckets))
+        real_mark(self, buckets)
+
+    # the control's job group tags the extraction jobs only
+    control = ProcessingControl(spark, group="test-derived-grain")
+    with patch.object(BucketRegistry, "mark", mark):
+        stats = pipeline.run_full(docs, out, num_buckets=8, control=control)
+    assert stats["chunk_size"] == 8 and stats["kernel_partitions"] == cores
+    assert stats["processed_chunks"] == 1
+    assert marks == [list(range(8))]
+    # the input scan and the write run one task each here, so the
+    # widest extraction stage is the kernel stage. A long session's
+    # status store evicts skipped stages first: those read as None.
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup("test-derived-grain")
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    stage_tasks = [s.numTasks for s in stages if s is not None]
+    assert max(stage_tasks) == cores, stage_tasks
+    extracted = spark.read.parquet(os.path.join(out, "extracted"))
+    pids = {r.partition_id for r in extracted.select("partition_id").distinct().collect()}
+    assert pids == set(range(cores))
+
+    ref = str(tmp_path / "one_bucket_chunks")
+    ref_stats = pipeline.run_full(docs, ref, num_buckets=8, chunk_size=1)
+    assert ref_stats["processed_chunks"] == 8
+    for t in pipeline.ENTITY_TABLES + ["extracted_text"]:
+        _assert_same_rows(
+            spark.read.parquet(os.path.join(out, t)),
+            spark.read.parquet(os.path.join(ref, t)),
+        )
+
+
 def test_run_metadata_reconstructs_config(spark, tmp_path):
     """Run-metadata table (reference db.py:159-161,413-416): one row
     persisted with the assembly output from which the exact
@@ -133,18 +193,17 @@ def test_kill_and_resume_is_idempotent(spark, tmp_path):
     assert cnt == N  # zero duplicated
 
 
-def test_stop_between_chunks_and_resume(spark, tmp_path):
+def _stop_and_resume(spark, tmp_path, docs, num_buckets, chunk_size=None):
     """Cooperative stop (ProcessingControl — reference
     plugin.py:131-142 stop_processing recast): a stop requested while
     chunk 1 runs is honored at the next chunk boundary; the interrupted
-    run's registry keeps completed buckets, and rerunning the same
-    pipeline resumes and produces output identical to an uninterrupted
-    run."""
+    run's registry keeps whole completed chunks only, and rerunning the
+    same pipeline resumes and produces output identical to an
+    uninterrupted default run."""
     from indu_doc_transformer_spark.plans.checkpoint import ProcessingControl
 
-    docs = corpus_df(spark, N, partitions=4)
     a = str(tmp_path / "a")
-    pipeline.run_full(docs, a, num_buckets=8)
+    pipeline.run_full(docs, a, num_buckets=num_buckets)
 
     b = str(tmp_path / "b")
     control = ProcessingControl(spark, group="test-stop")
@@ -154,27 +213,47 @@ def test_stop_between_chunks_and_resume(spark, tmp_path):
             control.stop()
 
     stats = pipeline.run_full(
-        docs, b, num_buckets=8, chunk_size=2, control=control, on_chunk=on_chunk
+        docs, b, num_buckets=num_buckets, chunk_size=chunk_size,
+        control=control, on_chunk=on_chunk,
     )
     assert stats["stopped"] and control.state == "stopped"
-    assert 0 < stats["processed_chunks"] < 4
+    n_chunks = -(-num_buckets // stats["chunk_size"])
+    assert 0 < stats["processed_chunks"] < n_chunks
     done = BucketRegistry(spark, os.path.join(b, "_registry")).completed()
-    assert 0 < len(done) < 8
+    # whole chunks only, in chunk order
+    assert done == set(range(stats["chunk_size"] * stats["processed_chunks"]))
     # assembly must NOT have run on the partial extraction
     assert not os.path.exists(os.path.join(b, "xtargets"))
 
-    resumed = pipeline.run_full(docs, b, num_buckets=8, chunk_size=2)
+    resumed = pipeline.run_full(docs, b, num_buckets=num_buckets, chunk_size=chunk_size)
     assert not resumed["stopped"] and resumed["skipped_buckets"] == len(done)
+    for t in pipeline.ENTITY_TABLES + ["extracted_text"]:
+        _assert_same_rows(
+            spark.read.parquet(os.path.join(a, t)),
+            spark.read.parquet(os.path.join(b, t)),
+        )
 
-    key = lambda out: sorted(
-        (r.url, r.extracted_text)
-        for r in spark.read.parquet(os.path.join(out, "extracted"))
-        .select("url", "extracted_text").collect()
-    )
-    assert key(a) == key(b)
-    cnt = lambda out, t: spark.read.parquet(os.path.join(out, t)).count()
-    for t in ("xtargets", "connections", "lineage"):
-        assert cnt(a, t) == cnt(b, t)
+
+def test_stop_between_chunks_and_resume(spark, tmp_path):
+    """Explicit grain: chunks of 2 of 8 buckets on an unsized input."""
+    _stop_and_resume(spark, tmp_path, corpus_df(spark, N, partitions=4), 8, 2)
+
+
+def test_stop_between_derived_chunks_and_resume(spark, tmp_path):
+    """Derived grain: a per-task target of a quarter of the input per
+    wave makes the file-backed input larger than one wave, so its 24
+    buckets run in three chunks of 8."""
+    from indu_doc_transformer_spark.plans.checkpoint import input_bytes
+
+    docs = _parquet_docs(spark, str(tmp_path / "docs"))
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, f"{input_bytes(docs) // (4 * cores)}b")
+    try:
+        _stop_and_resume(spark, tmp_path, docs, 24)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_cancel_mid_chunk_resumes_idempotently(spark, tmp_path):
@@ -279,6 +358,11 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
     captured = capsys.readouterr().out
     assert rc == 0, captured
     assert "Processing Statistics:" in captured
+    # synth input has no size estimate: one chunk of the 4 buckets, one
+    # kernel task per core
+    cores = spark.sparkContext.defaultParallelism
+    assert (f"Extraction: 1 chunk(s) run, 4 bucket(s) per chunk, "
+            f"{cores} kernel task(s) per chunk") in captured
     assert "Xtargets:" in captured
     assert "Processing completed successfully!" in captured
     assert "Data exported to:" in captured

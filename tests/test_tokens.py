@@ -50,6 +50,30 @@ def test_duckdb_fragments_match_contracts(text, split, collapse):
     assert norm == tokens.collapse_tokens(text)
 
 
+@pytest.mark.parametrize(
+    "text", [c[0] for c in CASES if any(ch in c[0] for ch in "\u000b\u00a0\u3000")]
+)
+def test_duckdb_token_count_and_fingerprint_match_spark_twins(text):
+    """The inline oracle expressions built on the shared fragments: the
+    token count (textstats.ws_token_count, size(split(trim(c), \\s+)))
+    and the first-30-characters fingerprint (md5(norm_text(substring(
+    text, 1, 30)))), on the rows whose whitespace DuckDB's bare trim and
+    RE2's \\s treat differently from Spark."""
+    import hashlib
+
+    import __spark_entry__ as entry
+
+    con = duckdb.connect()
+    n, fp = con.execute(
+        f"SELECT {entry._NTOKS}, md5({entry._norm('substr(text,1,30)')})"
+        " FROM (SELECT ?::VARCHAR AS text)",
+        [text],
+    ).fetchone()
+    assert n == len(tokens.split_tokens(text))
+    head = " ".join(tokens.collapse_tokens(text[:30]))
+    assert fp == hashlib.md5(head.encode("utf-8")).hexdigest()
+
+
 def test_ngrams_windows():
     toks = ["a", "b", "c", "d"]
     assert list(tokens.ngrams(toks, 2)) == ["a b", "b c", "c d"]
