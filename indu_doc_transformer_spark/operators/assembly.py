@@ -489,51 +489,49 @@ class Assembler:
             reqs = reqs.unionByName(p)
         return reqs
 
-    def assemble(self, rows: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
-        """persist=True materializes every shared intermediate once,
-        before any output is written: the rows input and the exploded
-        requests (eager localCheckpoints), the two tag-parser results
-        (eager localCheckpoints, so no entity plan evaluates Python),
-        and the conn_all/xall fan-out frames (coalesced, lazily
-        persisted); the errors union is coalesced too. At warehouse
-        scale the same role is played by materializing stage tables.
-        persist=False keeps every plan lazy."""
-        if persist:
-            # materialize the branch INPUT once (guide §2.4 "two
-            # operations keyed the same way can share one pass"): the
-            # nine per-type branches each re-run the upstream
-            # scan+explode+project otherwise — 9 full parquet decodes of
-            # the extracted table per assemble. One narrow eager
-            # localCheckpoint of the 7 needed columns turns that into
-            # 1 decode + 9 in-memory scans (measured ~2x on the request
-            # stage at sf1.0). At warehouse scale the equivalent is the
-            # page_type-partitioned rows stage table the branch
-            # docstring describes.
-            rows = rows.select(
-                "url", "page_no", "page_type", "footer_tags",
-                "row_idx", "cols", "loc_repr",
-            ).localCheckpoint(eager=True)
-        reqs = self.requests_table(rows)
-        if persist:
-            # localCheckpoint (not just persist): the request-building
-            # projections are large, and every downstream action would
-            # re-run Catalyst analysis over them; truncating the lineage
-            # here makes all 9 output plans small. At warehouse scale
-            # the equivalent is writing the requests stage table.
-            #
-            # coalesce first: the 9-branch union carries 9x the scan
-            # partitions, the checkpointed RDD freezes that count, and
-            # finisher plans scan reqs up to 7x per stage — without the
-            # coalesce a single count ran 2016 sub-millisecond tasks
-            # (pure scheduler overhead, measured 44-58s per output at
-            # sf0.01). Narrow dependency, no shuffle.
-            n = rows.sparkSession.sparkContext.defaultParallelism
-            reqs = reqs.coalesce(n).localCheckpoint(eager=True)
-            # the rows checkpoint fed exactly that materialization —
-            # release its blocks now instead of holding a second copy
-            # of the corpus in executor storage until context cleanup
-            release_local_checkpoint(rows)
-        return self.finish(reqs, persist=persist)
+    def assemble(self, rows: DataFrame) -> dict[str, DataFrame]:
+        """Materializes every shared intermediate once, before any
+        output is written: the rows input and the exploded requests
+        (eager localCheckpoints), the two tag-parser results (eager
+        localCheckpoints, so no entity plan evaluates Python), and the
+        conn_all/xall fan-out frames (coalesced, lazily persisted); the
+        errors union is coalesced too. At warehouse scale the same role
+        is played by materializing stage tables. ``finish(reqs,
+        persist=False)`` is the all-lazy finisher over a requests table
+        built elsewhere."""
+        # materialize the branch INPUT once (guide §2.4 "two
+        # operations keyed the same way can share one pass"): the
+        # nine per-type branches each re-run the upstream
+        # scan+explode+project otherwise — 9 full parquet decodes of
+        # the extracted table per assemble. One narrow eager
+        # localCheckpoint of the 7 needed columns turns that into
+        # 1 decode + 9 in-memory scans (measured ~2x on the request
+        # stage at sf1.0). At warehouse scale the equivalent is the
+        # page_type-partitioned rows stage table the branch
+        # docstring describes.
+        rows = rows.select(
+            "url", "page_no", "page_type", "footer_tags",
+            "row_idx", "cols", "loc_repr",
+        ).localCheckpoint(eager=True)
+        # localCheckpoint (not just persist): the request-building
+        # projections are large, and every downstream action would
+        # re-run Catalyst analysis over them; truncating the lineage
+        # here makes all 9 output plans small. At warehouse scale
+        # the equivalent is writing the requests stage table.
+        #
+        # coalesce first: the 9-branch union carries 9x the scan
+        # partitions, the checkpointed RDD freezes that count, and
+        # finisher plans scan reqs up to 7x per stage — without the
+        # coalesce a single count ran 2016 sub-millisecond tasks
+        # (pure scheduler overhead, measured 44-58s per output at
+        # sf0.01). Narrow dependency, no shuffle.
+        n = rows.sparkSession.sparkContext.defaultParallelism
+        reqs = self.requests_table(rows).coalesce(n).localCheckpoint(eager=True)
+        # the rows checkpoint fed exactly that materialization —
+        # release its blocks now instead of holding a second copy
+        # of the corpus in executor storage until context cleanup
+        release_local_checkpoint(rows)
+        return self.finish(reqs)
 
     def finish(self, reqs: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
         """Entity tables from a (possibly persisted/read-back) requests

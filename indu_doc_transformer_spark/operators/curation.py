@@ -8,12 +8,15 @@ Scale design (100 TB): each stage keeps its own optimal shape — the
 dedup survivor is a groupBy over the content fingerprint (map-side
 partial combine, so a virally duplicated page folds locally) joined
 back on fp (AQE skew-splittable), the Gopher flags are pure per-row
-expressions (free), the repetition stats are a zero-shuffle Arrow
-gram-stats kernel (a per-document statistic — no exploded gram rows;
-textstats._gram_stats_table), and decontamination broadcasts the
-benchmark gram set so the big side joins map-side. The final assembly
-is two id-keyed joins; at scale the doc id is the natural table key so
-these co-partition with the source.
+expressions (free), and repetition and decontamination share ONE
+Python pass per document: the zero-shuffle Arrow gram-stats kernel
+(textstats._gram_stats_table) emits the top n-gram counts and the
+distinct gram hashes together. The repetition flag is a per-row
+expression over its counts and rides as a group key through the
+decontamination aggregation, which broadcasts the benchmark gram set
+so the big side joins map-side. The final assembly is one id-keyed
+join; at scale the doc id is the natural table key so it
+co-partitions with the source.
 """
 
 from __future__ import annotations
@@ -60,22 +63,20 @@ def curate(
         .drop("fp", "_fp", "_keep_id")
     )
 
-    rep = ts.top_ngram_stats(docs, id_col, text_col).select(
+    # one kernel pass feeds both flags; rep_keep rides the decontam
+    # groupBy as a key. < 2 tokens: every top{n}_frac is 0.0, rep_keep 1
+    ns = (2, 3, 4)
+    k = ts._gram_stats_table(docs, id_col, text_col, ns, (), hash_n=contam_n).select(
         "id",
-        ts.repetition_keep(
-            F.col("top2_frac"), F.col("top3_frac"), F.col("top4_frac")
-        )
-        .cast("int")
-        .alias("rep_keep"),
+        "grams",
+        ts.repetition_keep(*ts._top_fracs(ns)).cast("int").alias("rep_keep"),
     )
-    decon = dc.ngram_contamination(
-        docs, bench, id_col, text_col, n=contam_n, max_frac=contam_max
-    ).select("id", F.col("keep").alias("decon_keep"))
+    decon = dc._contamination(
+        k, bench, text_col, contam_n, contam_max, keys=("rep_keep",)
+    ).select("id", "rep_keep", F.col("keep").alias("decon_keep"))
 
     out = (
-        base.join(rep, "id", "left")
-        .join(decon, "id", "left")
-        # docs with < 2 tokens produce no repetition row: trivially clean
+        base.join(decon, "id", "left")
         .withColumn("rep_keep", F.coalesce("rep_keep", F.lit(1)))
         .withColumn("decon_keep", F.coalesce("decon_keep", F.lit(1)))
     )

@@ -12,20 +12,25 @@ plan — no job at plan-build time). The only
 wide operations are the per-document aggregation of hit counts (one
 shuffle keyed by doc id) and the benchmark distinct (tiny). Grams are
 md5-hashed before the join so the broadcast carries 32-byte keys, not
-raw n-gram text.
+raw n-gram text. Both sides hash with the one Python n-gram pass,
+``textstats._gram_stats_table(..., hash_n=n)``; ``curation.curate``
+builds that table once and reads its repetition stats and its gram
+hashes from the same pass.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from . import textstats as ts
+
 
 def _distinct_grams(text, n: int):
     """Distinct whitespace-token n-grams of a text column, md5-hashed:
-    the SQL reference of ``_distinct_grams_udf``."""
+    the SQL reference of the ``grams`` column of
+    ``textstats._gram_stats_table(..., hash_n=n)``."""
     toks = F.split(F.lower(F.trim(text)), r"\s+")
     grams = F.when(
         F.size(toks) >= n,
@@ -35,37 +40,6 @@ def _distinct_grams(text, n: int):
         ),
     ).otherwise(F.expr("cast(array() as array<string>)"))
     return F.array_distinct(grams)
-
-
-def _distinct_grams_udf(n: int):
-    """Arrow-batched kernel form of ``_distinct_grams``, which stays as
-    its SQL reference (pinned by
-    tests/test_operators.py::test_decontam_gram_kernel_matches_sql):
-    the split contract of ``kernels.tokens``, NULL text -> no grams
-    (size(NULL) is NULL), ``array_distinct`` keeps the first occurrence
-    -> ``dict.fromkeys``, md5 over UTF-8 bytes on both sides.
-
-    Motivation (guide §4.2): the SQL form is an interpreted
-    higher-order md5 fold — measured 28.8s single-task for the sf1.0
-    training side where the kernel form does the same work in ~2s of
-    total CPU."""
-    import hashlib
-
-    from ..kernels.tokens import ngrams, split_tokens
-
-    @F.pandas_udf("array<string>")
-    def kernel(texts: pd.Series) -> pd.Series:
-        md5 = hashlib.md5
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            grams = dict.fromkeys(ngrams(split_tokens(t), n))
-            out.append([md5(g.encode()).hexdigest() for g in grams])
-        return pd.Series(out)
-
-    return kernel
 
 
 def ngram_contamination(
@@ -94,6 +68,17 @@ def ngram_contamination(
     map-side join. The estimate is conservative — raw input bytes,
     while the broadcast itself carries only distinct 32-byte gram
     hashes."""
+    k = ts._gram_stats_table(train, id_col, text_col, (), (), hash_n=n)
+    return _contamination(k, bench, text_col, n, max_frac, broadcast_max_bench_bytes)
+
+
+def _contamination(
+    k: DataFrame, bench: DataFrame, text_col: str, n: int, max_frac: float,
+    broadcast_max_bench_bytes: int = 512 << 20, keys: tuple = (),
+) -> DataFrame:
+    """``ngram_contamination`` over the train side's
+    ``textstats._gram_stats_table(..., hash_n=n)`` ``k`` (``id``,
+    ``grams``, plus per-document ``keys`` carried as group keys)."""
     try:
         est = int(
             bench._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -103,34 +88,33 @@ def ngram_contamination(
         # exact hazard this gate exists to prevent
         est = broadcast_max_bench_bytes + 1
     hint = broadcast if est <= broadcast_max_bench_bytes else (lambda d: d)
-    # ONE pass over the training side: the gram construction (the
-    # dominant per-row cost) is evaluated once; explode_outer keeps
-    # zero-gram docs; the broadcast LEFT join marks benchmark hits
-    # without dropping clean grams.
-    grams_of = _distinct_grams_udf(n)
-    exploded = train.select(
-        F.col(id_col).alias("id"), grams_of(F.col(text_col)).alias("grams")
-    ).select(
+    # the training side's one Python pass already ran in ``k``; here
+    # explode_outer keeps zero-gram docs and the broadcast LEFT join
+    # marks benchmark hits without dropping clean grams. ``grams`` is a
+    # column of the map operator's output, so neither explode re-runs
+    # the kernel; the bench side projects a constant id (it needs none).
+    exploded = k.select(
         "id",
+        *keys,
         F.size("grams").alias("n_grams"),
         F.explode_outer("grams").alias("gram"),
     )
-    # explode_outer + isNotNull (guide §4.4, the repo-wide rule): a
-    # bare explode's pushed size()>0 filter would re-evaluate the gram
-    # construction. Gram hashes are md5 hex strings, never NULL;
-    # NULL/empty arrays drop in both forms.
     bg = (
-        bench.select(F.explode_outer(grams_of(F.col(text_col))).alias("gram"))
-        .where(F.col("gram").isNotNull())
+        ts._gram_stats_table(
+            bench.select(F.lit(0).alias("_id"), text_col), "_id", text_col,
+            (), (), hash_n=n,
+        )
+        .select(F.explode("grams").alias("gram"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
     out = (
         exploded.join(hint(bg), "gram", "left")
-        .groupBy("id", "n_grams")
+        .groupBy("id", *keys, "n_grams")
         .agg(F.coalesce(F.sum("_hit"), F.lit(0)).cast("long").alias("n_contaminated"))
         .select(
             "id",
+            *keys,
             "n_grams",
             "n_contaminated",
             F.when(F.col("n_grams") <= 0, F.lit(0.0))

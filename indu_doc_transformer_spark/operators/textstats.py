@@ -199,21 +199,28 @@ def _gram_structs(toks: Column, ns: tuple) -> Column:
     return F.flatten(F.array(*[grams_for(n) for n in ns]))
 
 
-def _gram_stats_table(df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tuple):
-    """Arrow-batched per-document n-gram statistics: whitespace tokens
-    -> (id, ntok, chars, max gram count per n in ``ns_top``,
-    duplicated-gram char mass per n in ``ns_dup``) as EXACT INTEGERS —
-    the fraction division and rounding stay in SQL so the kernel is
-    bit-identical to the explode+groupBy builders (parity pinned by
-    tests/test_operators.py::test_gram_stats_fast_matches_sql).
+def _gram_stats_table(
+    df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tuple, hash_n: int | None = None
+):
+    """The only Python n-gram pass: Arrow-batched per-document
+    statistics, whitespace tokens -> (id, ntok, chars, max gram count
+    per n in ``ns_top``, duplicated-gram char mass per n in ``ns_dup``)
+    as EXACT INTEGERS — the fraction division and rounding stay in SQL
+    so the kernel is bit-identical to the explode+groupBy builders
+    (parity pinned by
+    tests/test_operators.py::test_gram_stats_fast_matches_sql). With
+    ``hash_n`` it also emits ``grams``, the decontamination gram set:
+    the distinct md5 hex digests of the ``hash_n``-grams in
+    first-occurrence order (a Counter's keys, as ``dict.fromkeys``),
+    pinned to ``decontam._distinct_grams`` by
+    test_decontam_gram_kernel_matches_sql.
 
     Why it exists: these are PER-DOCUMENT statistics, but the SQL form
     explodes O(tokens x |ns|) gram rows through two shuffles and builds
     each gram with an interpreted higher-order array_join — measured
-    22.6s (top) + 46.4s (dup) for 10k docs at sf0.1. This is a
-    map-only pass (zero shuffles, zero exploded rows) and an order of
-    magnitude faster; at 100 TB it removes the dominant shuffle of the
-    quality layer entirely.
+    22.6s (top) + 46.4s (dup) for 10k docs at sf0.1, 28.8s in one task
+    for the sf1.0 gram hashes. This is a map-only pass (zero shuffles,
+    zero exploded rows) and an order of magnitude faster.
 
     mapInPandas, NOT a scalar pandas_udf: the callers filter on the
     kernel's ntok output, and a filter on a pandas-UDF column gets
@@ -221,58 +228,51 @@ def _gram_stats_table(df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tup
     evaluation per consumer (the distinct_tags lesson) — a map
     OPERATOR is evaluated exactly once, with the filter above it.
     Tokenization is the split contract of ``kernels.tokens`` (the twin
-    of ``_tokens``); NULL text tokenizes as '' (ntok 1), which the
-    callers' ntok filters drop for any n >= 2, as size(NULL) does in SQL."""
+    of ``_tokens``). NULL text tokenizes as '' (ntok 1) for the stats,
+    which the callers' ntok filters drop for any n >= 2, as size(NULL)
+    does in SQL; its ``grams`` is [], as in ``_distinct_grams``."""
     from typing import Iterator
 
     from ..kernels.tokens import ngrams, split_tokens
 
+    wanted = set(ns_top) | set(ns_dup) | ({hash_n} if hash_n else set())
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import hashlib
         from collections import Counter
 
+        md5 = hashlib.md5
         for pdf in batches:
-            ntoks, chars, tops, dups = [], [], [], []
+            ntoks, chars, tops, dups, grams = [], [], [], [], []
             for t in pdf["_t"]:
                 toks = split_tokens(t or "")
+                counts = {n: Counter(ngrams(toks, n)) for n in wanted}
                 ntoks.append(len(toks))
                 chars.append(len(" ".join(toks)))
-                tops.append(
-                    [max(Counter(ngrams(toks, n)).values(), default=0) for n in ns_top]
-                )
-                dup_row = []
-                for n in ns_dup:
-                    c = Counter(ngrams(toks, n))
-                    dup_row.append(sum(cnt * len(g) for g, cnt in c.items() if cnt > 1))
-                dups.append(dup_row)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "ntok": ntoks,
-                    "chars": chars,
-                    "top": tops,
-                    "dup": dups,
-                }
-            )
+                tops.append([max(counts[n].values(), default=0) for n in ns_top])
+                dups.append([sum(cnt * len(g) for g, cnt in counts[n].items() if cnt > 1)
+                             for n in ns_dup])
+                if hash_n:
+                    distinct = counts[hash_n] if t is not None else ()
+                    grams.append([md5(g.encode()).hexdigest() for g in distinct])
+            out = {"id": pdf["id"], "ntok": ntoks, "chars": chars, "top": tops, "dup": dups}
+            yield pd.DataFrame({**out, "grams": grams} if hash_n else out)
 
     id_type = dict(df.dtypes)[id_col]
     pruned = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
     return pruned.mapInPandas(
         kernel,
         schema=f"id {id_type}, ntok long, chars long, "
-        "top array<long>, dup array<long>",
+        "top array<long>, dup array<long>"
+        + (", grams array<string>" if hash_n else ""),
     )
 
 
-def top_ngram_stats(df, id_col: str, text_col: str, ns: tuple = (2, 3, 4)):
-    """Gopher repetition rules generalized: the top n-gram fraction for
-    each n in ``ns`` per document, from the Arrow gram-stats kernel —
-    a map-only pass, ZERO shuffles (the statistic is per-document; see
-    ``_gram_stats_table`` for the measured 10x). ``_top_ngram_stats_sql``
-    is its SQL reference."""
-    k = _gram_stats_table(df, id_col, text_col, tuple(ns), ()).where(
-        F.col("ntok") >= 2
-    )
-    cols = [
+def _top_fracs(ns: tuple) -> list:
+    """The ``top{n}_frac`` columns over a ``_gram_stats_table`` built
+    with ``ns_top=ns``: top gram count / number of n-grams, rounded;
+    0.0 for a document with fewer than n tokens."""
+    return [
         F.round(
             F.coalesce(
                 F.when(
@@ -286,7 +286,18 @@ def top_ngram_stats(df, id_col: str, text_col: str, ns: tuple = (2, 3, 4)):
         ).alias(f"top{n}_frac")
         for i, n in enumerate(ns)
     ]
-    return k.select("id", *cols)
+
+
+def top_ngram_stats(df, id_col: str, text_col: str, ns: tuple = (2, 3, 4)):
+    """Gopher repetition rules generalized: the top n-gram fraction for
+    each n in ``ns`` per document, from the Arrow gram-stats kernel —
+    a map-only pass, ZERO shuffles (the statistic is per-document; see
+    ``_gram_stats_table`` for the measured 10x). ``_top_ngram_stats_sql``
+    is its SQL reference."""
+    k = _gram_stats_table(df, id_col, text_col, tuple(ns), ()).where(
+        F.col("ntok") >= 2
+    )
+    return k.select("id", *_top_fracs(tuple(ns)))
 
 
 def _top_ngram_stats_sql(df, id_col: str, text_col: str, ns: tuple = (2, 3, 4)):

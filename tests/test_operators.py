@@ -174,12 +174,14 @@ def test_ann_bruteforce_norm_precompute_parity(spark):
 
 
 def test_decontam_gram_kernel_matches_sql(spark):
-    """The Arrow gram kernel must reproduce its interpreted-SQL
-    reference ``_distinct_grams`` exactly (order + values) — including
-    NULL text, empty text, whitespace-only text, leading/trailing
-    separators, tabs/newlines, non-ASCII, docs shorter than n, and the
-    shared adversarial tokenization cases."""
+    """The ``grams`` column of the Arrow gram-stats kernel
+    (``_gram_stats_table(..., hash_n=n)``) must reproduce its
+    interpreted-SQL reference ``_distinct_grams`` exactly (order +
+    values) — including NULL text, empty text, whitespace-only text,
+    leading/trailing separators, tabs/newlines, non-ASCII, docs shorter
+    than n, and the shared adversarial tokenization cases."""
     from indu_doc_transformer_spark.operators import decontam as dc
+    from indu_doc_transformer_spark.operators import textstats as ts
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
@@ -197,12 +199,14 @@ def test_decontam_gram_kernel_matches_sql(spark):
         spark, spark.createDataFrame(rows, "doc_id bigint, text string")
     )
     for n in (2, 3, 4):
-        k = dc._distinct_grams_udf(n)(F.col("text"))
-        s = dc._distinct_grams(F.col("text"), n)
-        pairs = df.select("doc_id", k.alias("a"), s.alias("b")).collect()
-        assert len(pairs) == len(rows) + len(TOKEN_CASES)
-        for r in pairs:
-            assert list(r.a) == list(r.b), (n, r.doc_id)
+        k = ts._gram_stats_table(df, "doc_id", "text", (), (), hash_n=n)
+        a = {r.id: list(r.grams) for r in k.collect()}
+        b = {
+            r.doc_id: list(r.b)
+            for r in df.select("doc_id", dc._distinct_grams(F.col("text"), n).alias("b")).collect()
+        }
+        assert len(a) == len(rows) + len(TOKEN_CASES)
+        assert a == b, n
 
 
 def test_span_window_kernel_matches_sql(spark):
@@ -855,14 +859,18 @@ def test_null_keys_survive_the_skew_rewrites(spark):
 
     docs = spark.createDataFrame(
         [(1, None), (2, None),
-         (3, "the quick brown fox jumps over lazy dogs today fine")],
+         (3, "the quick brown fox jumps over lazy dogs today fine"),
+         (4, "unrelated")],
         "doc_id long, text string",
     )
     bench = spark.createDataFrame([(9, "unrelated eval words")],
                                   "doc_id long, text string")
-    flags = {r.id: r.dedup_keep for r in cur.curate(docs, bench, contam_n=3).collect()}
-    assert set(flags) == {1, 2, 3}          # nothing vanished
-    assert (flags[1], flags[2]) == (1, 0)   # NULL fps form ONE dedup group
+    flags = {r.id: r for r in cur.curate(docs, bench, contam_n=3).collect()}
+    assert set(flags) == {1, 2, 3, 4}       # nothing vanished
+    assert (flags[1].dedup_keep, flags[2].dedup_keep) == (1, 0)  # ONE NULL-fp group
+    # NULL text and a one-token document have no grams: clean on both
+    for i in (1, 2, 4):
+        assert (flags[i].rep_keep, flags[i].decon_keep) == (1, 1), i
 
     src = spark.createDataFrame(
         [(1, None), (2, None), (3, "a")], "doc_id long, source string"

@@ -148,3 +148,20 @@ def test_text_quality_layer_stays_jvm_side(spark, sf_dir="/root/testdata/sf0.001
     # filter-pushdown duplication of the kernel would show up here
     logical = qe.optimizedPlan().toString()
     assert logical.count("MapInPandas") == 2  # exactly one per stat family
+
+
+def test_curate_tokenizes_each_side_once(spark):
+    """``curate`` runs ONE Python gram pass per input side: the
+    gram-stats kernel feeds both the repetition flag and the
+    decontamination hashes of the training side, and the same kernel
+    hashes the bench side. Counted in the OPTIMIZED LOGICAL plan (see
+    above); no scalar UDF node may remain."""
+    from indu_doc_transformer_spark.operators import curation as cur
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, None)], "doc_id long, text string"
+    )
+    bench = spark.createDataFrame([(9, "c d e f")], "doc_id long, text string")
+    logical = cur.curate(docs, bench)._jdf.queryExecution().optimizedPlan().toString()
+    assert logical.count("MapInPandas") == 2
+    assert "ArrowEvalPython" not in logical and "BatchEvalPython" not in logical
