@@ -204,8 +204,9 @@ def spans_table(extracted: DataFrame) -> DataFrame:
 
 def partition_metrics(extracted: DataFrame) -> DataFrame:
     """Per-partition counter metrics (north rule): docs, rows, faults.
-    ``partition_id`` is the kernel task's id within its chunk, so in a
-    run with several chunks one row sums one task of each chunk."""
+    One row per kernel task: ``pipeline.run_extraction`` numbers the
+    tasks of chunk c from c * (kernel tasks per chunk), so the ids of a
+    run with several chunks do not collide."""
     return extracted.groupBy("partition_id").agg(
         F.count("*").alias("docs"),
         F.sum(F.size("rows")).alias("rows"),

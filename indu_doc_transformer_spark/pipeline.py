@@ -11,8 +11,12 @@ session (plans.checkpoint.work_grain).
 Stage 2 (assemble): read extraction output back (explicit
 materialization barrier: at 100 TB the extraction output is a real
 Iceberg table, and assembly is a separate, restartable job), derive the
-normalized rows, run the relational assembly, write entity tables +
-lineage + metrics.
+normalized rows and run the relational assembly. Its fourteen outputs
+(the ten entity tables, per-partition metrics, extracted text, spans
+and the run metadata) read only the extraction output and the
+assembly's checkpoints, never each other, so they are written as one
+concurrent wave of Spark jobs: one driver thread per output, whose
+stages share the cores under the default FIFO scheduler.
 
 The flagship query and benchmarks drive these two stages.
 """
@@ -20,9 +24,11 @@ The flagship query and benchmarks drive these two stages.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .config import (
     DEFAULT_ASPECTS,
@@ -105,6 +111,14 @@ def run_extraction(
         )
         extracted = pruned.mapInPandas(
             kernel, schema=ex.EXTRACTION_SCHEMA + ", bucket int"
+        ).withColumn(
+            # the kernel's task id restarts at 0 in every chunk; chunk c
+            # (buckets c * chunk_size ..) gets ids from c * kernel_partitions
+            "partition_id",
+            F.expr(
+                f"partition_id + {kernel_partitions}"
+                f" * cast(bucket div {chunk_size} as int)"
+            ),
         )
         # E3 job-level progress/counters: observed metrics ride the
         # write action, no extra pass (plugin.py:176-187 analog)
@@ -166,27 +180,41 @@ def run_assembly(
     config: AspectsConfig = DEFAULT_ASPECTS,
     page_setups: dict = PAGE_SETUPS,
 ) -> dict[str, DataFrame]:
-    """Stage 2: entity tables from the persisted extraction output."""
+    """Stage 2: entity tables from the persisted extraction output.
+
+    ``assemble`` runs first (its checkpoints are eager). Then the ten
+    entity tables, ``metrics_partitions``, ``extracted_text``, ``spans``
+    and ``metadata`` are written at the same time, one thread per
+    output, each calling the module-level ``write_table``. The threads
+    inherit the caller's local properties (job group, description), so
+    cancelling the caller's job group cancels the wave. Every write
+    finishes before this returns or raises; a failure is re-raised
+    after the others finish, the first in output order."""
     extracted = read_table(spark, os.path.join(out_dir, "extracted"))
     rows = ex.rows_table(extracted)
     tables = asm_op.assemble(rows, config)
     # extraction-stage error channel joins the assembly one
     tables["errors"] = tables["errors"].unionByName(ex.errors_table(extracted))
-    for name in ENTITY_TABLES:
-        write_table(tables[name], os.path.join(out_dir, name))
+    outputs = {name: tables[name] for name in ENTITY_TABLES}
     # per-partition counter metrics (north rule)
-    write_table(
-        ex.partition_metrics(extracted), os.path.join(out_dir, "metrics_partitions")
-    )
-    write_table(
-        extracted.select("url", "page_type", "extracted_text"),
-        os.path.join(out_dir, "extracted_text"),
-    )
-    write_table(ex.spans_table(extracted), os.path.join(out_dir, "spans"))
+    outputs["metrics_partitions"] = ex.partition_metrics(extracted)
+    outputs["extracted_text"] = extracted.select("url", "page_type", "extracted_text")
+    outputs["spans"] = ex.spans_table(extracted)
     # run-metadata: the config contract that produced this output
-    write_table(
-        run_metadata(spark, config, page_setups), os.path.join(out_dir, "metadata")
-    )
+    outputs["metadata"] = run_metadata(spark, config, page_setups)
+    with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
+        # one wrapper per thread: each gets its own copy of the caller's
+        # local properties
+        writes = [
+            pool.submit(
+                inheritable_thread_target(spark)(write_table),
+                df,
+                os.path.join(out_dir, name),
+            )
+            for name, df in outputs.items()
+        ]
+    for w in writes:
+        w.result()
     return tables
 
 

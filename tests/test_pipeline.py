@@ -1,11 +1,13 @@
 """Pipeline orchestration: end-to-end outputs + idempotent resume."""
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from indu_doc_transformer_spark import pipeline
+from indu_doc_transformer_spark.operators import extraction as ex
 from indu_doc_transformer_spark.plans.checkpoint import BucketRegistry, run_checkpointed
 from indu_doc_transformer_spark.sources.corpus import corpus_df
 
@@ -113,6 +115,112 @@ def test_derived_grain_small_input_one_chunk(spark, tmp_path):
         )
 
 
+def test_multi_chunk_partition_metrics_one_row_per_kernel_task(spark, tmp_path):
+    """Several chunks: ``partition_id`` numbers the kernel tasks of the
+    whole run, so ``metrics_partitions`` has one row per task of every
+    chunk, and its sums equal the extraction output's."""
+    out = str(tmp_path / "out")
+    stats = pipeline.run_extraction(corpus_df(spark, N), out, num_buckets=8, chunk_size=2)
+    chunk_size, tasks = stats["chunk_size"], stats["kernel_partitions"]
+    assert (stats["processed_chunks"], chunk_size) == (4, 2)
+    extracted = spark.read.parquet(os.path.join(out, "extracted"))
+    by_pid = {}
+    for r in extracted.select("partition_id", "bucket").collect():
+        by_pid.setdefault(r.partition_id, set()).add(r.bucket // chunk_size)
+    # every id belongs to one chunk, and chunk c owns ids c*tasks ..
+    assert all(chunks == {pid // tasks} for pid, chunks in by_pid.items())
+    assert len(by_pid) == stats["processed_chunks"] * tasks
+
+    metrics = ex.partition_metrics(extracted).collect()
+    assert sorted(r.partition_id for r in metrics) == sorted(by_pid)
+    want = extracted.agg(
+        F.count("*"),
+        F.sum(F.size("rows")),
+        F.sum(F.size(F.filter("errors", lambda e: e["severity"] == "FAULT"))),
+    ).first()
+    got = tuple(sum(r[k] for r in metrics) for k in ("docs", "rows", "faults"))
+    assert got == tuple(want) and got[0] == N
+
+
+@pytest.fixture(scope="module")
+def extracted_out(spark, tmp_path_factory):
+    """One extraction output that the wave tests assemble repeatedly."""
+    out = str(tmp_path_factory.mktemp("wave") / "out")
+    pipeline.run_extraction(corpus_df(spark, 40, partitions=4), out, num_buckets=4)
+    return out
+
+
+WAVE_TABLES = pipeline.ENTITY_TABLES + [
+    "metrics_partitions", "extracted_text", "spans", "metadata",
+]
+
+
+def _wait_for_listeners(spark):
+    """Job start/end events reach the status tracker asynchronously."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_run_assembly_wave_failure_waits_for_every_write(spark, extracted_out, monkeypatch):
+    """A failing write is re-raised only after every other write of the
+    wave has finished; no job is left running."""
+    write = pipeline.write_table
+    seen = []
+
+    class Boom(Exception):
+        pass
+
+    def failing_write(df, path, *args, **kwargs):
+        seen.append(os.path.basename(path))
+        if os.path.basename(path) == "links":
+            raise Boom(path)
+        return write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_table", failing_write)
+    for t in WAVE_TABLES:
+        # a table left by another test would hide a missing write
+        shutil.rmtree(os.path.join(extracted_out, t), ignore_errors=True)
+    with pytest.raises(Boom):
+        pipeline.run_assembly(spark, extracted_out)
+    _wait_for_listeners(spark)
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert sorted(seen) == sorted(WAVE_TABLES)
+    for t in WAVE_TABLES:
+        path = os.path.join(extracted_out, t)
+        assert os.path.exists(os.path.join(path, "_SUCCESS")) == (t != "links"), t
+
+
+def test_run_assembly_wave_inherits_job_group(spark, extracted_out, monkeypatch):
+    """Every job of the write wave runs in the caller's job group, at
+    least one per output: cancelling that group cancels the wave."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    assemble = pipeline.asm_op.assemble
+    before_wave = {}
+
+    def assemble_then_count(*args, **kwargs):
+        tables = assemble(*args, **kwargs)
+        _wait_for_listeners(spark)
+        before_wave["jobs"] = set(tracker.getJobIdsForGroup("g"))
+        return tables
+
+    monkeypatch.setattr(pipeline.asm_op, "assemble", assemble_then_count)
+    _wait_for_listeners(spark)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "run_assembly write wave")
+    try:
+        pipeline.run_assembly(spark, extracted_out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    _wait_for_listeners(spark)
+    wave = set(tracker.getJobIdsForGroup("g")) - before_wave["jobs"]
+    assert len(wave) >= len(WAVE_TABLES)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    for t in WAVE_TABLES:
+        assert os.path.exists(os.path.join(extracted_out, t, "_SUCCESS")), t
+
+
 def test_run_metadata_reconstructs_config(spark, tmp_path):
     """Run-metadata table (reference db.py:159-161,413-416): one row
     persisted with the assembly output from which the exact
@@ -141,7 +249,6 @@ def test_entity_tables_roundtrip_equality(spark, tmp_path):
     assembly result (the reference's DB save/load self-check,
     manager.py:505-531)."""
     from indu_doc_transformer_spark.operators import assembly as asm_op
-    from indu_doc_transformer_spark.operators import extraction as ex
 
     docs = corpus_df(spark, 60, partitions=4)
     tables = asm_op.assemble(ex.rows_table(ex.extract(docs, 4)))
@@ -385,7 +492,6 @@ def test_custom_extraction_settings_missing_type_is_error_row(spark):
 
     from indu_doc_transformer_spark.config import (PAGE_SETUPS,
                                                    page_setups_to_json)
-    from indu_doc_transformer_spark.operators import extraction as ex
 
     docs = corpus_df(spark, 40, partitions=2)
     full = ex.extract(docs)
