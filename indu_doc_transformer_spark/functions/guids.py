@@ -12,12 +12,12 @@ quirk (characters of an embedded GUID joined by ':') via
 ``sql_charjoin``. Exact parity is pinned by tests against
 kernels/tagparse.py, which is itself pinned against the reference.
 
-The entity GUIDs come as pyspark Column functions, with SQL string
-templates (``sql_*``) for higher-order-function lambdas where Column
-objects can't reach. The four attribute GUIDs (``*_attribute_guid``)
-are SQL text only: their arguments are SQL expressions and they return
-one, because their only caller is the SQL-text request layer of
-operators/assembly.py.
+The entity GUIDs come twice: as SQL string templates (``sql_*``,
+arguments and result are SQL expressions), which the SQL-text request
+and finisher layers of operators/assembly.py use, and as pyspark Column
+functions for Column-DSL callers. The four attribute GUIDs
+(``*_attribute_guid``) are SQL text only: their only caller is the
+request layer.
 """
 
 from __future__ import annotations
@@ -137,7 +137,45 @@ def link_guid(
     )
 
 
-def pin_chain_expr(pin_col: str, role: str, link_guid_col: str) -> Column:
+def sql_xtarget_guid(tag: str) -> str:
+    """SQL template of ``xtarget_guid``."""
+    return sql_md5_uuid(tag)
+
+
+def sql_aspect_guid(separator: str, value: str) -> str:
+    """SQL template of ``aspect_guid``."""
+    return sql_md5_uuid(f"concat({separator}, {value})")
+
+
+def _sql_or_none(guid: str, none: str) -> str:
+    """A GUID's charjoin, or the ``none`` sentinel for a NULL GUID."""
+    return f"CASE WHEN {guid} IS NULL THEN '{none}' ELSE {sql_guid_charjoin(guid)} END"
+
+
+def sql_connection_guid(src_guid: str, dst_guid: str, through_guid: str) -> str:
+    """SQL template of ``connection_guid``."""
+    return sql_md5_uuid(
+        f"concat('CONN:', {_sql_or_none(src_guid, 'SRC:None')}, ':',"
+        f" {_sql_or_none(dst_guid, 'DEST:None')}, ':',"
+        f" {_sql_or_none(through_guid, 'THROUGH:None')})"
+    )
+
+
+def sql_link_guid(name: str, src_pin: str, dst_pin: str, conn_guid: str) -> str:
+    """SQL template of ``link_guid``. Pin names are user data (they may
+    hold line terminators), so they keep ``sql_charjoin``."""
+
+    def pin(p: str, role: str) -> str:
+        joined = sql_charjoin(f"concat('{role}:', {p})")
+        return f"CASE WHEN {p} IS NULL OR {p} = '' THEN '{role}:None' ELSE {joined} END"
+
+    return sql_md5_uuid(
+        f"concat('LINK:', {name}, ':', {pin(src_pin, 'SRC')}, ':', {pin(dst_pin, 'DEST')},"
+        f" ':', {_sql_or_none(conn_guid, 'PARENT:None')})"
+    )
+
+
+def sql_pin_chain(pin_col: str, role: str, link_guid_col: str) -> str:
     """Expand a ':PIN1:PIN2' pin tag into its chain of pin rows with
     recursively defined GUIDs (connection.py:93-106, god.py:398-422).
 
@@ -157,8 +195,7 @@ def pin_chain_expr(pin_col: str, role: str, link_guid_col: str) -> Column:
         + sql_guid_charjoin(link_guid_col)
         + ")"
     )
-    return F.expr(
-        f"""
+    return f"""
         aggregate(
           reverse(slice(split({pin_col}, ':'), 2, 100000)),
           cast(array() as array<struct<guid:string,name:string,role:string,child_guid:string,link_guid:string>>),
@@ -170,7 +207,11 @@ def pin_chain_expr(pin_col: str, role: str, link_guid_col: str) -> Column:
               {link_guid_col} as link_guid))
         )
         """
-    )
+
+
+def pin_chain_expr(pin_col: str, role: str, link_guid_col: str) -> Column:
+    """``sql_pin_chain`` as a Column."""
+    return F.expr(sql_pin_chain(pin_col, role, link_guid_col))
 
 
 def simple_attribute_guid(name: str, value: str) -> str:

@@ -19,10 +19,10 @@ in-memory dicts row by row, we:
 - finalize with groupBy(guid) merges: max type priority (A4),
   first-wins entities (A1,A5-A8), set-union attachments (A3,A6).
 
-The request branches are SQL text built by plain Python (no JVM
-round trip until ``selectExpr``); the text interpolates constants only
-— column names, map-key and message literals — never row data. The
-finishers (``finish``) use the Column DSL.
+The request branches and the finishers (``finish``) are SQL text built
+by plain Python (no JVM round trip until ``selectExpr``/``where``); the
+text interpolates constants only — column names, map-key and message
+literals — never row data.
 
 Dedup-by-GUID replaces dedup-on-create; Catalyst plans partial/final
 hash aggregation (the reference's sub_god merge, A9) automatically.
@@ -33,13 +33,15 @@ tests/test_assembly.py verifies set-equality of every output table.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_ASPECTS, AspectsConfig
 from ..functions import guids as G
 from ..functions.tags import make_single_aspect_udf, make_tag_parts_udf
-from ..plans.cache import release_local_checkpoint
+from ..plans.cache import register_cache, release_local_checkpoint
 
 ATTR_TYPE = "array<struct<guid:string,name:string,type:string,value_json:string>>"
 EMPTY_ATTRS = f"cast(array() as {ATTR_TYPE})"
@@ -65,21 +67,6 @@ _REQ_STRINGS = (
 _REQ_ATTRS = ("attrs", "link_attrs", "through_attrs", "loc_attrs")
 
 TYPE_PRIORITY = {"cable": 3, "device": 2, "strip": 1, "other": 0}
-
-
-def _pri(type_col: Column) -> Column:
-    c = F.when(type_col == "cable", 3).when(type_col == "device", 2)
-    return c.when(type_col == "strip", 1).otherwise(0)
-
-
-def _pri_name(pri_col: Column) -> Column:
-    c = F.when(pri_col == 3, "cable").when(pri_col == 2, "device")
-    return c.when(pri_col == 1, "strip").otherwise("other")
-
-
-def _concat_str(*parts) -> Column:
-    return F.concat(*[p if isinstance(p, Column) else F.lit(p) for p in parts])
-
 
 # -- request-layer SQL text (constants only, never row data) -----------
 
@@ -173,15 +160,77 @@ def _req(kind: str, **fields: str) -> str:
     return f"struct({', '.join(parts)})"
 
 
+def _fmt(template: str, *exprs: str) -> str:
+    """concat() of a constant ``template`` whose '{}' holes take
+    ``exprs`` in order."""
+    pieces = template.split("{}")
+    parts = [_q(pieces[0])] if pieces[0] else []
+    for e, lit in zip(exprs, pieces[1:]):
+        parts += [e] + ([_q(lit)] if lit else [])
+    return f"concat({', '.join(parts)})"
+
+
 def _skipped(bad: str, ok: str, what: str, *exprs: str) -> str:
     """``ok`` unless ``bad``; then one error request 'row #N skipped: '
     + ``what``, whose '{}' holes take ``exprs`` in order."""
-    pieces = ("row #{} skipped: " + what).split("{}")
-    parts = [_q(pieces[0])]
-    for e, lit in zip(("row_idx",) + exprs, pieces[1:]):
-        parts += [e] + ([_q(lit)] if lit else [])
-    err = _req("error", message=f"concat({', '.join(parts)})")
+    err = _req("error", message=_fmt("row #{} skipped: " + what, "row_idx", *exprs))
     return f"CASE WHEN {bad} THEN array({err}) ELSE {ok} END"
+
+
+# -- finisher SQL text ---------------------------------------------------
+
+
+def _tag_of(pin_tag: str) -> str:
+    """'TAG:PIN1:PIN2' -> 'TAG' (the whole value when it has no ':')."""
+    pos = f"instr({pin_tag}, ':')"
+    return f"CASE WHEN {pos} > 0 THEN substring({pin_tag}, 1, {pos} - 1) ELSE {pin_tag} END"
+
+
+def _pins_of(pin_tag: str) -> str:
+    """'TAG:PIN1:PIN2' -> ':PIN1:PIN2' (NULL when it has no ':')."""
+    pos = f"instr({pin_tag}, ':')"
+    return f"CASE WHEN {pos} > 0 THEN substr({pin_tag}, {pos}) END"
+
+
+def _completed(raw: str, completed: str) -> str:
+    """The kernel-completed tag, NULL for a NULL raw tag or a pin tag
+    (create_xtarget returns None for tags containing ':',
+    god.py:351-354)."""
+    return f"CASE WHEN {raw} IS NULL OR contains({raw}, ':') THEN NULL ELSE {completed} END"
+
+
+# max type priority (A4) as a number and back
+_PRI = (
+    "CASE "
+    + " ".join(f"WHEN target_type = {_q(t)} THEN {p}" for t, p in TYPE_PRIORITY.items() if p)
+    + " ELSE 0 END"
+)
+_PRI_NAME = (
+    "CASE "
+    + " ".join(f"WHEN pri = {p} THEN {_q(t)}" for t, p in TYPE_PRIORITY.items() if p)
+    + " ELSE 'other' END"
+)
+
+
+def _warnings(
+    df: DataFrame, message: str, url: str = "url", page_no: str = "page_no"
+) -> DataFrame:
+    """The error-table rows (url, page_no, 'WARNING', message) of ``df``."""
+    return df.selectExpr(
+        f"{url} AS url", f"{page_no} AS page_no", "'WARNING' AS severity",
+        f"{message} AS message",
+    )
+
+
+def _attached(df: DataFrame, object_guid: str, attrs: str) -> DataFrame:
+    """(object_guid, attribute_guid) for every attribute in ``attrs``."""
+    return df.selectExpr(
+        f"{object_guid} AS object_guid", f"explode({attrs}) AS a"
+    ).selectExpr("object_guid", "a.guid AS attribute_guid")
+
+
+def _union(*dfs: DataFrame) -> DataFrame:
+    return reduce(DataFrame.unionByName, dfs)
 
 
 class Assembler:
@@ -483,13 +532,9 @@ class Assembler:
         rows = rows.select(
             "url", "page_no", "page_type", "footer_tags", "row_idx", "cols", "loc_repr"
         )
-        parts = [self._branch(rows, pt) for pt in self.HANDLED_PAGE_TYPES]
-        reqs = parts[0]
-        for p in parts[1:]:
-            reqs = reqs.unionByName(p)
-        return reqs
+        return _union(*[self._branch(rows, pt) for pt in self.HANDLED_PAGE_TYPES])
 
-    def assemble(self, rows: DataFrame) -> dict[str, DataFrame]:
+    def assemble(self, rows: DataFrame, cache: list | None = None) -> dict[str, DataFrame]:
         """Materializes every shared intermediate once, before any
         output is written: the rows input and the exploded requests
         (eager localCheckpoints), the two tag-parser results (eager
@@ -498,7 +543,13 @@ class Assembler:
         errors union is coalesced too. At warehouse scale the same role
         is played by materializing stage tables. ``finish(reqs,
         persist=False)`` is the all-lazy finisher over a requests table
-        built elsewhere."""
+        built elsewhere.
+
+        ``cache`` follows the plans.cache contract: pass a list to
+        receive the two tag checkpoints and the conn_all/xall caches
+        and release them (``temp_caches``) once the tables are written.
+        The requests checkpoint is not handed over: it is the table
+        ``finish`` received, which callers may still read."""
         # materialize the branch INPUT once (guide §2.4 "two
         # operations keyed the same way can share one pass"): the
         # nine per-type branches each re-run the upstream
@@ -531,110 +582,87 @@ class Assembler:
         # release its blocks now instead of holding a second copy
         # of the corpus in executor storage until context cleanup
         release_local_checkpoint(rows)
-        return self.finish(reqs)
+        return self.finish(reqs, cache=cache)
 
-    def finish(self, reqs: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
+    def finish(
+        self, reqs: DataFrame, persist: bool = True, cache: list | None = None
+    ) -> dict[str, DataFrame]:
         """Entity tables from a (possibly persisted/read-back) requests
-        stage table — the God-merge finisher layer."""
+        stage table — the God-merge finisher layer.
 
-        handler_errors = reqs.where(F.col("kind") == "error").select(
-            "url", "page_no", F.lit("WARNING").alias("severity"),
-            F.col("message").alias("message"),
-        )
-        attr_pool = reqs.select("attrs", "link_attrs", "through_attrs", "loc_attrs")
-        xreq = reqs.where(F.col("kind") == "xreq")
-        aspect_req = reqs.where(F.col("kind") == "aspect")
+        Every derived frame is SQL text applied with ``selectExpr`` /
+        ``where`` (constants only, never row data), so building the
+        plans costs a few hundred JVM round trips. ``persist=True``
+        (``assemble``) parses the tags in two eager localCheckpoints
+        and persists conn_all/xall, handing each handle to ``cache``
+        when given; ``persist=False`` submits no job."""
+        n = reqs.sparkSession.sparkContext.defaultParallelism
+
+        def kind(k: str) -> DataFrame:
+            return reqs.where(f"kind = {_q(k)}")
+
+        def checkpoint(df: DataFrame) -> DataFrame:
+            if not persist:
+                return df
+            df = df.localCheckpoint(eager=True)
+            if cache is not None:
+                cache.append(df)
+            return df
 
         # ---- create_connection_with_link guards (god.py:507-533) ----
-        def split_pin(col: Column):
-            pos = F.instr(col, ":")
-            tag = F.when(pos > 0, F.substring(col, 1, pos - 1)).otherwise(col)
-            pin = F.when(pos > 0, F.substr(col, pos)).otherwise(F.lit(None))
-            return tag, pin
-
-        cwl = reqs.where(F.col("kind") == "cwl")
-        s_tag, s_pin = split_pin(F.col("src_pin_tag"))
-        d_tag, d_pin = split_pin(F.col("dst_pin_tag"))
-        sc_tag, _ = split_pin(F.col("src_pin_tag_c"))
-        dc_tag, _ = split_pin(F.col("dst_pin_tag_c"))
-        cwl = (
-            cwl.withColumn("src_tag", s_tag)
-            .withColumn("src_pin", s_pin)
-            .withColumn("dst_tag", d_tag)
-            .withColumn("dst_pin", d_pin)
-            .withColumn("src_tag_c", sc_tag)
-            .withColumn("dst_tag_c", dc_tag)
+        cwl = kind("cwl").selectExpr(
+            "url", "page_no", "footer_tags", "through_tag", "through_tag_c",
+            f"{_tag_of('src_pin_tag')} AS src_tag",
+            f"{_tag_of('src_pin_tag_c')} AS src_tag_c",
+            f"{_tag_of('dst_pin_tag')} AS dst_tag",
+            f"{_tag_of('dst_pin_tag_c')} AS dst_tag_c",
+            f"{_pins_of('src_pin_tag')} AS src_pin",
+            f"{_pins_of('dst_pin_tag')} AS dst_pin",
+            "loc_attrs", "link_attrs",
         )
-        no_pins = (
-            F.col("src_pin").isNull() | (F.col("src_pin") == "")
-            | F.col("dst_pin").isNull() | (F.col("dst_pin") == "")
+        no_pins = "src_pin IS NULL OR src_pin = '' OR dst_pin IS NULL OR dst_pin = ''"
+        pin_errors = _warnings(
+            cwl.where(no_pins),
+            _fmt(
+                "Linked connection where one/no pins specified: `{}` `{}`",
+                "coalesce(src_pin, 'None')", "coalesce(dst_pin, 'None')",
+            ),
         )
-        pin_errors = cwl.where(no_pins).select(
-            "url", "page_no", F.lit("WARNING").alias("severity"),
-            _concat_str(
-                "Linked connection where one/no pins specified: `",
-                F.coalesce(F.col("src_pin"), F.lit("None")), "` `",
-                F.coalesce(F.col("dst_pin"), F.lit("None")), "`",
-            ).alias("message"),
+        cwl = cwl.where(f"NOT ({no_pins})")
+        no_tags = "src_tag = '' OR dst_tag = ''"
+        tag_errors = _warnings(
+            cwl.where(no_tags),
+            _fmt("Linked connection where one/no targets specified: `{}` `{}`",
+                 "src_tag", "dst_tag"),
         )
-        cwl = cwl.where(~no_pins)
-        no_tags = (F.col("src_tag") == "") | (F.col("dst_tag") == "")
-        tag_errors = cwl.where(no_tags).select(
-            "url", "page_no", F.lit("WARNING").alias("severity"),
-            _concat_str(
-                "Linked connection where one/no targets specified: `",
-                F.col("src_tag"), "` `", F.col("dst_tag"), "`",
-            ).alias("message"),
-        )
-        cwl = cwl.where(~no_tags)
+        cwl = cwl.where(f"NOT ({no_tags})")
 
         # ---- connections (both paths) --------------------------------
-        base_cols = ["url", "page_no", "footer_tags"]
-        cwl_conn = cwl.select(
-            *base_cols, "through_tag", "through_tag_c",
-            "src_tag", "src_tag_c", "dst_tag", "dst_tag_c",
-            F.col("loc_attrs").alias("through_attrs"), "loc_attrs",
-            "src_pin", "dst_pin", "link_attrs",
-            F.lit(True).alias("with_link"),
+        # an empty through tag is no through tag ('' is falsy in
+        # god.py:484-489)
+        conn_cols = (
+            "url", "page_no", "footer_tags", "nullif(through_tag, '') AS through_tag",
+            "through_tag_c", "src_tag", "src_tag_c", "dst_tag", "dst_tag_c",
         )
-        conn_only = reqs.where(F.col("kind") == "conn").select(
-            *base_cols, "through_tag", "through_tag_c",
-            "src_tag", "src_tag_c", "dst_tag", "dst_tag_c",
-            "through_attrs", "loc_attrs",
-            F.lit(None).cast("string").alias("src_pin"),
-            F.lit(None).cast("string").alias("dst_pin"),
-            F.expr(EMPTY_ATTRS).alias("link_attrs"),
-            F.lit(False).alias("with_link"),
-        )
-        conn_all = cwl_conn.unionByName(conn_only)
-
-        # normalize empty through -> null ('' is falsy in god.py:484-489)
-        conn_all = conn_all.withColumn(
-            "through_tag",
-            F.when(F.col("through_tag") == "", None).otherwise(F.col("through_tag")),
-        )
-
+        conn_all = cwl.selectExpr(
+            *conn_cols, "loc_attrs AS through_attrs", "loc_attrs",
+            "src_pin", "dst_pin", "link_attrs", "true AS with_link",
+        ).unionByName(kind("conn").selectExpr(
+            *conn_cols, "through_attrs", "loc_attrs",
+            "CAST(NULL AS STRING) AS src_pin", "CAST(NULL AS STRING) AS dst_pin",
+            f"{EMPTY_ATTRS} AS link_attrs", "false AS with_link",
+        ))
         # completed tags come from the extraction kernel ('_c:' columns).
-        # Pin-tag prohibition: create_xtarget returns None for raw tags
-        # containing ':' (god.py:351-354)
-        def completed(raw_col: str, c_col: str):
-            return F.when(
-                F.col(raw_col).isNull() | F.col(raw_col).contains(":"), None
-            ).otherwise(F.col(c_col))
-
-        conn_all = (
-            conn_all.withColumn("through_completed", completed("through_tag", "through_tag_c"))
-            .withColumn("src_completed", completed("src_tag", "src_tag_c"))
-            .withColumn("dst_completed", completed("dst_tag", "dst_tag_c"))
-            .withColumn("through_guid", G.xtarget_guid(F.col("through_completed")))
-            .withColumn("src_guid", G.xtarget_guid(F.col("src_completed")))
-            .withColumn("dst_guid", G.xtarget_guid(F.col("dst_completed")))
-            .withColumn(
-                "conn_guid",
-                G.connection_guid(
-                    F.col("src_guid"), F.col("dst_guid"), F.col("through_guid")
-                ),
-            )
+        # One projection per dependency level, so the text repeats no
+        # expression (each role GUID feeds conn_guid)
+        roles = ("through", "src", "dst")
+        conn_all = conn_all.selectExpr("*", *[
+            f"{_completed(f'{r}_tag', f'{r}_tag_c')} AS {r}_completed" for r in roles
+        ]).selectExpr("*", *[
+            f"{G.sql_xtarget_guid(f'{r}_completed')} AS {r}_guid" for r in roles
+        ])
+        conn_all = conn_all.selectExpr(
+            "*", f"{G.sql_connection_guid('src_guid', 'dst_guid', 'through_guid')} AS conn_guid"
         )
         if persist:
             # feeds connections, links, pins, xtargets (3 roles), lineage
@@ -642,30 +670,21 @@ class Assembler:
             # coalesce first, for the reason reqs is coalesced: the
             # union keeps both children's partitions, the cache freezes
             # that count, and every consumer scan would fan out into it
-            n = reqs.sparkSession.sparkContext.defaultParallelism
-            conn_all = conn_all.coalesce(n).persist()
+            conn_all = register_cache(conn_all.coalesce(n), cache)
 
-        connections = conn_all.select(
-            F.col("conn_guid").alias("guid"), "src_guid", "dst_guid", "through_guid"
+        connections = conn_all.selectExpr(
+            "conn_guid AS guid", "src_guid", "dst_guid", "through_guid"
         ).dropDuplicates(["guid"])
 
         # ---- links + pins --------------------------------------------
-        linked = conn_all.where("with_link").withColumn(
-            "link_name",
-            F.coalesce(F.col("through_tag"), F.lit("virtual_link")),
-        ).withColumn(
-            "link_guid",
-            G.link_guid(
-                F.col("link_name"), F.col("src_pin"), F.col("dst_pin"), F.col("conn_guid")
-            ),
+        link_name = "coalesce(through_tag, 'virtual_link')"
+        linked = conn_all.where("with_link").selectExpr(
+            "*", f"{link_name} AS link_name",
+            f"{G.sql_link_guid(link_name, 'src_pin', 'dst_pin', 'conn_guid')} AS link_guid",
         )
-
-        links = linked.select(
-            F.col("link_guid").alias("guid"),
-            F.col("link_name").alias("name"),
-            F.col("conn_guid").alias("connection_guid"),
-            F.col("src_pin").alias("src_pin_name"),
-            F.col("dst_pin").alias("dest_pin_name"),
+        links = linked.selectExpr(
+            "link_guid AS guid", "link_name AS name", "conn_guid AS connection_guid",
+            "src_pin AS src_pin_name", "dst_pin AS dest_pin_name",
         ).dropDuplicates(["guid"])
 
         # explode_outer + isNotNull (not bare explode): the implicit
@@ -673,76 +692,65 @@ class Assembler:
         # projection and re-runs BOTH pin-chain md5 folds per row
         # (guide §4.4 duplication — same fix as the branch explode).
         # Chain elements are array_append'ed structs, never NULL.
+        chains = (
+            f"concat({G.sql_pin_chain('src_pin', 'src', 'link_guid')},"
+            f" {G.sql_pin_chain('dst_pin', 'dst', 'link_guid')})"
+        )
         pins = (
-            linked.select(
-                F.explode_outer(
-                    F.concat(
-                        G.pin_chain_expr("src_pin", "src", "link_guid"),
-                        G.pin_chain_expr("dst_pin", "dst", "link_guid"),
-                    )
-                ).alias("p")
-            )
-            .where(F.col("p").isNotNull())
-            .select("p.*")
+            linked.selectExpr(f"explode_outer({chains}) AS p")
+            .where("p IS NOT NULL")
+            .selectExpr("p.*")
             .dropDuplicates(["guid"])
         )
 
         # ---- xtargets -------------------------------------------------
-        x_parts = [
-            xreq.withColumn("completed", completed("raw_tag", "raw_tag_c"))
-            .where(F.col("completed").isNotNull())
-            .select(*base_cols, "completed", "target_type", "attrs")
-        ]
-        for role, ttype, attr_col in (
-            ("through", "cable", "through_attrs"),
-            ("src", "device", "loc_attrs"),
-            ("dst", "device", "loc_attrs"),
-        ):
-            x_parts.append(
-                conn_all.where(F.col(f"{role}_completed").isNotNull()).select(
-                    *base_cols,
-                    F.col(f"{role}_completed").alias("completed"),
-                    F.lit(ttype).alias("target_type"),
-                    F.col(attr_col).alias("attrs"),
+        x_cols = ("url", "page_no", "footer_tags")
+        xall = _union(
+            kind("xreq").selectExpr(
+                *x_cols, f"{_completed('raw_tag', 'raw_tag_c')} AS completed",
+                "target_type", "attrs",
+            ).where("completed IS NOT NULL"),
+            *[
+                conn_all.where(f"{role}_completed IS NOT NULL").selectExpr(
+                    *x_cols, f"{role}_completed AS completed",
+                    f"{_q(ttype)} AS target_type", f"{attrs} AS attrs",
                 )
-            )
-        xall = x_parts[0]
-        for p in x_parts[1:]:
-            xall = xall.unionByName(p)
-        xall = xall.withColumn("guid", G.xtarget_guid(F.col("completed")))
+                for role, ttype, attrs in (
+                    ("through", "cable", "through_attrs"),
+                    ("src", "device", "loc_attrs"),
+                    ("dst", "device", "loc_attrs"),
+                )
+            ],
+        ).selectExpr("*", f"{G.sql_xtarget_guid('completed')} AS guid")
         if persist:
             # feeds xtargets, distinct_tags, attachments, lineage; a
             # 4-child union, coalesced before caching like conn_all
-            xall = xall.coalesce(n).persist()
+            xall = register_cache(xall.coalesce(n), cache)
 
         xtargets = (
             xall.groupBy("guid")
-            .agg(
-                F.first("completed").alias("tag"),
-                F.max(_pri(F.col("target_type"))).alias("pri"),
-            )
-            .select("guid", "tag", _pri_name(F.col("pri")).alias("target_type"))
+            .agg(F.expr("first(completed) AS tag"), F.expr(f"max({_PRI}) AS pri"))
+            .selectExpr("guid", "tag", f"{_PRI_NAME} AS target_type")
         )
 
         # invalid-tag warnings: once per unique tag, attributed to the
         # smallest (url, page_no) encounter (deterministic stand-in for
-        # the reference's first-encounter attribution, god.py:288-292)
-        distinct_tags = xall.groupBy(F.col("completed").alias("tag")).agg(
-            F.min(F.struct("url", "page_no")).alias("at")
+        # the reference's first-encounter attribution, god.py:288-292).
+        # Tiny (one row per unique tag) but feeds 3 outputs: parse each
+        # tag once, here, before any write, so no entity plan evaluates
+        # Python (a lazy persist() would run the UDF inside whichever
+        # entity write came first)
+        distinct_tags = checkpoint(
+            xall.selectExpr("completed AS tag", "url", "page_no")
+            .groupBy("tag")
+            .agg(F.expr("min(struct(url, page_no)) AS at"))
+            .withColumn("parts", self.tag_parts(F.col("tag")))
         )
-        distinct_tags = distinct_tags.withColumn("parts", self.tag_parts(F.col("tag")))
-        if persist:
-            # tiny (one row per unique tag) but feeds 3 outputs: parse
-            # each tag once, here, before any write, so no entity plan
-            # evaluates Python (a lazy persist() would run the UDF
-            # inside whichever entity write came first)
-            distinct_tags = distinct_tags.localCheckpoint(eager=True)
-        invalid_errors = distinct_tags.where(F.size("parts") == 0).select(
-            F.col("at.url").alias("url"),
-            F.col("at.page_no").alias("page_no"),
-            F.lit("WARNING").alias("severity"),
-            F.concat(F.lit("Tag is invalid: "), F.col("tag")).alias("message"),
+        invalid_errors = _warnings(
+            distinct_tags.where("size(parts) = 0"),
+            _fmt("Tag is invalid: {}", "tag"), url="at.url", page_no="at.page_no",
         )
+        parsed_tags = distinct_tags.where("size(parts) > 0")
 
         # ---- xtarget <-> aspect relation with sort_order ---------------
         # (W3, reference db_builder/db.py:222-240): aspects per xtarget
@@ -750,143 +758,73 @@ class Assembler:
         # the empty-value aspect; sort_order = position in the flattened
         # enumeration. Derived from distinct_tags (the parts UDF already
         # ran there), so this costs one posexplode, no extra UDF pass.
-        empty_sv = "cast(array() as array<struct<sep:string,value:string>>)"
-
-        def _sep_entries(sep: str) -> Column:
-            # closure factory, NOT `lambda v, s=sep`: pyspark HOF lambda
-            # arity counts default args and would bind s to the index
-            def entry(v: Column) -> Column:
-                return F.struct(F.lit(sep).alias("sep"), v.alias("value"))
-
-            return F.coalesce(
-                F.transform(
-                    F.when(
-                        F.size(F.try_element_at("parts", F.lit(sep))) == 0,
-                        F.array(F.lit("")),
-                    ).otherwise(F.try_element_at("parts", F.lit(sep))),
-                    entry,
-                ),
-                F.expr(empty_sv),
+        def sep_entries(sep: str) -> str:
+            vals = f"try_element_at(parts, {_q(sep)})"
+            return (
+                f"coalesce(transform(CASE WHEN size({vals}) = 0 THEN array('') ELSE {vals} END,"
+                f" v -> struct({_q(sep)} AS sep, v AS value)),"
+                " cast(array() as array<struct<sep:string,value:string>>))"
             )
 
-        flat_parts = F.flatten(
-            F.array(*[_sep_entries(sep) for sep in self.config.separators])
-        )
-        xtarget_aspects = (
-            distinct_tags.where(F.size("parts") > 0)
-            .select("tag", F.posexplode(flat_parts).alias("sort_order", "a"))
-            .select(
-                G.xtarget_guid(F.col("tag")).alias("xtarget_guid"),
-                G.aspect_guid(F.col("a.sep"), F.col("a.value")).alias("aspect_guid"),
-                "sort_order",
-            )
+        flat_parts = f"flatten(array({', '.join(map(sep_entries, self.config.separators))}))"
+        xtarget_aspects = parsed_tags.selectExpr(
+            "tag", f"posexplode({flat_parts}) AS (sort_order, a)"
+        ).selectExpr(
+            f"{G.sql_xtarget_guid('tag')} AS xtarget_guid",
+            f"{G.sql_aspect_guid('a.sep', 'a.value')} AS aspect_guid",
+            "sort_order",
         )
 
         # ---- aspects ----------------------------------------------------
         # from tags: one aspect per (separator, value); empty levels of
         # the priority slice become (sep, '') (god.py:269-286)
-        tag_aspects = (
-            distinct_tags.where(F.size("parts") > 0)
-            .select(F.explode("parts").alias("sep", "vals"))
-            .select(
-                "sep",
-                F.explode(
-                    F.when(F.size("vals") == 0, F.array(F.lit(""))).otherwise(
-                        F.col("vals")
-                    )
-                ).alias("value"),
-            )
+        tag_aspects = parsed_tags.selectExpr("explode(parts) AS (sep, vals)").selectExpr(
+            "sep", "explode(CASE WHEN size(vals) = 0 THEN array('') ELSE vals END) AS value"
         )
-        parsed = aspect_req.withColumn("p", self.single_aspect(F.col("raw_tag")))
-        if persist:
-            # feeds errors, aspects and attachments: parsed once, here
-            parsed = parsed.localCheckpoint(eager=True)
-        aspect_errors = parsed.where(F.col("p.status") != 0).select(
-            "url", "page_no", F.lit("WARNING").alias("severity"),
-            F.when(
-                F.col("p.status") == 1,
-                _concat_str(
-                    "Failed to create aspect with tag: '", F.col("raw_tag"), "'"
-                ),
-            )
-            .otherwise(
-                _concat_str(
-                    "Failed to create aspect with tag: '", F.col("raw_tag"),
-                    "' - has composite structure",
-                )
-            )
-            .alias("message"),
+        # feeds errors, aspects and attachments: parsed once, here
+        parsed = checkpoint(kind("aspect").withColumn("p", self.single_aspect(F.col("raw_tag"))))
+        failed = "Failed to create aspect with tag: '{}'"
+        aspect_errors = _warnings(
+            parsed.where("p.status != 0"),
+            f"CASE WHEN p.status = 1 THEN {_fmt(failed, 'raw_tag')}"
+            f" ELSE {_fmt(failed + ' - has composite structure', 'raw_tag')} END",
         )
-        ok_aspects = parsed.where(F.col("p.status") == 0).select(
-            F.col("p.sep").alias("sep"), F.col("p.value").alias("value"), "attrs"
+        ok_aspects = parsed.where("p.status = 0").selectExpr(
+            "p.sep AS sep", "p.value AS value", "attrs"
         )
-        aspect_attach = ok_aspects.select(
-            G.aspect_guid(F.col("sep"), F.col("value")).alias("object_guid"),
-            F.explode("attrs").alias("a"),
-        ).select("object_guid", F.col("a.guid").alias("attribute_guid"))
-
         aspects = (
-            tag_aspects.unionByName(ok_aspects.select("sep", "value"))
-            .select(
-                G.aspect_guid(F.col("sep"), F.col("value")).alias("guid"),
-                F.col("sep").alias("separator"),
-                "value",
+            tag_aspects.unionByName(ok_aspects.selectExpr("sep", "value"))
+            .selectExpr(
+                f"{G.sql_aspect_guid('sep', 'value')} AS guid", "sep AS separator", "value"
             )
             .dropDuplicates(["guid"])
         )
 
         # ---- attributes registry + attachments -------------------------
         attributes = (
-            attr_pool.select(
-                F.explode(
-                    F.concat("attrs", "link_attrs", "through_attrs", "loc_attrs")
-                ).alias("a")
-            )
-            .select("a.*")
+            reqs.selectExpr("explode(concat(attrs, link_attrs, through_attrs, loc_attrs)) AS a")
+            .selectExpr("a.*")
             .dropDuplicates(["guid"])
         )
-
-        object_attributes = (
-            xall.select(
-                F.col("guid").alias("object_guid"), F.explode("attrs").alias("a")
-            )
-            .select("object_guid", F.col("a.guid").alias("attribute_guid"))
-            .unionByName(
-                linked.select(
-                    F.col("link_guid").alias("object_guid"),
-                    F.explode("link_attrs").alias("a"),
-                ).select("object_guid", F.col("a.guid").alias("attribute_guid"))
-            )
-            .unionByName(aspect_attach)
-            .distinct()
-        )
+        object_attributes = _union(
+            _attached(xall, "guid", "attrs"),
+            _attached(linked, "link_guid", "link_attrs"),
+            _attached(ok_aspects, G.sql_aspect_guid("sep", "value"), "attrs"),
+        ).distinct()
 
         # ---- lineage -----------------------------------------------------
-        lineage = (
-            xall.select(
-                "url", "page_no", F.col("guid").alias("object_guid"),
-                F.lit("xtarget").alias("object_type"),
+        lineage = _union(*[
+            df.selectExpr("url", "page_no", f"{guid} AS object_guid", f"{_q(t)} AS object_type")
+            for df, guid, t in (
+                (xall, "guid", "xtarget"),
+                (conn_all, "conn_guid", "connection"),
+                (linked, "link_guid", "link"),
             )
-            .unionByName(
-                conn_all.select(
-                    "url", "page_no", F.col("conn_guid").alias("object_guid"),
-                    F.lit("connection").alias("object_type"),
-                )
-            )
-            .unionByName(
-                linked.select(
-                    "url", "page_no", F.col("link_guid").alias("object_guid"),
-                    F.lit("link").alias("object_type"),
-                )
-            )
-            .distinct()
-        )
+        ]).distinct()
 
-        errors = (
-            handler_errors.unionByName(pin_errors)
-            .unionByName(tag_errors)
-            .unionByName(invalid_errors)
-            .unionByName(aspect_errors)
+        errors = _union(
+            _warnings(kind("error"), "message"),
+            pin_errors, tag_errors, invalid_errors, aspect_errors,
         )
         if persist:
             # the only entity union with no exchange before its write:
@@ -908,5 +846,7 @@ class Assembler:
         }
 
 
-def assemble(rows: DataFrame, config: AspectsConfig = DEFAULT_ASPECTS) -> dict[str, DataFrame]:
-    return Assembler(config).assemble(rows)
+def assemble(
+    rows: DataFrame, config: AspectsConfig = DEFAULT_ASPECTS, cache: list | None = None
+) -> dict[str, DataFrame]:
+    return Assembler(config).assemble(rows, cache)

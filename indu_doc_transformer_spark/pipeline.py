@@ -39,6 +39,7 @@ from .config import (
 )
 from .operators import assembly as asm_op
 from .operators import extraction as ex
+from .plans.cache import temp_caches
 from .plans.checkpoint import input_bytes, run_checkpointed, work_grain
 from .sources.catalog import read_table, write_table
 
@@ -179,7 +180,7 @@ def run_assembly(
     out_dir: str,
     config: AspectsConfig = DEFAULT_ASPECTS,
     page_setups: dict = PAGE_SETUPS,
-) -> dict[str, DataFrame]:
+) -> None:
     """Stage 2: entity tables from the persisted extraction output.
 
     ``assemble`` runs first (its checkpoints are eager). Then the ten
@@ -189,33 +190,35 @@ def run_assembly(
     inherit the caller's local properties (job group, description), so
     cancelling the caller's job group cancels the wave. Every write
     finishes before this returns or raises; a failure is re-raised
-    after the others finish, the first in output order."""
+    after the others finish, the first in output order. ``assemble``'s
+    tag checkpoints and conn_all/xall caches are released once the wave
+    is over; only its requests checkpoint stays with the session."""
     extracted = read_table(spark, os.path.join(out_dir, "extracted"))
     rows = ex.rows_table(extracted)
-    tables = asm_op.assemble(rows, config)
-    # extraction-stage error channel joins the assembly one
-    tables["errors"] = tables["errors"].unionByName(ex.errors_table(extracted))
-    outputs = {name: tables[name] for name in ENTITY_TABLES}
-    # per-partition counter metrics (north rule)
-    outputs["metrics_partitions"] = ex.partition_metrics(extracted)
-    outputs["extracted_text"] = extracted.select("url", "page_type", "extracted_text")
-    outputs["spans"] = ex.spans_table(extracted)
-    # run-metadata: the config contract that produced this output
-    outputs["metadata"] = run_metadata(spark, config, page_setups)
-    with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
-        # one wrapper per thread: each gets its own copy of the caller's
-        # local properties
-        writes = [
-            pool.submit(
-                inheritable_thread_target(spark)(write_table),
-                df,
-                os.path.join(out_dir, name),
-            )
-            for name, df in outputs.items()
-        ]
-    for w in writes:
-        w.result()
-    return tables
+    with temp_caches() as cache:
+        tables = asm_op.assemble(rows, config, cache=cache)
+        outputs = {name: tables[name] for name in ENTITY_TABLES}
+        # extraction-stage error channel joins the assembly one
+        outputs["errors"] = tables["errors"].unionByName(ex.errors_table(extracted))
+        # per-partition counter metrics (north rule)
+        outputs["metrics_partitions"] = ex.partition_metrics(extracted)
+        outputs["extracted_text"] = extracted.select("url", "page_type", "extracted_text")
+        outputs["spans"] = ex.spans_table(extracted)
+        # run-metadata: the config contract that produced this output
+        outputs["metadata"] = run_metadata(spark, config, page_setups)
+        with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
+            # one wrapper per thread: each gets its own copy of the
+            # caller's local properties
+            writes = [
+                pool.submit(
+                    inheritable_thread_target(spark)(write_table),
+                    df,
+                    os.path.join(out_dir, name),
+                )
+                for name, df in outputs.items()
+            ]
+        for w in writes:
+            w.result()
 
 
 def run_full(

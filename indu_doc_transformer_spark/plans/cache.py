@@ -8,10 +8,11 @@ GC-collects them, so in a long-lived session repeated calls would leak
 executor storage memory.
 
 Contract: every such operator takes an optional ``cache`` list. Pass a
-list to receive the persisted handles and unpersist them once the
-returned plan has been materialized (``temp_caches`` does this for
-you); pass None (the default) when the session is short-lived or the
-caller deliberately keeps the cache warm across calls.
+list to receive the persisted (or eagerly localCheckpoint'ed) handles
+and release them once the returned plan has been materialized
+(``temp_caches`` does this for you); pass None (the default) when the
+session is short-lived or the caller deliberately keeps the cache warm
+across calls.
 """
 
 from __future__ import annotations
@@ -62,3 +63,4 @@ def temp_caches():
                 df.unpersist()
             except Exception:
                 pass
+            release_local_checkpoint(df)

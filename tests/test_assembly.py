@@ -184,6 +184,95 @@ def test_cold_request_build_py4j_round_trips(spark, monkeypatch):
     assert 0 < calls <= 2000
 
 
+def test_cold_finisher_build_py4j_round_trips(spark, monkeypatch):
+    """The finisher frames are SQL text too: a cold lazy ``finish``
+    (fresh Assembler subclass, nothing warmed) stays within 1,000 py4j
+    round trips and submits no Spark job."""
+    import gc
+
+    from py4j.java_gateway import GatewayClient
+
+    class FreshAssembler(asm_op.Assembler):
+        pass
+
+    rows = ex.rows_table(ex.extract(corpus_df(spark, 8, partitions=2), num_partitions=2))
+    reqs = asm_op.Assembler().requests_table(rows)
+    assembler = FreshAssembler()
+    sc = spark.sparkContext
+    calls = 0
+    original = GatewayClient.send_command
+
+    def counting(client, *args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return original(client, *args, **kwargs)
+
+    gc.collect()
+    sc.setJobGroup("cold-finisher-build", "finish(persist=False)")
+    try:
+        monkeypatch.setattr(GatewayClient, "send_command", counting)
+        tables = assembler.finish(reqs, persist=False)
+        monkeypatch.undo()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert len(tables) == 10
+    assert 0 < calls <= 1000
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("cold-finisher-build")) == []
+
+
+def test_sql_guid_templates_match_column_and_kernel(spark):
+    """sql_xtarget_guid / sql_aspect_guid / sql_connection_guid /
+    sql_link_guid equal their Column twins everywhere and
+    kernels/tagparse.py wherever the kernel accepts the input (it has no
+    NULL tag). Pin names go through the per-character charjoin, whose
+    '.' skips line terminators: for a pin name holding one the templates
+    hash the name without it."""
+    from pyspark.sql import functions as F
+
+    from indu_doc_transformer_spark.functions import guids as G
+    from indu_doc_transformer_spark.kernels import tagparse as tp
+
+    g1, g2 = tp.xtarget_guid("=F1+L1-X1"), tp.xtarget_guid("Grüße ✓")
+    cases = [
+        # (tag, sep, value, src_guid, dst_guid, through_guid, name, src_pin, dst_pin)
+        ("=F1+L1-X1", "+", "L1", g1, g2, g1, "W1", ":1", ":2"),
+        ("", "", "", None, None, None, "", "", None),
+        (":", ":", ":", g1, None, g2, ":", ":", "::"),
+        ("Grüße ✓ 日本", "=", "Ω3", None, g2, None, "Kabel ✓", ":Ä1:ü2", ":日"),
+        ("a\nb", "-", "x\ny", g2, g1, None, "virtual_link", ":a\nb", ":c\rd"),
+        (None, None, "v", g1, g2, None, "n", None, ":p"),
+    ]
+    cols = "tag, sep, value, src, dst, thr, name, sp, dp"
+    df = spark.createDataFrame(cases, ", ".join(f"{c} string" for c in cols.split(", ")))
+    c = F.col
+    got = df.select(
+        F.expr(G.sql_xtarget_guid("tag")).alias("x_sql"),
+        G.xtarget_guid(c("tag")).alias("x_col"),
+        F.expr(G.sql_aspect_guid("sep", "value")).alias("a_sql"),
+        G.aspect_guid(c("sep"), c("value")).alias("a_col"),
+        F.expr(G.sql_connection_guid("src", "dst", "thr")).alias("c_sql"),
+        G.connection_guid(c("src"), c("dst"), c("thr")).alias("c_col"),
+        F.expr(G.sql_link_guid("name", "sp", "dp", "src")).alias("l_sql"),
+        G.link_guid(c("name"), c("sp"), c("dp"), c("src")).alias("l_col"),
+    ).collect()
+    assert len(got) == len(cases)
+
+    def no_line_breaks(pin):
+        return None if pin is None else pin.replace("\n", "").replace("\r", "")
+
+    for (tag, sep, value, src, dst, thr, name, sp, dp), r in zip(cases, got):
+        assert (r.x_sql, r.a_sql, r.c_sql, r.l_sql) == (r.x_col, r.a_col, r.c_col, r.l_col)
+        assert r.x_sql == (None if tag is None else tp.xtarget_guid(tag))
+        assert r.a_sql == (None if sep is None else tp.aspect_guid(sep, value))
+        assert r.c_sql == tp.connection_guid(src, dst, thr)
+        assert r.l_sql == tp.link_guid(name, no_line_breaks(sp), no_line_breaks(dp), src)
+    # the line-break case really differs from the kernel's hash
+    assert got[4].l_sql != tp.link_guid("virtual_link", ":a\nb", ":c\rd", g2)
+
+
 def test_quoting_hostile_attributes_match_oracle(spark):
     """Attribute keys and values holding SQL/JSON metacharacters ('
     \\ ` newline) and non-ASCII text pass through the request layer as

@@ -221,6 +221,38 @@ def test_run_assembly_wave_inherits_job_group(spark, extracted_out, monkeypatch)
         assert os.path.exists(os.path.join(extracted_out, t, "_SUCCESS")), t
 
 
+def test_run_assembly_releases_session_state(spark, extracted_out, monkeypatch):
+    """run_assembly releases assemble's tag checkpoints and conn_all/xall
+    caches once the wave is written: the only persistent RDD a call
+    leaves is the requests checkpoint ``finish`` received (still
+    readable), and the CacheManager is empty again."""
+    from indu_doc_transformer_spark.plans.cache import release_local_checkpoint
+
+    jsc = spark.sparkContext._jsc
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    finish = pipeline.asm_op.Assembler.finish
+    requests = []
+
+    def keep_requests(asm, reqs, *args, **kwargs):
+        requests.append(reqs)
+        return finish(asm, reqs, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline.asm_op.Assembler, "finish", keep_requests)
+    spark.catalog.clearCache()
+    for _ in range(2):
+        before = set(jsc.getPersistentRDDs().keySet())
+        pipeline.run_assembly(spark, extracted_out)
+        # other tests' RDDs may be unpersisted by the ContextCleaner at
+        # any time, so only the ids the call adds are checked
+        reqs_id = requests[-1]._jdf.queryExecution().analyzed().rdd().id()
+        assert set(jsc.getPersistentRDDs().keySet()) - before == {reqs_id}
+        assert cache_manager.isEmpty()
+        assert requests[-1].count() > 0
+        release_local_checkpoint(requests[-1])
+    for t in WAVE_TABLES:
+        assert os.path.exists(os.path.join(extracted_out, t, "_SUCCESS")), t
+
+
 def test_run_metadata_reconstructs_config(spark, tmp_path):
     """Run-metadata table (reference db.py:159-161,413-416): one row
     persisted with the assembly output from which the exact
