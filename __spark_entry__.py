@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from indu_doc_transformer_spark.functions.guids import md5_uuid
+from indu_doc_transformer_spark.functions.tags import WHITESPACE
 from indu_doc_transformer_spark.operators import dedup as dd
 from indu_doc_transformer_spark.operators import similarity as sim
 from indu_doc_transformer_spark.operators import textstats as ts
@@ -1751,8 +1752,9 @@ def _cos(a: str, b: str) -> str:
 
 def _charjoin(x: str) -> str:
     """':'.join(characters) — RE2 has no lookbehind, so char-split via
-    regexp_extract_all (the reference's list += str GUID quirk)."""
-    return f"array_to_string(regexp_extract_all({x}, '.'), ':')"
+    regexp_extract_all (the reference's list += str GUID quirk); (?s)
+    so that '.' also matches the line breaks a pin name may hold."""
+    return f"array_to_string(regexp_extract_all({x}, '(?s).'), ':')"
 
 
 def _guarded_md5(x: str) -> str:
@@ -1918,6 +1920,18 @@ _SEP_IDX = (
     "WHEN ':' THEN 3 WHEN '/' THEN 4 WHEN '&' THEN 5 END"
 )
 
+
+def _strip(x: str) -> str:
+    """str.strip(): DuckDB's bare trim(x) keeps \\t, \\n, \\x1c-\\x1f, U+0085, U+2028, ..."""
+    return f"trim({x}, '{WHITESPACE}')"
+
+
+# the tag without its pin, stripped
+_T2 = _strip(
+    "CASE WHEN strpos(tag, ':') > 0 THEN substr(tag, 1, strpos(tag, ':') - 1) ELSE tag END"
+)
+
+
 _PARSE_CTE = f"""
     , xrows AS (
       SELECT url, page_no,
@@ -1940,14 +1954,12 @@ _PARSE_CTE = f"""
              regexp_extract_all(t2, '{_SEPC}') AS seps,
              list_transform(
                list_slice(regexp_split_to_array(t2, '{_SEPC}'), 2, 100000),
-               x -> trim(x)) AS vals,
+               x -> {_strip('x')}) AS vals,
              (len(regexp_extract_all(t2, '{_SEPC}')) > 0
               AND regexp_split_to_array(t2, '{_SEPC}')[1] = '') AS matched
       FROM (
         SELECT tag, at_url, at_page,
-               trim(CASE WHEN strpos(tag, ':') > 0
-                         THEN substr(tag, 1, strpos(tag, ':') - 1)
-                         ELSE tag END) AS t2
+               {_T2} AS t2
         FROM dtags)
     ),
     tvalid AS (
@@ -1959,7 +1971,7 @@ _PARSE_CTE = f"""
     ),
     areq AS (
       SELECT url, page_no, raw_tag, attrs,
-             trim(coalesce(raw_tag, '')) AS t2a
+             {_strip("coalesce(raw_tag, '')")} AS t2a
       FROM reqs WHERE kind = 'aspect'
     ),
     aclass AS (
@@ -1967,7 +1979,7 @@ _PARSE_CTE = f"""
              CASE WHEN NOT (len(aseps) > 0 AND asplit[1] = '') THEN 1
                   WHEN len(aseps) != 1 THEN 2 ELSE 0 END AS status,
              CASE WHEN len(aseps) = 1 AND asplit[1] = '' THEN aseps[1] END AS asep,
-             CASE WHEN len(aseps) = 1 AND asplit[1] = '' THEN trim(asplit[2]) END AS avalue
+             CASE WHEN len(aseps) = 1 AND asplit[1] = '' THEN {_strip('asplit[2]')} END AS avalue
       FROM (
         SELECT *, regexp_extract_all(t2a, '{_SEPC}') AS aseps,
                regexp_split_to_array(t2a, '{_SEPC}') AS asplit
@@ -3648,13 +3660,11 @@ def oracle_sql() -> dict[str, str]:
                  regexp_extract_all(t2, '{_SEPC}') AS seps,
                  list_transform(
                    list_slice(regexp_split_to_array(t2, '{_SEPC}'), 2, 100000),
-                   x -> trim(x)) AS vals,
+                   x -> {_strip('x')}) AS vals,
                  (len(regexp_extract_all(t2, '{_SEPC}')) > 0
                   AND regexp_split_to_array(t2, '{_SEPC}')[1] = '') AS matched
           FROM (SELECT tag,
-                       trim(CASE WHEN strpos(tag, ':') > 0
-                                 THEN substr(tag, 1, strpos(tag, ':') - 1)
-                                 ELSE tag END) AS t2
+                       {_T2} AS t2
                 FROM xt)
         ),
         lv AS (

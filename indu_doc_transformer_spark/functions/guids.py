@@ -45,18 +45,19 @@ def sql_md5_uuid(expr: str) -> str:
 
 
 def sql_charjoin(expr: str) -> str:
-    """SQL template: ':'.join(characters of expr)."""
-    return f"array_join(regexp_extract_all({expr}, '.', 0), ':')"
+    """SQL template: ':'.join(characters of expr). ``(?s)``: '.' also
+    matches line terminators, which a pin name may hold."""
+    return f"array_join(regexp_extract_all({expr}, '(?s).', 0), ':')"
 
 
 def sql_guid_charjoin(expr: str) -> str:
     """``sql_charjoin`` for GUID/hex/keyword inputs ONLY: one lookaround
     regexp_replace instead of per-character extract_all + array_join
     (measured 3.4x; the finisher runs several of these per row).
-    Equivalent to sql_charjoin only when the input cannot contain line
-    terminators ('.' drops them, lookarounds do not) — true for
-    md5_uuid outputs (hex + dashes) and role literals; user-data inputs
-    (pin names) must keep sql_charjoin."""
+    Equivalent to sql_charjoin only when the input holds no line
+    terminator (the lookarounds' '.' does not match one, so no ':' is
+    put next to it) — true for md5_uuid outputs (hex + dashes) and role
+    literals; user-data inputs (pin names) must keep sql_charjoin."""
     return f"regexp_replace({expr}, '(?<=.)(?=.)', ':')"
 
 
@@ -75,7 +76,7 @@ def md5_uuid(col: Column) -> Column:
 
 
 def charjoin(col: Column) -> Column:
-    return F.array_join(F.regexp_extract_all(col, F.lit("."), F.lit(0)), ":")
+    return F.array_join(F.regexp_extract_all(col, F.lit("(?s)."), F.lit(0)), ":")
 
 
 def guid_charjoin(col: Column) -> Column:

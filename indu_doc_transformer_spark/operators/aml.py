@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from ..plans.cache import register_cache
 from ..config import DEFAULT_ASPECTS, AspectsConfig
 from ..functions import guids as G
-from ..functions.tags import make_tag_parts_udf
+from ..functions.tags import sql_flat_parts, sql_tag_parts
 
 MAIN_TREE_NAME = "ECAD"
 
@@ -69,30 +69,6 @@ FRAGMENT_SCHEMA = (
 # ---------------------------------------------------------------------------
 # relational preparation
 # ---------------------------------------------------------------------------
-
-
-def _flat_parts(config: AspectsConfig, seps: list[str]):
-    """parts map -> flattened array<struct<sep,value>> in config order,
-    restricted to ``seps``; empty levels contribute the empty value
-    (same flattening as the xtarget_aspects relation)."""
-    empty_sv = "cast(array() as array<struct<sep:string,value:string>>)"
-
-    def entries(sep: str):
-        def entry(v):
-            return F.struct(F.lit(sep).alias("sep"), v.alias("value"))
-
-        return F.coalesce(
-            F.transform(
-                F.when(
-                    F.size(F.try_element_at("parts", F.lit(sep))) == 0,
-                    F.array(F.lit("")),
-                ).otherwise(F.try_element_at("parts", F.lit(sep))),
-                entry,
-            ),
-            F.expr(empty_sv),
-        )
-
-    return F.flatten(F.array(*[entries(s) for s in seps]))
 
 
 def _attr_rows(tables: dict[str, DataFrame]) -> DataFrame:
@@ -399,10 +375,9 @@ def aml_fragments(
     fragments ARE the export (one XML document per hierarchy root).
     ``cache`` receives the persisted target-join handle (plans.cache
     contract: caller unpersists after materializing)."""
-    parts_udf = make_tag_parts_udf(config)
     attr_rows = _attr_rows(tables)
 
-    tgt = tables["xtargets"].withColumn("parts", parts_udf(F.col("tag")))
+    tgt = tables["xtargets"].withColumn("parts", F.expr(sql_tag_parts("tag", config)))
     tattrs = attr_rows.groupBy(F.col("object_guid").alias("guid")).agg(
         F.collect_list(F.struct("name", "type", "value_json")).alias("attrs")
     )
@@ -433,7 +408,7 @@ def aml_fragments(
 
     per_tree = []
     for name, seps in trees:
-        flat = _flat_parts(config, seps)
+        flat = F.expr(sql_flat_parts("parts", seps))
         rows = (
             tgt.withColumn("flat", flat)
             .where(F.size("flat") > 0)
@@ -455,7 +430,7 @@ def aml_fragments(
 
     # aspect attributes keyed (sep, value), joined per ECAD root
     comp = (
-        tgt.withColumn("flat", _flat_parts(config, config.separators))
+        tgt.withColumn("flat", F.expr(sql_flat_parts("parts", config.separators)))
         .where(F.size("flat") > 0)
         .select(
             F.concat(

@@ -13,7 +13,8 @@ in-memory dicts row by row, we:
   split (T9) are built inside array transforms; each branch is one
   filtered scan + one explode,
 - complete tags against footers in the extraction kernel (the '_c:'
-  columns — no per-row Python here at all),
+  columns) and parse them with the SQL-text tag grammar of
+  functions/tags.py — no Python is evaluated here at all,
 - compute every GUID as a native md5 expression (F8 — join
   elimination: FK assignment never joins, both sides hash),
 - finalize with groupBy(guid) merges: max type priority (A4),
@@ -40,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_ASPECTS, AspectsConfig
 from ..functions import guids as G
-from ..functions.tags import make_single_aspect_udf, make_tag_parts_udf
+from ..functions.tags import _q, sql_flat_parts, sql_single_aspect, sql_tag_parts
 from ..plans.cache import register_cache, release_local_checkpoint
 
 ATTR_TYPE = "array<struct<guid:string,name:string,type:string,value_json:string>>"
@@ -69,11 +70,6 @@ _REQ_ATTRS = ("attrs", "link_attrs", "through_attrs", "loc_attrs")
 TYPE_PRIORITY = {"cable": 3, "device": 2, "strip": 1, "other": 0}
 
 # -- request-layer SQL text (constants only, never row data) -----------
-
-
-def _q(s: str) -> str:
-    """SQL string literal for a constant."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _g(cols: str, name: str) -> str:
@@ -239,8 +235,6 @@ class Assembler:
 
     def __init__(self, config: AspectsConfig = DEFAULT_ASPECTS):
         self.config = config
-        self.tag_parts = make_tag_parts_udf(config)
-        self.single_aspect = make_single_aspect_udf(config)
 
     # -- per-type request builders (each returns array<request> SQL) ----
 
@@ -535,19 +529,17 @@ class Assembler:
         return _union(*[self._branch(rows, pt) for pt in self.HANDLED_PAGE_TYPES])
 
     def assemble(self, rows: DataFrame, cache: list | None = None) -> dict[str, DataFrame]:
-        """Materializes every shared intermediate once, before any
-        output is written: the rows input and the exploded requests
-        (eager localCheckpoints), the two tag-parser results (eager
-        localCheckpoints, so no entity plan evaluates Python), and the
-        conn_all/xall fan-out frames (coalesced, lazily persisted); the
-        errors union is coalesced too. At warehouse scale the same role
-        is played by materializing stage tables. ``finish(reqs,
-        persist=False)`` is the all-lazy finisher over a requests table
-        built elsewhere.
+        """Materializes the rows input and the exploded requests once
+        (eager localCheckpoints) before any output is written, and
+        lazily persists the conn_all/xall/distinct_tags fan-out frames
+        (coalesced); the errors union is coalesced too. At warehouse
+        scale the same role is played by materializing stage tables.
+        ``finish(reqs, persist=False)`` is the all-lazy finisher over a
+        requests table built elsewhere.
 
         ``cache`` follows the plans.cache contract: pass a list to
-        receive the two tag checkpoints and the conn_all/xall caches
-        and release them (``temp_caches``) once the tables are written.
+        receive the conn_all/xall/distinct_tags caches and release them
+        (``temp_caches``) once the tables are written.
         The requests checkpoint is not handed over: it is the table
         ``finish`` received, which callers may still read."""
         # materialize the branch INPUT once (guide §2.4 "two
@@ -592,22 +584,14 @@ class Assembler:
 
         Every derived frame is SQL text applied with ``selectExpr`` /
         ``where`` (constants only, never row data), so building the
-        plans costs a few hundred JVM round trips. ``persist=True``
-        (``assemble``) parses the tags in two eager localCheckpoints
-        and persists conn_all/xall, handing each handle to ``cache``
+        plans costs a few hundred JVM round trips, and no plan evaluates
+        Python. ``persist=True`` (``assemble``) lazily persists
+        conn_all/xall/distinct_tags, handing each handle to ``cache``
         when given; ``persist=False`` submits no job."""
         n = reqs.sparkSession.sparkContext.defaultParallelism
 
         def kind(k: str) -> DataFrame:
             return reqs.where(f"kind = {_q(k)}")
-
-        def checkpoint(df: DataFrame) -> DataFrame:
-            if not persist:
-                return df
-            df = df.localCheckpoint(eager=True)
-            if cache is not None:
-                cache.append(df)
-            return df
 
         # ---- create_connection_with_link guards (god.py:507-533) ----
         cwl = kind("cwl").selectExpr(
@@ -735,17 +719,16 @@ class Assembler:
 
         # invalid-tag warnings: once per unique tag, attributed to the
         # smallest (url, page_no) encounter (deterministic stand-in for
-        # the reference's first-encounter attribution, god.py:288-292).
-        # Tiny (one row per unique tag) but feeds 3 outputs: parse each
-        # tag once, here, before any write, so no entity plan evaluates
-        # Python (a lazy persist() would run the UDF inside whichever
-        # entity write came first)
-        distinct_tags = checkpoint(
+        # the reference's first-encounter attribution, god.py:288-292)
+        distinct_tags = (
             xall.selectExpr("completed AS tag", "url", "page_no")
             .groupBy("tag")
             .agg(F.expr("min(struct(url, page_no)) AS at"))
-            .withColumn("parts", self.tag_parts(F.col("tag")))
+            .selectExpr("*", f"{sql_tag_parts('tag', self.config)} AS parts")
         )
+        if persist:
+            # tiny (one row per unique tag) but feeds 3 outputs
+            distinct_tags = register_cache(distinct_tags.coalesce(n), cache)
         invalid_errors = _warnings(
             distinct_tags.where("size(parts) = 0"),
             _fmt("Tag is invalid: {}", "tag"), url="at.url", page_no="at.page_no",
@@ -756,17 +739,9 @@ class Assembler:
         # (W3, reference db_builder/db.py:222-240): aspects per xtarget
         # enumerated in config separator order; empty levels contribute
         # the empty-value aspect; sort_order = position in the flattened
-        # enumeration. Derived from distinct_tags (the parts UDF already
-        # ran there), so this costs one posexplode, no extra UDF pass.
-        def sep_entries(sep: str) -> str:
-            vals = f"try_element_at(parts, {_q(sep)})"
-            return (
-                f"coalesce(transform(CASE WHEN size({vals}) = 0 THEN array('') ELSE {vals} END,"
-                f" v -> struct({_q(sep)} AS sep, v AS value)),"
-                " cast(array() as array<struct<sep:string,value:string>>))"
-            )
-
-        flat_parts = f"flatten(array({', '.join(map(sep_entries, self.config.separators))}))"
+        # enumeration. Derived from distinct_tags' parts, so this costs
+        # one posexplode.
+        flat_parts = sql_flat_parts("parts", self.config.separators)
         xtarget_aspects = parsed_tags.selectExpr(
             "tag", f"posexplode({flat_parts}) AS (sort_order, a)"
         ).selectExpr(
@@ -781,8 +756,9 @@ class Assembler:
         tag_aspects = parsed_tags.selectExpr("explode(parts) AS (sep, vals)").selectExpr(
             "sep", "explode(CASE WHEN size(vals) = 0 THEN array('') ELSE vals END) AS value"
         )
-        # feeds errors, aspects and attachments: parsed once, here
-        parsed = checkpoint(kind("aspect").withColumn("p", self.single_aspect(F.col("raw_tag"))))
+        parsed = kind("aspect").selectExpr(
+            "*", f"{sql_single_aspect('raw_tag', self.config.separators)} AS p"
+        )
         failed = "Failed to create aspect with tag: '{}'"
         aspect_errors = _warnings(
             parsed.where("p.status != 0"),

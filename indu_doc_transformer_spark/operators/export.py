@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_ASPECTS, AspectsConfig
-from ..functions.tags import make_tag_parts_udf
+from ..functions.tags import sql_tag_parts
 
 
 def aspect_tree(
@@ -25,8 +25,8 @@ def aspect_tree(
     grouping over the first `depth` hierarchy levels with the tag set
     collected at each leaf — the manual-rollup-as-groupBy recast."""
     seps = config.separators[:depth]
-    # tag -> parts map via the same pandas UDF the assembly layer uses
-    df = xtargets.withColumn("parts", make_tag_parts_udf(config)(F.col("tag")))
+    # tag -> parts map via the same tag grammar the assembly layer uses
+    df = xtargets.withColumn("parts", F.expr(sql_tag_parts("tag", config)))
     levels = [
         F.concat(
             F.lit(sep),
@@ -49,7 +49,6 @@ def aspect_tree(
 
 def stats(tables: dict[str, DataFrame]) -> DataFrame:
     """Entity counts (manager.py:350-382): (table, n)."""
-    spark = next(iter(tables.values())).sparkSession
     parts = [
         df.groupBy().count().select(F.lit(name).alias("table"), F.col("count").alias("n"))
         for name, df in tables.items()

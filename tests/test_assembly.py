@@ -15,10 +15,17 @@ N_DOCS = 150
 
 
 @pytest.fixture(scope="module")
-def tables(spark):
+def assembled(spark):
+    """(the ten tables, assemble's cached frames)."""
     docs = corpus_df(spark, N_DOCS, partitions=8)
     extracted = ex.extract(docs, num_partitions=8)
-    return asm_op.assemble(ex.rows_table(extracted))
+    cache = []
+    return asm_op.assemble(ex.rows_table(extracted), cache=cache), cache
+
+
+@pytest.fixture(scope="module")
+def tables(assembled):
+    return assembled[0]
 
 
 @pytest.fixture(scope="module")
@@ -28,15 +35,30 @@ def results(tables):
     return collected, oracle
 
 
-def test_entity_plans_evaluate_no_python(tables):
-    """assemble parses every tag before it returns: none of the ten
-    entity plans holds a Python-eval node, so writing them starts no
-    Python worker."""
+def _assert_no_python(name, df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, name
+    assert "BatchEvalPython" not in plan, name
+
+
+def test_entity_plans_evaluate_no_python(assembled):
+    """Tags are parsed in SQL: none of the ten entity plans, none of
+    assemble's cached frames (distinct_tags among them) and neither
+    export.aspect_tree nor aml.aml_fragments holds a Python-eval node,
+    so none of them starts a Python worker to parse a tag."""
+    from indu_doc_transformer_spark.operators import aml, export
+    from indu_doc_transformer_spark.plans.cache import temp_caches
+
+    tables, cached = assembled
     assert len(tables) == 10
     for name, df in tables.items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan, name
-        assert "BatchEvalPython" not in plan, name
+        _assert_no_python(name, df)
+    assert any(set(df.columns) == {"tag", "at", "parts"} for df in cached)
+    for i, df in enumerate(cached):
+        _assert_no_python(f"cached {i}: {df.columns}", df)
+    _assert_no_python("aspect_tree", export.aspect_tree(tables["xtargets"]))
+    with temp_caches() as cache:
+        _assert_no_python("aml_fragments", aml.aml_fragments(tables, cache=cache))
 
 
 def test_xtargets_match(results):
@@ -227,9 +249,7 @@ def test_sql_guid_templates_match_column_and_kernel(spark):
     """sql_xtarget_guid / sql_aspect_guid / sql_connection_guid /
     sql_link_guid equal their Column twins everywhere and
     kernels/tagparse.py wherever the kernel accepts the input (it has no
-    NULL tag). Pin names go through the per-character charjoin, whose
-    '.' skips line terminators: for a pin name holding one the templates
-    hash the name without it."""
+    NULL tag), pin names holding line breaks included."""
     from pyspark.sql import functions as F
 
     from indu_doc_transformer_spark.functions import guids as G
@@ -260,17 +280,13 @@ def test_sql_guid_templates_match_column_and_kernel(spark):
     ).collect()
     assert len(got) == len(cases)
 
-    def no_line_breaks(pin):
-        return None if pin is None else pin.replace("\n", "").replace("\r", "")
-
     for (tag, sep, value, src, dst, thr, name, sp, dp), r in zip(cases, got):
         assert (r.x_sql, r.a_sql, r.c_sql, r.l_sql) == (r.x_col, r.a_col, r.c_col, r.l_col)
         assert r.x_sql == (None if tag is None else tp.xtarget_guid(tag))
         assert r.a_sql == (None if sep is None else tp.aspect_guid(sep, value))
         assert r.c_sql == tp.connection_guid(src, dst, thr)
-        assert r.l_sql == tp.link_guid(name, no_line_breaks(sp), no_line_breaks(dp), src)
-    # the line-break case really differs from the kernel's hash
-    assert got[4].l_sql != tp.link_guid("virtual_link", ":a\nb", ":c\rd", g2)
+        assert r.l_sql == tp.link_guid(name, sp, dp, src)
+    assert got[4].l_sql == tp.link_guid("virtual_link", ":a\nb", ":c\rd", g2)
 
 
 def test_quoting_hostile_attributes_match_oracle(spark):

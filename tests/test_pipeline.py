@@ -222,7 +222,7 @@ def test_run_assembly_wave_inherits_job_group(spark, extracted_out, monkeypatch)
 
 
 def test_run_assembly_releases_session_state(spark, extracted_out, monkeypatch):
-    """run_assembly releases assemble's tag checkpoints and conn_all/xall
+    """run_assembly releases assemble's conn_all/xall/distinct_tags
     caches once the wave is written: the only persistent RDD a call
     leaves is the requests checkpoint ``finish`` received (still
     readable), and the CacheManager is empty again."""

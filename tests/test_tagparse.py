@@ -192,3 +192,113 @@ class TestPinHelpers:
 
     def test_normalize_string(self):
         assert tp.normalize_string("  Hello   WORLD  ") == "hello world"
+
+
+# ---------------------------------------------------------------------------
+# the SQL-text grammar (functions/tags.py) and the DuckDB oracle's
+# _PARSE_CTE against the kernels above
+# ---------------------------------------------------------------------------
+
+MULTI = AspectsConfig.from_list(
+    [{"Separator": s, "Aspect": f"L{i}"} for i, s in enumerate(["==", "=", "+", "-"])]
+)
+LONG_FIRST = AspectsConfig.from_list(
+    [{"Separator": s, "Aspect": f"L{i}"} for i, s in enumerate(["===", "==", "=", "+"])]
+)
+SHORT_FIRST = AspectsConfig.from_list(
+    [{"Separator": s, "Aspect": f"L{i}"} for i, s in enumerate(["=", "=="])]
+)
+PARITY_CONFIGS = [CFG, MULTI, LONG_FIRST, SHORT_FIRST]
+PARITY_TAGS = [
+    # every input of the tests above
+    "+A1-M2", "++A=M1=M2", "X=A", "", "=A+", "= A1 +B2 ", "===A==B=C+D", "==A=B",
+    "=F1+L1-M2:1", "-M2", "=F1", "+L1", "&D9", "+OTHER-M2", "=A+B-C", "&X",
+    # empty, whitespace-only, separator-only, text before the first
+    # separator, repeated separators
+    "   ", "\t\r\n", "=", "==", "+-=", "--X", "abc=F1", "x", ":1", "-M1-M2-M3", "=+",
+    # line breaks, U+0085, U+2028 and U+001C around values; U+200B is not
+    # whitespace; non-ASCII text
+    "\t=A\t", "=A\r\n-B", "\x1c=A\x1c", "\u0085=A ", "=A\u2028+\u2028B\u2029",
+    "\u3000=A\xa0", "\u200b=A", "=Grüße+日本-✓", "=A:b:c", "=a'b\\c",
+]
+
+
+def _single_aspect(tag, separators):
+    """The create_aspect status rule over try_parse_tag."""
+    parsed = tp.try_parse_tag(tag, separators)
+    if not parsed:
+        return (None, None, 1)
+    sep, vals = next(iter(parsed.items()))
+    return (sep, vals[0], 0) if len(parsed) == 1 and len(vals) == 1 else (None, None, 2)
+
+
+def test_whitespace_is_str_isspace():
+    from indu_doc_transformer_spark.functions.tags import WHITESPACE
+
+    assert len(WHITESPACE) == len(set(WHITESPACE))
+    assert set(WHITESPACE) == {c for c in map(chr, range(0x110000)) if c.isspace()}
+
+
+def test_sql_grammar_matches_kernel(spark):
+    """sql_tag_parts equals tag_parts and sql_single_aspect equals the
+    create_aspect rule over try_parse_tag, on every case and config
+    (maps compared by contents: collect() does not keep key order)."""
+    from pyspark.sql import functions as F
+
+    from indu_doc_transformer_spark.functions.tags import sql_single_aspect, sql_tag_parts
+
+    df = spark.createDataFrame([(t,) for t in PARITY_TAGS], "t string")
+    cols = []
+    for i, cfg in enumerate(PARITY_CONFIGS):
+        cols.append(F.expr(sql_tag_parts("t", cfg)).alias(f"parts{i}"))
+        cols.append(F.expr(sql_single_aspect("t", cfg.separators)).alias(f"aspect{i}"))
+    rows = df.select("t", *cols).collect()
+    assert [r.t for r in rows] == PARITY_TAGS
+    for r in rows:
+        for i, cfg in enumerate(PARITY_CONFIGS):
+            want = {k: list(v) for k, v in tp.tag_parts(r.t, cfg).items()}
+            assert dict(r[f"parts{i}"]) == want, (r.t, cfg.separators)
+            got = tuple(r[f"aspect{i}"])
+            assert got == _single_aspect(r.t, tuple(cfg.separators)), (r.t, cfg.separators)
+
+
+def test_duckdb_tag_grammar_matches_kernel():
+    """The DuckDB oracle's _PARSE_CTE (DEFAULT_ASPECTS only) parses the
+    same cases like tag_parts and the create_aspect rule, its strips
+    included."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    tags = list(dict.fromkeys(PARITY_TAGS))
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE compl AS SELECT 'u' || i AS url, 1 AS page_no, t AS through_completed,"
+        " NULL::VARCHAR AS src_completed, NULL::VARCHAR AS dst_completed"
+        " FROM (SELECT unnest(?::VARCHAR[]) AS t, generate_subscripts(?::VARCHAR[], 1) AS i)",
+        [tags, tags],
+    )
+    con.execute(
+        "CREATE TABLE reqs AS SELECT 'u' || i AS url, 1 AS page_no, 'aspect' AS kind,"
+        " t AS raw_tag, NULL::VARCHAR AS raw_tag_c, NULL::VARCHAR AS attrs"
+        " FROM (SELECT unnest(?::VARCHAR[]) AS t, generate_subscripts(?::VARCHAR[], 1) AS i)",
+        [tags, tags],
+    )
+    cte = "WITH unused AS (SELECT 1)" + entry._PARSE_CTE
+    valid = {
+        tag: {s: tuple(v for f, v in zip(seps, vals) if f == s) for s in SEPS[: lowest + 1]}
+        for tag, seps, vals, lowest in con.execute(
+            cte + "SELECT tag, seps, vals, lowest FROM tvalid"
+        ).fetchall()
+    }
+    for tag in tags:
+        assert valid.get(tag, {}) == tp.tag_parts(tag, CFG), tag
+    aspects = dict(
+        (raw, (sep, value, status))
+        for raw, status, sep, value in con.execute(
+            cte + "SELECT raw_tag, status, asep, avalue FROM aclass"
+        ).fetchall()
+    )
+    assert sorted(aspects) == sorted(tags)
+    for tag in tags:
+        assert aspects[tag] == _single_aspect(tag, SEPS), tag
