@@ -1110,7 +1110,7 @@ def q_connection_guid(spark, sf_dir):
     """F8/J4 relationally: the reference's recursive connection GUID
     (char-explosion quirk) computed for synthetic supplier pairs —
     join elimination by hashing both sides."""
-    from indu_doc_transformer_spark.functions.guids import connection_guid
+    from indu_doc_transformer_spark.functions.guids import sql_connection_guid
 
     s = _t(spark, sf_dir, "supplier")
     pairs = s.select(
@@ -1120,8 +1120,8 @@ def q_connection_guid(spark, sf_dir):
     )
     return pairs.select(
         "a",
-        connection_guid(
-            F.col("src_guid"), F.col("dst_guid"), F.lit(None).cast("string")
+        F.expr(
+            sql_connection_guid("src_guid", "dst_guid", "cast(null as string)")
         ).alias("conn_guid"),
     )
 

@@ -12,12 +12,12 @@ quirk (characters of an embedded GUID joined by ':') via
 ``sql_charjoin``. Exact parity is pinned by tests against
 kernels/tagparse.py, which is itself pinned against the reference.
 
-The entity GUIDs come twice: as SQL string templates (``sql_*``,
-arguments and result are SQL expressions), which the SQL-text request
-and finisher layers of operators/assembly.py use, and as pyspark Column
-functions for Column-DSL callers. The four attribute GUIDs
-(``*_attribute_guid``) are SQL text only: their only caller is the
-request layer.
+The entity GUIDs are SQL string templates (``sql_*`` and the four
+``*_attribute_guid``; arguments and result are SQL expressions), used
+by the SQL-text request and finisher layers of operators/assembly.py
+and, through ``F.expr``, by the Column-DSL callers (aml, search).
+``md5_uuid`` is the one Column function: it hashes Column-DSL
+expressions (``textstats.fingerprint``, the driver queries).
 """
 
 from __future__ import annotations
@@ -75,76 +75,13 @@ def md5_uuid(col: Column) -> Column:
     return F.overlay(out, dash, F.lit(24), F.lit(0))
 
 
-def charjoin(col: Column) -> Column:
-    return F.array_join(F.regexp_extract_all(col, F.lit("(?s)."), F.lit(0)), ":")
-
-
-def guid_charjoin(col: Column) -> Column:
-    """``charjoin`` for GUID-typed inputs only — see sql_guid_charjoin."""
-    return F.regexp_replace(col, "(?<=.)(?=.)", ":")
-
-
-def xtarget_guid(tag: Column) -> Column:
-    """xtarget.py:141-154: md5-uuid of the tag string."""
-    return md5_uuid(tag)
-
-
-def aspect_guid(separator: Column, value: Column) -> Column:
-    """tag.py:61-75: md5-uuid of 'sep+value'."""
-    return md5_uuid(F.concat(separator, value))
-
-
-def connection_guid(src_guid: Column, dst_guid: Column, through_guid: Column) -> Column:
-    """connection.py:359-372 (char-explosion quirk; None -> sentinel)."""
-    return md5_uuid(
-        F.concat(
-            F.lit("CONN:"),
-            F.when(src_guid.isNull(), F.lit("SRC:None")).otherwise(
-                guid_charjoin(src_guid)
-            ),
-            F.lit(":"),
-            F.when(dst_guid.isNull(), F.lit("DEST:None")).otherwise(
-                guid_charjoin(dst_guid)
-            ),
-            F.lit(":"),
-            F.when(through_guid.isNull(), F.lit("THROUGH:None")).otherwise(
-                guid_charjoin(through_guid)
-            ),
-        )
-    )
-
-
-def link_guid(
-    name: Column, src_pin: Column, dst_pin: Column, conn_guid: Column
-) -> Column:
-    """connection.py:233-247."""
-    return md5_uuid(
-        F.concat(
-            F.lit("LINK:"),
-            name,
-            F.lit(":"),
-            F.when(src_pin.isNull() | (src_pin == ""), F.lit("SRC:None")).otherwise(
-                charjoin(F.concat(F.lit("SRC:"), src_pin))
-            ),
-            F.lit(":"),
-            F.when(dst_pin.isNull() | (dst_pin == ""), F.lit("DEST:None")).otherwise(
-                charjoin(F.concat(F.lit("DEST:"), dst_pin))
-            ),
-            F.lit(":"),
-            F.when(conn_guid.isNull(), F.lit("PARENT:None")).otherwise(
-                guid_charjoin(conn_guid)
-            ),
-        )
-    )
-
-
 def sql_xtarget_guid(tag: str) -> str:
-    """SQL template of ``xtarget_guid``."""
+    """xtarget.py:141-154: md5-uuid of the tag string."""
     return sql_md5_uuid(tag)
 
 
 def sql_aspect_guid(separator: str, value: str) -> str:
-    """SQL template of ``aspect_guid``."""
+    """tag.py:61-75: md5-uuid of 'sep+value'."""
     return sql_md5_uuid(f"concat({separator}, {value})")
 
 
@@ -154,7 +91,7 @@ def _sql_or_none(guid: str, none: str) -> str:
 
 
 def sql_connection_guid(src_guid: str, dst_guid: str, through_guid: str) -> str:
-    """SQL template of ``connection_guid``."""
+    """connection.py:359-372 (char-explosion quirk; None -> sentinel)."""
     return sql_md5_uuid(
         f"concat('CONN:', {_sql_or_none(src_guid, 'SRC:None')}, ':',"
         f" {_sql_or_none(dst_guid, 'DEST:None')}, ':',"
@@ -163,8 +100,8 @@ def sql_connection_guid(src_guid: str, dst_guid: str, through_guid: str) -> str:
 
 
 def sql_link_guid(name: str, src_pin: str, dst_pin: str, conn_guid: str) -> str:
-    """SQL template of ``link_guid``. Pin names are user data (they may
-    hold line terminators), so they keep ``sql_charjoin``."""
+    """connection.py:233-247. Pin names are user data (they may hold
+    line terminators), so they keep ``sql_charjoin``."""
 
     def pin(p: str, role: str) -> str:
         joined = sql_charjoin(f"concat('{role}:', {p})")
@@ -208,11 +145,6 @@ def sql_pin_chain(pin_col: str, role: str, link_guid_col: str) -> str:
               {link_guid_col} as link_guid))
         )
         """
-
-
-def pin_chain_expr(pin_col: str, role: str, link_guid_col: str) -> Column:
-    """``sql_pin_chain`` as a Column."""
-    return F.expr(sql_pin_chain(pin_col, role, link_guid_col))
 
 
 def simple_attribute_guid(name: str, value: str) -> str:

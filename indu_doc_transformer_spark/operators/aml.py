@@ -37,9 +37,7 @@ Deliberate divergences (documented, deterministic):
 
 from __future__ import annotations
 
-import hashlib
 import json
-import uuid
 from typing import Iterator
 from xml.sax.saxutils import escape, quoteattr
 
@@ -51,6 +49,7 @@ from ..plans.cache import register_cache
 from ..config import DEFAULT_ASPECTS, AspectsConfig
 from ..functions import guids as G
 from ..functions.tags import sql_flat_parts, sql_tag_parts
+from ..kernels.tagparse import aspect_guid, md5_uuid
 
 MAIN_TREE_NAME = "ECAD"
 
@@ -85,6 +84,12 @@ def _attr_rows(tables: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+def _top_pin(pin_col: str, role: str):
+    """The top-of-chain pin struct of a link's pin column: the last
+    element of the child-first ``sql_pin_chain`` fold."""
+    return F.expr(f"element_at({G.sql_pin_chain(pin_col, role, 'guid')}, -1)")
+
+
 def _owner_payloads(tables: dict[str, DataFrame], attr_rows: DataFrame) -> DataFrame:
     """Per-owner-xtarget payload array: InternalConnection rows for the
     ``through`` target, InternalPin rows for the endpoints
@@ -93,11 +98,8 @@ def _owner_payloads(tables: dict[str, DataFrame], attr_rows: DataFrame) -> DataF
         F.col("guid").alias("connection_guid"), "src_guid", "dst_guid", "through_guid"
     )
     le = tables["links"].join(cn, "connection_guid")
-    # top-of-chain pin = last element of the child-first fold
-    le = le.withColumn(
-        "src_top", F.element_at(G.pin_chain_expr("src_pin_name", "src", "guid"), -1)
-    ).withColumn(
-        "dst_top", F.element_at(G.pin_chain_expr("dest_pin_name", "dst", "guid"), -1)
+    le = le.withColumn("src_top", _top_pin("src_pin_name", "src")).withColumn(
+        "dst_top", _top_pin("dest_pin_name", "dst")
     )
     link_attrs = attr_rows.groupBy(F.col("object_guid").alias("guid")).agg(
         F.collect_list(F.struct("name", "type", "value_json")).alias("lattrs")
@@ -156,13 +158,13 @@ def internal_links(tables: dict[str, DataFrame]) -> DataFrame:
     le = le.withColumn(
         "src_ext",
         F.concat(
-            F.element_at(G.pin_chain_expr("src_pin_name", "src", "guid"), -1)["guid"],
+            _top_pin("src_pin_name", "src")["guid"],
             F.lit(":ConnectionPoint"),
         ),
     ).withColumn(
         "dst_ext",
         F.concat(
-            F.element_at(G.pin_chain_expr("dest_pin_name", "dst", "guid"), -1)["guid"],
+            _top_pin("dest_pin_name", "dst")["guid"],
             F.lit(":ConnectionPoint"),
         ),
     )
@@ -197,14 +199,7 @@ def internal_links(tables: dict[str, DataFrame]) -> DataFrame:
 def _guid_of(unq: dict) -> str:
     """aml_abstractions.py:103-113 _create_guid: md5 of the sorted-key
     json dump, formatted as a uuid."""
-    data = json.dumps(unq, sort_keys=True)
-    return str(uuid.UUID(bytes=hashlib.md5(data.encode("utf-8")).digest()))
-
-
-def _aspect_content_guid(sep: str, value: str) -> str:
-    return str(
-        uuid.UUID(bytes=hashlib.md5(f"{sep}{value}".encode("utf-8")).digest())
-    )
+    return md5_uuid(json.dumps(unq, sort_keys=True))
 
 
 def _attr_value_str(type_: str, value_json: str) -> str:
@@ -287,7 +282,7 @@ def _serialize_group(
                 node.xml_open = (
                     f"<InternalElement Name={quoteattr(value)} ID=\"{node.aspect_id}\">"
                     f"<SourceObjectInformation OriginID=\"DiamondId\" "
-                    f"SourceObjID=\"{_aspect_content_guid(sep, value)}\"/>"
+                    f"SourceObjID=\"{aspect_guid(sep, value)}\"/>"
                     + _attr_xml("Prefix", sep)
                     + _attr_xml("BMK", node.bmk)
                     + attrs_xml
@@ -445,7 +440,7 @@ def aml_fragments(
     asp_attrs = (
         comp.join(
             attr_rows,
-            G.aspect_guid(F.col("sep"), F.col("value")) == F.col("object_guid"),
+            F.expr(G.sql_aspect_guid("sep", "value")) == F.col("object_guid"),
         )
         .groupBy("root")
         .agg(

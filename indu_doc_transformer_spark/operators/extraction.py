@@ -9,8 +9,10 @@ error channel. Everything downstream (entity assembly, metrics) is
 pure DataFrame algebra on this output.
 
 Scale design (north rule):
-- ``salt_by_url`` repartitions on pmod(xxhash64(url), n) to defuse
-  Zipfian host/domain skew before the kernel stage.
+- Zipfian host/domain skew is defused by hash-partitioning on the full
+  url before the kernel stage: ``salt_by_url`` repartitions on url
+  (``extract(num_partitions=n)``), and ``pipeline.run_extraction``
+  repartitions each chunk on (bucket, url) into its work-grain tasks.
 - the kernel never fails a task: per-document faults become error rows
   (reference E2 pattern, table_extractor.py:203-215).
 - input column pruning: only (url, warc_ts, html, lang) are read, so
@@ -43,7 +45,7 @@ def make_extract_batches(page_setups_json: str | None = None):
     worker parses it once. None keeps the built-ins with zero parse
     cost."""
 
-    def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # import inside the worker: keeps the closure tiny for pickling
         from pyspark import TaskContext
 
@@ -100,12 +102,7 @@ def make_extract_batches(page_setups_json: str | None = None):
                 out["errors"].append([(sev, msg) for sev, msg in r["errors"]])
             yield pd.DataFrame(out)
 
-    return _extract_batches
-
-
-# the default-config kernel instance (pipeline / bench / tests import
-# this name directly)
-_extract_batches = make_extract_batches()
+    return extract_batches
 
 
 def salt_by_url(df: DataFrame, num_partitions: int) -> DataFrame:
@@ -132,12 +129,9 @@ def extract(
     pruned = docs.select(*cols)
     if num_partitions:
         pruned = salt_by_url(pruned, num_partitions)
-    kernel = (
-        _extract_batches
-        if page_setups_json is None
-        else make_extract_batches(page_setups_json)
+    return pruned.mapInPandas(
+        make_extract_batches(page_setups_json), schema=EXTRACTION_SCHEMA
     )
-    return pruned.mapInPandas(kernel, schema=EXTRACTION_SCHEMA)
 
 
 # ------------------------------------------------------------------
@@ -239,71 +233,15 @@ def extract_from_warc(
     materialized anyway (the warehouse layout); use this when crawl
     archives feed extraction directly. Parity with the chained form is
     test-pinned."""
-    import zlib
+    from ..sources.warc import _file_source, _is_local, warc_frames
 
-    from ..sources.warc import _file_record_stream, _file_source, _is_local
-
-    local = _is_local(path)
-    base_kernel = (
-        _extract_batches
-        if page_setups_json is None
-        else make_extract_batches(page_setups_json)
+    kernel = make_extract_batches(page_setups_json)
+    src = _file_source(spark, path, _is_local(path), max_concurrent_files)
+    # the kernel reads url/warc_ts/html/lang only: the frames' warc_file
+    # column stays in the worker, like the html
+    return src.mapInPandas(
+        lambda batches: kernel(warc_frames(batches)), schema=EXTRACTION_SCHEMA
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def record_frames():
-            """Adapt the archive stream to the (url, warc_ts, html,
-            lang) frames the extraction kernel consumes, flushing
-            every ~64 MiB of html so memory stays bounded."""
-            flush_bytes = 64 << 20
-            urls, tss, htmls, langs = [], [], [], []
-            pending = 0
-
-            def flush():
-                nonlocal pending
-                out = pd.DataFrame(
-                    {
-                        "url": list(urls),
-                        "warc_ts": pd.to_datetime(
-                            pd.Series(tss, dtype="object"),
-                            utc=True, errors="coerce",
-                        ).dt.tz_localize(None),
-                        "html": list(htmls),
-                        "lang": list(langs),
-                    }
-                )
-                urls.clear(); tss.clear(); htmls.clear(); langs.clear()
-                pending = 0
-                return out
-
-            for pdf in batches:
-                contents = pdf["content"] if "content" in pdf.columns else None
-                for i, p in enumerate(pdf["path"]):
-                    content = None if contents is None else contents.iloc[i]
-                    # open OUTSIDE the salvage try: an unopenable
-                    # archive fails the task loudly whatever the error
-                    # class (ADVICE r5; same rule as read_warc)
-                    stream = _file_record_stream(p, content)
-                    try:
-                        for rec in stream:
-                            if rec.get("bad"):
-                                continue
-                            urls.append(rec["url"])
-                            tss.append(rec["ts"])
-                            htmls.append(rec["html"])
-                            langs.append(rec["lang"])
-                            pending += len(rec["html"])
-                            if pending >= flush_bytes:
-                                yield flush()
-                    except (OSError, EOFError, zlib.error):
-                        continue  # corrupt archive: keep the valid prefix
-            if urls:
-                yield flush()
-
-        yield from base_kernel(record_frames())
-
-    src = _file_source(spark, path, local, max_concurrent_files)
-    return src.mapInPandas(kernel, schema=EXTRACTION_SCHEMA)
 
 
 def extract_from_warc_indexed(
@@ -320,49 +258,10 @@ def extract_from_warc_indexed(
     pathological archive split across tasks, html never crossing the
     Arrow/JVM boundary. Parity with read_warc_indexed -> extract is
     test-pinned."""
-    from ..sources.warc import _iter_index_records, _split_index
+    from ..sources.warc import _split_index, index_frames
 
-    base_kernel = (
-        _extract_batches
-        if page_setups_json is None
-        else make_extract_batches(page_setups_json)
-    )
+    kernel = make_extract_batches(page_setups_json)
     idx = _split_index(spark, index, warc_root, records_per_split, num_partitions)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def record_frames():
-            flush_bytes = 64 << 20
-            urls, tss, htmls, langs = [], [], [], []
-            pending = 0
-
-            def flush():
-                nonlocal pending
-                out = pd.DataFrame(
-                    {
-                        "url": list(urls),
-                        "warc_ts": pd.to_datetime(
-                            pd.Series(tss, dtype="object"),
-                            utc=True, errors="coerce",
-                        ).dt.tz_localize(None),
-                        "html": list(htmls),
-                        "lang": list(langs),
-                    }
-                )
-                urls.clear(); tss.clear(); htmls.clear(); langs.clear()
-                pending = 0
-                return out
-
-            for _, rec in _iter_index_records(batches):
-                urls.append(rec["url"])
-                tss.append(rec["ts"])
-                htmls.append(rec["html"])
-                langs.append(rec["lang"])
-                pending += len(rec["html"])
-                if pending >= flush_bytes:
-                    yield flush()
-            if urls:
-                yield flush()
-
-        yield from base_kernel(record_frames())
-
-    return idx.mapInPandas(kernel, schema=EXTRACTION_SCHEMA)
+    return idx.mapInPandas(
+        lambda batches: kernel(index_frames(batches)), schema=EXTRACTION_SCHEMA
+    )

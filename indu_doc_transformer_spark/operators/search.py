@@ -244,7 +244,7 @@ def build_connection_index(
         names = F.slice(F.split(F.col(pin_col), ":"), 2, 100000)
         from ..functions import guids as G
 
-        top = F.element_at(G.pin_chain_expr(pin_col, role_name, "guid"), -1)
+        top = F.element_at(F.expr(G.sql_pin_chain(pin_col, role_name, "guid")), -1)
         return F.struct(
             F.array_join(names, "").alias("name"),
             F.lit(role_name).alias("role"),

@@ -578,25 +578,19 @@ def token_shards(df, id_col: str, text_col: str, tokens_per_shard: int):
     )
 
 
-def token_shards_scalable(
-    df, id_col: str, text_col: str, tokens_per_shard: int, partitions: int = 0
-):
-    """The 100-TB variant of ``token_shards``: a distributed prefix sum.
-    Range-partition by id (range partitioner keeps partition ids in key
-    order), compute per-partition running sums in PARALLEL windows,
-    collect only the per-partition subtotals (one row per partition —
-    bounded by cluster size, not data size), and broadcast them back as
-    offsets. Output is identical to the single-window version for any
-    partition bounds."""
+def _token_starts(base: DataFrame, partitions: int) -> DataFrame:
+    """Distributed prefix sum over (id, n_tokens): returns (id, n_tokens,
+    _start), where _start is the running token count BEFORE the doc in
+    id order. Range-partition by id (range partitioner keeps partition
+    ids in key order), compute per-partition running sums in PARALLEL
+    windows, collect only the per-partition subtotals (one row per
+    partition — bounded by cluster size, not data size), and broadcast
+    them back as offsets — never one global window task."""
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-    p = partitions or spark.sparkContext.defaultParallelism
-    n = ws_token_count(F.col(text_col)).cast("long")
-    base = (
-        df.select(F.col(id_col).alias("id"), n.alias("n_tokens"))
-        .repartitionByRange(p, F.col("id"))
-        .withColumn("_pid", F.spark_partition_id())
+    p = partitions or base.sparkSession.sparkContext.defaultParallelism
+    base = base.repartitionByRange(p, F.col("id")).withColumn(
+        "_pid", F.spark_partition_id()
     )
     w = Window.partitionBy("_pid").orderBy("id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -611,15 +605,24 @@ def token_shards_scalable(
     off_map = F.create_map(
         *[x for pid, o in offsets.items() for x in (F.lit(pid), F.lit(o))]
     )
+    start = F.col("_cum") - F.col("n_tokens") + off_map[F.col("_pid")]
+    return base.select("id", "n_tokens", start.alias("_start"))
+
+
+def token_shards_scalable(
+    df, id_col: str, text_col: str, tokens_per_shard: int, partitions: int = 0
+):
+    """The 100-TB variant of ``token_shards``: the same shards from the
+    distributed prefix sum ``_token_starts``. Output is identical to the
+    single-window version for any partition bounds."""
+    n = ws_token_count(F.col(text_col)).cast("long")
+    base = _token_starts(
+        df.select(F.col(id_col).alias("id"), n.alias("n_tokens")), partitions
+    )
     return base.select(
         "id",
         "n_tokens",
-        F.floor(
-            (F.col("_cum") - F.col("n_tokens") + off_map[F.col("_pid")])
-            / tokens_per_shard
-        )
-        .cast("long")
-        .alias("shard_id"),
+        F.floor(F.col("_start") / tokens_per_shard).cast("long").alias("shard_id"),
     )
 
 
@@ -635,35 +638,17 @@ def sequence_pack(df, id_col: str, text_col: str, seq_len: int, partitions: int 
     semantics: an empty string is one token, matching the oracle
     engine); docs with no tokens (NULL text) emit nothing.
 
-    Scale shape: the same distributed prefix sum as
-    ``token_shards_scalable`` (parallel per-partition windows +
-    broadcast cluster-sized subtotal offsets — never one global window
-    task), then a native sequence() explode: a doc spanning k
-    sequences emits k rows, no Python anywhere."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    p = partitions or spark.sparkContext.defaultParallelism
+    Scale shape: the distributed prefix sum ``_token_starts`` (as in
+    ``token_shards_scalable``), then a native sequence() explode: a doc
+    spanning k sequences emits k rows, no Python anywhere."""
     n = ws_token_count(F.col(text_col)).cast("long")
-    base = (
-        df.select(F.col(id_col).alias("id"), n.alias("n_tokens"))
-        .where(F.col("n_tokens") > 0)
-        .repartitionByRange(p, F.col("id"))
-        .withColumn("_pid", F.spark_partition_id())
+    base = _token_starts(
+        df.select(F.col(id_col).alias("id"), n.alias("n_tokens")).where(
+            F.col("n_tokens") > 0
+        ),
+        partitions,
     )
-    w = Window.partitionBy("_pid").orderBy("id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    base = base.withColumn("_cum", F.sum("n_tokens").over(w)).localCheckpoint()
-    totals = base.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect()
-    acc, offsets = 0, {}
-    for r in sorted(totals, key=lambda r: r._pid):
-        offsets[int(r._pid)] = acc
-        acc += r.t
-    off_map = F.create_map(
-        *[x for pid, o in offsets.items() for x in (F.lit(pid), F.lit(o))]
-    )
-    start = F.col("_cum") - F.col("n_tokens") + off_map[F.col("_pid")]
+    start = F.col("_start")
     seqd = base.select(
         "id",
         "n_tokens",

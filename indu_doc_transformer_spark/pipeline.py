@@ -105,13 +105,9 @@ def run_extraction(
         # would leave some of the chunk's tasks with several buckets.
         # run_checkpointed rebalances the output on bucket for the write.
         pruned = pruned.repartition(kernel_partitions, F.col("bucket"), F.col("url"))
-        kernel = (
-            ex._extract_batches
-            if page_setups_json is None
-            else ex.make_extract_batches(page_setups_json)
-        )
         extracted = pruned.mapInPandas(
-            kernel, schema=ex.EXTRACTION_SCHEMA + ", bucket int"
+            ex.make_extract_batches(page_setups_json),
+            schema=ex.EXTRACTION_SCHEMA + ", bucket int",
         ).withColumn(
             # the kernel's task id restarts at 0 in every chunk; chunk c
             # (buckets c * chunk_size ..) gets ids from c * kernel_partitions

@@ -378,6 +378,75 @@ def _file_source(spark, path, local, max_concurrent_files):
     return src
 
 
+def _frames(pairs: Iterable[tuple[str, dict]]) -> Iterator[pd.DataFrame]:
+    """``(path, record)`` pairs -> ``WARC_SCHEMA`` pandas frames, each
+    flushed once it holds ``_FLUSH_BYTES`` of html, so a task never
+    accumulates a batch's worth of pages. The one output buffer of
+    every WARC reader and fused extractor."""
+    batch: list[tuple[str, dict]] = []
+    pending = 0
+
+    def flush() -> pd.DataFrame:
+        nonlocal batch, pending
+        out, batch, pending = batch, [], 0
+        tss = pd.Series([rec["ts"] for _, rec in out], dtype="object")
+        return pd.DataFrame(
+            {
+                "url": [rec["url"] for _, rec in out],
+                "warc_ts": pd.to_datetime(
+                    tss, utc=True, errors="coerce"
+                ).dt.tz_localize(None),
+                "html": [rec["html"] for _, rec in out],
+                "lang": [rec["lang"] for _, rec in out],
+                "warc_file": [p for p, _ in out],
+            }
+        )
+
+    for p, rec in pairs:
+        batch.append((p, rec))
+        pending += len(rec["html"])
+        if pending >= _FLUSH_BYTES:
+            yield flush()
+    if batch:
+        yield flush()
+
+
+def _iter_file_records(batches: Iterator[pd.DataFrame]):
+    """Walk (path, record) pairs for a task's archive files (the
+    ``_file_source`` rows: a path, plus the compressed bytes in content
+    mode). Malformed records are skipped."""
+    for pdf in batches:
+        contents = pdf["content"] if "content" in pdf.columns else None
+        for i, p in enumerate(pdf["path"]):
+            content = None if contents is None else contents.iloc[i]
+            # the open happens HERE, outside the salvage try: a
+            # listed path that can't be opened (deleted between
+            # listing and task, permissions, fd exhaustion, ...)
+            # fails the task loudly, whatever the error class —
+            # same rule as the non-local-scheme RuntimeError
+            # (ADVICE r5; structural form from the r6 review)
+            stream = _file_record_stream(p, content)
+            try:
+                for rec in stream:
+                    if not rec.get("bad"):
+                        yield p, rec
+            except (OSError, EOFError, zlib.error):
+                # corrupt archive mid-stream: keep the valid
+                # prefix, never fail the task (warc_file_stats
+                # flags the file)
+                continue
+
+
+def warc_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The ``read_warc`` task body: archive-file rows -> WARC frames."""
+    return _frames(_iter_file_records(batches))
+
+
+def index_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The ``read_warc_indexed`` task body: index rows -> WARC frames."""
+    return _frames(_iter_index_records(batches))
+
+
 def read_warc(
     spark: SparkSession,
     path: str,
@@ -395,62 +464,8 @@ def read_warc(
     archive salvages its valid prefix and never fails the task.
     ``max_concurrent_files`` repartitions the file list to bound how
     many archives decompress at once cluster-wide."""
-    local = _is_local(path)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        urls, tss, htmls, langs, files = [], [], [], [], []
-        pending = 0
-
-        def flush() -> pd.DataFrame:
-            nonlocal pending
-            out = pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts": pd.to_datetime(
-                        pd.Series(tss, dtype="object"), utc=True, errors="coerce"
-                    ).dt.tz_localize(None),
-                    "html": list(htmls),
-                    "lang": langs,
-                    "warc_file": files,
-                }
-            )
-            urls.clear(); tss.clear(); htmls.clear(); langs.clear(); files.clear()
-            pending = 0
-            return out
-
-        for pdf in batches:
-            contents = pdf["content"] if "content" in pdf.columns else None
-            for i, p in enumerate(pdf["path"]):
-                content = None if contents is None else contents.iloc[i]
-                # the open happens HERE, outside the salvage try: a
-                # listed path that can't be opened (deleted between
-                # listing and task, permissions, fd exhaustion, ...)
-                # fails the task loudly, whatever the error class —
-                # same rule as the non-local-scheme RuntimeError
-                # (ADVICE r5; structural form from the r6 review)
-                stream = _file_record_stream(p, content)
-                try:
-                    for rec in stream:
-                        if rec.get("bad"):
-                            continue
-                        urls.append(rec["url"])
-                        tss.append(rec["ts"])
-                        htmls.append(rec["html"])
-                        langs.append(rec["lang"])
-                        files.append(p)
-                        pending += len(rec["html"])
-                        if pending >= _FLUSH_BYTES:
-                            yield flush()
-                except (OSError, EOFError, zlib.error):
-                    # corrupt archive mid-stream: keep the valid
-                    # prefix, never fail the task (warc_file_stats
-                    # flags the file)
-                    continue
-        if urls:
-            yield flush()
-
-    src = _file_source(spark, path, local, max_concurrent_files)
-    return src.mapInPandas(kernel, schema=WARC_SCHEMA)
+    src = _file_source(spark, path, _is_local(path), max_concurrent_files)
+    return src.mapInPandas(warc_frames, schema=WARC_SCHEMA)
 
 
 def warc_file_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -595,41 +610,7 @@ def read_warc_indexed(
     idx = _split_index(
         spark, index, warc_root, records_per_split, num_partitions
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        urls, tss, htmls, langs, files = [], [], [], [], []
-        pending = 0
-
-        def flush() -> pd.DataFrame:
-            nonlocal pending
-            out = pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts": pd.to_datetime(
-                        pd.Series(tss, dtype="object"), utc=True, errors="coerce"
-                    ).dt.tz_localize(None),
-                    "html": list(htmls),
-                    "lang": langs,
-                    "warc_file": files,
-                }
-            )
-            urls.clear(); tss.clear(); htmls.clear(); langs.clear(); files.clear()
-            pending = 0
-            return out
-
-        for p, rec in _iter_index_records(batches):
-            urls.append(rec["url"])
-            tss.append(rec["ts"])
-            htmls.append(rec["html"])
-            langs.append(rec["lang"])
-            files.append(p)
-            pending += len(rec["html"])
-            if pending >= _FLUSH_BYTES:
-                yield flush()
-        if urls:
-            yield flush()
-
-    return idx.mapInPandas(kernel, schema=WARC_SCHEMA)
+    return idx.mapInPandas(index_frames, schema=WARC_SCHEMA)
 
 
 def _split_index(
@@ -665,8 +646,9 @@ def _iter_index_records(batches: Iterator[pd.DataFrame]):
     """Walk (path, record) pairs for a task's index rows: one open
     handle per contiguous file run, seek+read+gunzip per member.
     Corrupt members are skipped (mid-stream salvage rule; BadGzipFile
-    is an OSError subclass); open-time failures raise loudly. Shared
-    by read_warc_indexed and extraction.extract_from_warc_indexed."""
+    is an OSError subclass); open-time failures raise loudly. The
+    walker of ``index_frames``, so of read_warc_indexed and
+    extraction.extract_from_warc_indexed."""
     cur_path: str | None = None
     f = None
     try:

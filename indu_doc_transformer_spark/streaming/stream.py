@@ -34,9 +34,7 @@ def stream_extract(
     deduped = src.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
         ["url"]
     )
-    extracted = deduped.select("url", "warc_ts", "html", "lang").mapInPandas(
-        ex._extract_batches, schema=ex.EXTRACTION_SCHEMA
-    )
+    extracted = ex.extract(deduped)
     q = (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)
@@ -159,9 +157,7 @@ def stream_metrics(
     """Windowed per-page-type counts with late-data handling — the
     streaming analog of the per-partition counter metrics."""
     src = spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
-    extracted = src.select("url", "warc_ts", "html", "lang").mapInPandas(
-        ex._extract_batches, schema=ex.EXTRACTION_SCHEMA
-    )
+    extracted = ex.extract(src)
     agg = (
         extracted.withWatermark("warc_ts", "30 minutes")
         .groupBy(F.window("warc_ts", window), "page_type")

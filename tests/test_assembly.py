@@ -245,11 +245,11 @@ def test_cold_finisher_build_py4j_round_trips(spark, monkeypatch):
     assert list(sc.statusTracker().getJobIdsForGroup("cold-finisher-build")) == []
 
 
-def test_sql_guid_templates_match_column_and_kernel(spark):
+def test_sql_guid_templates_match_kernel(spark):
     """sql_xtarget_guid / sql_aspect_guid / sql_connection_guid /
-    sql_link_guid equal their Column twins everywhere and
-    kernels/tagparse.py wherever the kernel accepts the input (it has no
-    NULL tag), pin names holding line breaks included."""
+    sql_link_guid equal kernels/tagparse.py wherever the kernel accepts
+    the input (it has no NULL tag), pin names holding line breaks
+    included; a NULL tag or separator gives a NULL GUID."""
     from pyspark.sql import functions as F
 
     from indu_doc_transformer_spark.functions import guids as G
@@ -267,21 +267,15 @@ def test_sql_guid_templates_match_column_and_kernel(spark):
     ]
     cols = "tag, sep, value, src, dst, thr, name, sp, dp"
     df = spark.createDataFrame(cases, ", ".join(f"{c} string" for c in cols.split(", ")))
-    c = F.col
     got = df.select(
         F.expr(G.sql_xtarget_guid("tag")).alias("x_sql"),
-        G.xtarget_guid(c("tag")).alias("x_col"),
         F.expr(G.sql_aspect_guid("sep", "value")).alias("a_sql"),
-        G.aspect_guid(c("sep"), c("value")).alias("a_col"),
         F.expr(G.sql_connection_guid("src", "dst", "thr")).alias("c_sql"),
-        G.connection_guid(c("src"), c("dst"), c("thr")).alias("c_col"),
         F.expr(G.sql_link_guid("name", "sp", "dp", "src")).alias("l_sql"),
-        G.link_guid(c("name"), c("sp"), c("dp"), c("src")).alias("l_col"),
     ).collect()
     assert len(got) == len(cases)
 
     for (tag, sep, value, src, dst, thr, name, sp, dp), r in zip(cases, got):
-        assert (r.x_sql, r.a_sql, r.c_sql, r.l_sql) == (r.x_col, r.a_col, r.c_col, r.l_col)
         assert r.x_sql == (None if tag is None else tp.xtarget_guid(tag))
         assert r.a_sql == (None if sep is None else tp.aspect_guid(sep, value))
         assert r.c_sql == tp.connection_guid(src, dst, thr)

@@ -620,8 +620,9 @@ def test_warc_nonlocal_scheme_fails_loudly():
 
 
 def test_extract_from_warc_matches_chained_path(spark, tmp_path):
-    """The fused ingest+extract pass (html never crosses Arrow) must
-    produce exactly what read_warc -> extract produces."""
+    """The fused ingest+extract passes (html never crosses Arrow) must
+    produce exactly the rows read_warc -> extract produces: every
+    column but the per-task ``partition_id``/``kernel_docs``."""
     from indu_doc_transformer_spark.operators import extraction as ex
     from indu_doc_transformer_spark.sources import warc as w
     from indu_doc_transformer_spark.sources.corpus import generate_doc
@@ -631,29 +632,24 @@ def test_extract_from_warc_matches_chained_path(spark, tmp_path):
         d = generate_doc(i)
         recs.append({"url": d["url"], "ts": "2020-01-01T00:00:00Z",
                      "html": d["html"], "lang": "en"})
-    w.write_warc(recs[:20], str(tmp_path / "a.warc.gz"))
-    w.write_warc(recs[20:], str(tmp_path / "b.warc.gz"))
+    idx_a = w.write_warc(recs[:20], str(tmp_path / "a.warc.gz"))
+    idx_b = w.write_warc(recs[20:], str(tmp_path / "b.warc.gz"))
 
-    def key(df):
-        return sorted(
-            (r.url, r.page_type, r.extracted_text, len(r.rows), len(r.errors))
-            for r in df.select("url", "page_type", "extracted_text",
-                               "rows", "errors").collect()
-        )
+    def rows(df):
+        cols = [c for c in df.columns if c not in ("partition_id", "kernel_docs")]
+        return sorted(r[0] for r in df.select(F.to_json(F.struct(*cols))).collect())
 
     fused = ex.extract_from_warc(spark, str(tmp_path) + "/*.warc.gz")
-    chained = ex.extract(
+    chained = rows(ex.extract(
         w.read_warc(spark, str(tmp_path) + "/*.warc.gz")
         .select("url", "warc_ts", "html", "lang")
-    )
-    assert key(fused) == key(chained)
-    assert len(key(fused)) == 30
+    ))
+    assert len(chained) == 30
+    assert rows(fused) == chained
 
     # the fused INDEXED path (giant-archive escape hatch composed with
-    # the fused-kernel rule) must produce the same set again
-    idx_a = w.write_warc(recs[:20], str(tmp_path / "a.warc.gz"))
+    # the fused-kernel rule) must produce the same rows again
     idx_rows = [("a.warc.gz", e["offset"], e["length"]) for e in idx_a]
-    idx_b = w.write_warc(recs[20:], str(tmp_path / "b.warc.gz"))
     idx_rows += [("b.warc.gz", e["offset"], e["length"]) for e in idx_b]
     idx = spark.createDataFrame(
         idx_rows, "warc_file string, offset long, length long"
@@ -661,4 +657,49 @@ def test_extract_from_warc_matches_chained_path(spark, tmp_path):
     fused_idx = ex.extract_from_warc_indexed(
         spark, idx, warc_root=str(tmp_path), records_per_split=7
     )
-    assert key(fused_idx) == key(chained)
+    assert rows(fused_idx) == chained
+
+
+def test_extract_from_warc_plan_is_fused(spark, tmp_path):
+    """extract_from_warc runs ingest and extraction in ONE mapInPandas
+    node, and no operator above it carries html: the pages never cross
+    the Arrow boundary."""
+    from indu_doc_transformer_spark.operators import extraction as ex
+    from indu_doc_transformer_spark.sources import warc as w
+
+    w.write_warc([{"url": "http://a/", "ts": "2020-01-01T00:00:00Z",
+                   "html": b"<html><body>x</body></html>"}],
+                 str(tmp_path / "a.warc.gz"))
+    df = ex.extract_from_warc(spark, str(tmp_path) + "/*.warc.gz")
+    assert df.count() == 1
+    plan = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    at = [i for i, line in enumerate(plan) if "MapInPandas" in line]
+    assert len(at) == 1, plan
+    assert not any("html" in line for line in plan[: at[0] + 1]), plan
+
+
+def test_warc_frames_flush_threshold(monkeypatch):
+    """_frames, the one output buffer of the WARC readers: a frame is
+    flushed once it holds _FLUSH_BYTES of html, and the flush
+    boundaries change nothing but the frame sizes."""
+    import pandas as pd
+
+    from indu_doc_transformer_spark.sources import warc as w
+
+    pairs = [
+        (f"f{i % 2}.warc.gz",
+         {"url": f"http://h/{i}", "html": b"<p>" * (i + 1),
+          "ts": "not a date" if i == 3 else f"2020-01-0{i + 1}T00:00:00Z",
+          "lang": None if i % 3 else "en"})
+        for i in range(7)
+    ]
+    (whole,) = w._frames(pairs)
+    assert list(whole.columns) == ["url", "warc_ts", "html", "lang", "warc_file"]
+    assert whole["warc_ts"].isna().tolist() == [i == 3 for i in range(7)]
+    for threshold in (3, 10):
+        monkeypatch.setattr(w, "_FLUSH_BYTES", threshold)
+        frames = list(w._frames(pairs))
+        if threshold == 3:
+            assert len(frames) == len(pairs)
+        assert all(f["html"].map(len).sum() >= threshold for f in frames[:-1])
+        pd.testing.assert_frame_equal(pd.concat(frames, ignore_index=True), whole)

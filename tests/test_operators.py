@@ -248,23 +248,17 @@ def test_span_window_kernel_matches_sql(spark):
 def test_guid_charjoin_matches_charjoin_on_guid_inputs(spark):
     """The r7 lookaround charjoin is only used on GUID/hex/keyword
     inputs; it must be byte-identical to the extract_all form there
-    (incl. null, empty, single char)."""
+    (incl. null, empty, single char), and both to the kernel's
+    ':'.join."""
     from indu_doc_transformer_spark.functions import guids as G
 
-    df = spark.createDataFrame(
-        [("5eb63bbb-e01e-eed0-93cb-22bb8f5acdc3",), ("src",), ("dst",),
-         ("a",), ("",), (None,)],
-        "s string",
-    )
-    rows = df.select(
-        G.charjoin(F.col("s")).alias("old"),
-        G.guid_charjoin(F.col("s")).alias("new"),
-    ).collect()
-    assert all(r.old == r.new for r in rows)
-    sql_rows = df.selectExpr(
+    values = ["5eb63bbb-e01e-eed0-93cb-22bb8f5acdc3", "src", "dst", "a", "", None]
+    df = spark.createDataFrame([(v,) for v in values], "s string")
+    rows = df.selectExpr(
         f"{G.sql_charjoin('s')} as old", f"{G.sql_guid_charjoin('s')} as new"
     ).collect()
-    assert all(r.old == r.new for r in sql_rows)
+    assert [r.old for r in rows] == [None if v is None else ":".join(v) for v in values]
+    assert all(r.old == r.new for r in rows)
 
 
 def test_ann_lsh_subset_of_bruteforce_space(spark):
