@@ -213,7 +213,7 @@ def _finisher_tables(spark, sf_dir) -> dict:
     key = (spark.sparkContext.applicationId, sf_dir, "finisher_tables")
     if key not in _CACHE:
         reqs = spark.read.parquet(_requests_parquet(spark, sf_dir))
-        _CACHE[key] = asm.Assembler().finish(reqs, persist=False)
+        _CACHE[key] = asm.Assembler().finish(reqs)
     return _CACHE[key]
 
 

@@ -21,7 +21,8 @@ in-memory dicts row by row, we:
   first-wins entities (A1,A5-A8), set-union attachments (A3,A6).
 
 The request branches and the finishers (``finish``) are SQL text built
-by plain Python (no JVM round trip until ``selectExpr``/``where``); the
+by plain Python: the nine branches reach the JVM as one ``spark.sql``
+statement, the finishers as ``selectExpr``/``where`` applications. The
 text interpolates constants only — column names, map-key and message
 literals — never row data.
 
@@ -238,22 +239,23 @@ class Assembler:
 
     # -- per-type request builders (each returns array<request> SQL) ----
 
-    def _connection_list(self, cols: str, attrs: str, loc: str) -> str:
-        tag_from, tag_to = _g(cols, "src_pin_tag"), _g(cols, "dst_pin_tag")
+    def _pin_to_pin(self, cols: str, attrs: str, loc: str, what: str) -> str:
+        """connection_list and wires_part_list: one linked connection
+        between the row's two pin tags, skipped with ``what`` (two '{}'
+        holes: the pin tags) when either is empty."""
+        tag_src, tag_dst = _g(cols, "src_pin_tag"), _g(cols, "dst_pin_tag")
         ok = _req(
             "cwl",
-            src_pin_tag=tag_from,
+            src_pin_tag=tag_src,
             src_pin_tag_c=_g(cols, "_c:src_pin_tag"),
-            dst_pin_tag=tag_to,
+            dst_pin_tag=tag_dst,
             dst_pin_tag_c=_g(cols, "_c:dst_pin_tag"),
             link_attrs=attrs,
             attrs=attrs,
             loc_attrs=loc,
         )
         return _skipped(
-            f"({tag_from} = '' OR {tag_to} = '')", f"array({ok})",
-            "one/both of the connection targets are empty (is that intended?): `{}` `{}`",
-            tag_from, tag_to,
+            f"({tag_src} = '' OR {tag_dst} = '')", f"array({ok})", what, tag_src, tag_dst
         )
 
     def _device_tag_list(self, cols: str, attrs: str) -> str:
@@ -321,24 +323,6 @@ class Assembler:
             f"concat({pairs}, array({_req('pool', attrs=attrs)}))",
             "empty topology tag (is that intended?): `{}` from=`{}` to=`{}` route=`{}`",
             tag, tags_src, tags_dst, tags_route,
-        )
-
-    def _wires(self, cols: str, attrs: str, loc: str) -> str:
-        tag_src, tag_dst = _g(cols, "src_pin_tag"), _g(cols, "dst_pin_tag")
-        ok = _req(
-            "cwl",
-            src_pin_tag=tag_src,
-            src_pin_tag_c=_g(cols, "_c:src_pin_tag"),
-            dst_pin_tag=tag_dst,
-            dst_pin_tag_c=_g(cols, "_c:dst_pin_tag"),
-            link_attrs=attrs,
-            attrs=attrs,
-            loc_attrs=loc,
-        )
-        return _skipped(
-            f"({tag_src} = '' OR {tag_dst} = '')", f"array({ok})",
-            "empty wire connection info (is that intended?): from=`{}` to=`{}`",
-            tag_src, tag_dst,
         )
 
     def _cable_diagram(self, cols: str, attrs: str, loc: str) -> str:
@@ -429,7 +413,10 @@ class Assembler:
         base = f"concat({_simple_attrs('cols', excl)}, _loc_a)" if excl else None
         if page_type == "connection_list":
             pre.append(("_attrs", base))
-            req = self._connection_list("cols", "_attrs", "_loc_a")
+            req = self._pin_to_pin(
+                "cols", "_attrs", "_loc_a",
+                "one/both of the connection targets are empty (is that intended?): `{}` `{}`",
+            )
         elif page_type == "device_tag_list":
             pre.append(("_attrs", base))
             req = self._device_tag_list("cols", "_attrs")
@@ -447,7 +434,10 @@ class Assembler:
                 f" ELSE {EMPTY_ATTRS} END"
             )
             pre.append(("_attrs", f"concat({base}, {routing})"))
-            req = self._wires("cols", "_attrs", "_loc_a")
+            req = self._pin_to_pin(
+                "cols", "_attrs", "_loc_a",
+                "empty wire connection info (is that intended?): from=`{}` to=`{}`",
+            )
         elif page_type == "cable_diagram":
             pre.append(("_attrs", base))
             req = self._cable_diagram("cols", "_attrs", "_loc_a")
@@ -473,38 +463,6 @@ class Assembler:
             raise KeyError(page_type)
         return pre, req
 
-    def _branch(self, rows: DataFrame, page_type: str) -> DataFrame:
-        """One per-page-type branch: filter -> branch-specific precompute
-        -> request projection -> explode.
-
-        Nine small per-type projections, not one CASE over page_type:
-        a single projection over all nine handlers compiled to one giant
-        janino class (~35s one-time compile, too wide for whole-stage
-        codegen); the small ones compile in ~2s each and run codegen'd.
-        Each branch re-scans the rows input with a pushable page_type
-        filter — at warehouse scale the rows stage table is partitioned
-        by page_type, so the 9 scans prune to 1 full pass.
-        """
-        pre, req = self._branch_exprs(page_type)
-        b = rows.where(f"page_type = {_q(page_type)}")
-        for name, expr in pre:
-            b = b.selectExpr("*", f"{expr} AS {name}")
-        # explode_outer + isNotNull instead of a bare explode: the
-        # non-outer Generate plants an implicit `size(reqs)>0` filter
-        # that the optimizer pushes BELOW the request projection by
-        # substitution — re-evaluating the entire (interpreted,
-        # HOF-laden) request expression once more per input row
-        # (guide §4.4's duplication, measured 2.8-4.4x per branch).
-        # Equivalent output: request elements are constructed structs
-        # (never NULL), and for a NULL/empty array both forms drop the
-        # row (outer emits r=NULL which the filter removes).
-        return (
-            b.selectExpr("*", f"{req} AS reqs")
-            .selectExpr("url", "page_no", "footer_tags", "explode_outer(reqs) AS r")
-            .where("r IS NOT NULL")
-            .selectExpr("url", "page_no", "footer_tags", "r.*")
-        )
-
     HANDLED_PAGE_TYPES = (
         "connection_list",
         "device_tag_list",
@@ -520,22 +478,59 @@ class Assembler:
     # -- the per-type branches + finishers ------------------------------
 
     def requests_table(self, rows: DataFrame) -> DataFrame:
-        """The typed-request stage table: union of the 9 per-page-type
-        branches. At warehouse scale this is a real intermediate table
-        (write it, then run ``finish`` as a separate restartable job)."""
-        rows = rows.select(
-            "url", "page_no", "page_type", "footer_tags", "row_idx", "cols", "loc_repr"
-        )
-        return _union(*[self._branch(rows, pt) for pt in self.HANDLED_PAGE_TYPES])
+        """The typed-request stage table: the 9 per-page-type branches
+        (filter -> precompute -> request projection -> explode), joined
+        with UNION ALL in one ``spark.sql`` statement. At warehouse scale
+        this is a real intermediate table (write it, then run ``finish``
+        as a separate restartable job).
+
+        Nine small per-type projections, not one CASE over page_type:
+        a single projection over all nine handlers compiled to one giant
+        janino class (~35s one-time compile, too wide for whole-stage
+        codegen); the small ones compile in ~2s each and run codegen'd.
+        Each branch re-scans the rows input with a pushable page_type
+        filter — at warehouse scale the rows stage table is partitioned
+        by page_type, so the 9 scans prune to 1 full pass.
+
+        The precomputed columns of ``_branch_exprs`` are lateral column
+        aliases of the request projection; the optimizer keeps them as
+        their own projections, so each is evaluated once per row. The
+        UNION ALL is positional: ``_req`` emits every struct field in
+        the same order, so ``r.*`` lines up across branches.
+
+        explode_outer + ``r IS NOT NULL`` instead of a bare explode: the
+        non-outer Generate plants an implicit ``size(reqs)>0`` filter
+        that the optimizer pushes BELOW the request projection by
+        substitution — re-evaluating the entire (interpreted, HOF-laden)
+        request expression once more per input row (guide §4.4's
+        duplication, measured 2.8-4.4x per branch). Equivalent output:
+        request elements are constructed structs (never NULL), and for
+        a NULL/empty array both forms drop the row (outer emits r=NULL
+        which the filter removes)."""
+
+        def esc(text: str) -> str:
+            # spark.sql formats the whole text: a brace must stay a brace
+            return text.replace("{", "{{").replace("}", "}}")
+
+        branches = []
+        for page_type in self.HANDLED_PAGE_TYPES:
+            pre, req = self._branch_exprs(page_type)
+            items = ", ".join(["*", *(f"{e} AS {n}" for n, e in pre), f"{req} AS reqs"])
+            branches.append(
+                "SELECT url, page_no, footer_tags, r.* FROM"
+                " (SELECT url, page_no, footer_tags, explode_outer(reqs) AS r FROM"
+                f" (SELECT {esc(items)} FROM {{rows}} WHERE page_type = {esc(_q(page_type))}))"
+                " WHERE r IS NOT NULL"
+            )
+        return rows.sparkSession.sql(" UNION ALL ".join(branches), rows=rows)
 
     def assemble(self, rows: DataFrame, cache: list | None = None) -> dict[str, DataFrame]:
         """Materializes the rows input and the exploded requests once
         (eager localCheckpoints) before any output is written, and
-        lazily persists the conn_all/xall/distinct_tags fan-out frames
-        (coalesced); the errors union is coalesced too. At warehouse
-        scale the same role is played by materializing stage tables.
-        ``finish(reqs, persist=False)`` is the all-lazy finisher over a
-        requests table built elsewhere.
+        hands the checkpointed requests to ``finish``, which also serves
+        a requests table built elsewhere (e.g. read back from parquet).
+        At warehouse scale the same role is played by materializing
+        stage tables.
 
         ``cache`` follows the plans.cache contract: pass a list to
         receive the conn_all/xall/distinct_tags caches and release them
@@ -550,7 +545,7 @@ class Assembler:
         # localCheckpoint of the 7 needed columns turns that into
         # 1 decode + 9 in-memory scans (measured ~2x on the request
         # stage at sf1.0). At warehouse scale the equivalent is the
-        # page_type-partitioned rows stage table the branch
+        # page_type-partitioned rows stage table requests_table's
         # docstring describes.
         rows = rows.select(
             "url", "page_no", "page_type", "footer_tags",
@@ -576,18 +571,17 @@ class Assembler:
         release_local_checkpoint(rows)
         return self.finish(reqs, cache=cache)
 
-    def finish(
-        self, reqs: DataFrame, persist: bool = True, cache: list | None = None
-    ) -> dict[str, DataFrame]:
-        """Entity tables from a (possibly persisted/read-back) requests
-        stage table — the God-merge finisher layer.
+    def finish(self, reqs: DataFrame, cache: list | None = None) -> dict[str, DataFrame]:
+        """Entity tables from a (possibly checkpointed/read-back)
+        requests stage table — the God-merge finisher layer.
 
         Every derived frame is SQL text applied with ``selectExpr`` /
         ``where`` (constants only, never row data), so building the
         plans costs a few hundred JVM round trips, and no plan evaluates
-        Python. ``persist=True`` (``assemble``) lazily persists
-        conn_all/xall/distinct_tags, handing each handle to ``cache``
-        when given; ``persist=False`` submits no job."""
+        Python. conn_all/xall/distinct_tags are coalesced and lazily
+        persisted, each handle handed to ``cache`` when given (plans.cache
+        contract); the errors union is coalesced. Building submits no
+        Spark job."""
         n = reqs.sparkSession.sparkContext.defaultParallelism
 
         def kind(k: str) -> DataFrame:
@@ -648,13 +642,12 @@ class Assembler:
         conn_all = conn_all.selectExpr(
             "*", f"{G.sql_connection_guid('src_guid', 'dst_guid', 'through_guid')} AS conn_guid"
         )
-        if persist:
-            # feeds connections, links, pins, xtargets (3 roles), lineage
-            # (plan is small once reqs is checkpointed -> lazy cache).
-            # coalesce first, for the reason reqs is coalesced: the
-            # union keeps both children's partitions, the cache freezes
-            # that count, and every consumer scan would fan out into it
-            conn_all = register_cache(conn_all.coalesce(n), cache)
+        # feeds connections, links, pins, xtargets (3 roles), lineage
+        # (plan is small once reqs is checkpointed -> lazy cache).
+        # coalesce first, for the reason reqs is coalesced: the
+        # union keeps both children's partitions, the cache freezes
+        # that count, and every consumer scan would fan out into it
+        conn_all = register_cache(conn_all.coalesce(n), cache)
 
         connections = conn_all.selectExpr(
             "conn_guid AS guid", "src_guid", "dst_guid", "through_guid"
@@ -706,10 +699,9 @@ class Assembler:
                 )
             ],
         ).selectExpr("*", f"{G.sql_xtarget_guid('completed')} AS guid")
-        if persist:
-            # feeds xtargets, distinct_tags, attachments, lineage; a
-            # 4-child union, coalesced before caching like conn_all
-            xall = register_cache(xall.coalesce(n), cache)
+        # feeds xtargets, distinct_tags, attachments, lineage; a
+        # 4-child union, coalesced before caching like conn_all
+        xall = register_cache(xall.coalesce(n), cache)
 
         xtargets = (
             xall.groupBy("guid")
@@ -726,9 +718,8 @@ class Assembler:
             .agg(F.expr("min(struct(url, page_no)) AS at"))
             .selectExpr("*", f"{sql_tag_parts('tag', self.config)} AS parts")
         )
-        if persist:
-            # tiny (one row per unique tag) but feeds 3 outputs
-            distinct_tags = register_cache(distinct_tags.coalesce(n), cache)
+        # tiny (one row per unique tag) but feeds 3 outputs
+        distinct_tags = register_cache(distinct_tags.coalesce(n), cache)
         invalid_errors = _warnings(
             distinct_tags.where("size(parts) = 0"),
             _fmt("Tag is invalid: {}", "tag"), url="at.url", page_no="at.page_no",
@@ -798,15 +789,13 @@ class Assembler:
             )
         ]).distinct()
 
+        # coalesced: the only entity union with no exchange before its
+        # write, it would run one write task per partition of each of
+        # its five children
         errors = _union(
             _warnings(kind("error"), "message"),
             pin_errors, tag_errors, invalid_errors, aspect_errors,
-        )
-        if persist:
-            # the only entity union with no exchange before its write:
-            # it would run one write task per partition of each of its
-            # five children
-            errors = errors.coalesce(n)
+        ).coalesce(n)
 
         return {
             "xtargets": xtargets,

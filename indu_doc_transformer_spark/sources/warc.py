@@ -393,8 +393,12 @@ def _frames(pairs: Iterable[tuple[str, dict]]) -> Iterator[pd.DataFrame]:
         return pd.DataFrame(
             {
                 "url": [rec["url"] for _, rec in out],
+                # an explicit format: otherwise pandas infers one from
+                # the frame's first value, and a later WARC-Date of
+                # another precision becomes NaT (WARC/1.0 and 1.1 dates
+                # are W3C ISO-8601)
                 "warc_ts": pd.to_datetime(
-                    tss, utc=True, errors="coerce"
+                    tss, utc=True, errors="coerce", format="ISO8601"
                 ).dt.tz_localize(None),
                 "html": [rec["html"] for _, rec in out],
                 "lang": [rec["lang"] for _, rec in out],

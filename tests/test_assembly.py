@@ -180,17 +180,21 @@ def test_invalid_tag_path_parity(spark):
     assert g_x == e_x
 
 
+def _request_rows(spark):
+    return ex.rows_table(ex.extract(corpus_df(spark, 8, partitions=2), num_partitions=2))
+
+
 def test_cold_request_build_py4j_round_trips(spark, monkeypatch):
-    """The nine request branches are SQL text built in Python; only the
-    selectExpr/where applications cross to the JVM, so a cold
-    requests_table build (fresh Assembler subclass, nothing warmed)
-    stays within 2,000 py4j round trips."""
+    """The nine request branches are SQL text built in Python and sent
+    to the JVM as one spark.sql statement, so a cold requests_table
+    build (fresh Assembler subclass, nothing warmed) stays within 100
+    py4j round trips."""
     from py4j.java_gateway import GatewayClient
 
     class FreshAssembler(asm_op.Assembler):
         pass
 
-    rows = ex.rows_table(ex.extract(corpus_df(spark, 8, partitions=2), num_partitions=2))
+    rows = _request_rows(spark)
     assembler = FreshAssembler()
     calls = 0
     original = GatewayClient.send_command
@@ -203,22 +207,49 @@ def test_cold_request_build_py4j_round_trips(spark, monkeypatch):
     monkeypatch.setattr(GatewayClient, "send_command", counting)
     assembler.requests_table(rows)
     monkeypatch.undo()
-    assert 0 < calls <= 2000
+    assert 0 < calls <= 100
+
+
+def test_request_build_rule_runs(spark):
+    """Analyzing one statement instead of ~80 chained DataFrames: a
+    requests_table build plus its optimization runs at most 5,000
+    Catalyst rules (RuleExecutor metrics)."""
+    rows = _request_rows(spark)
+    rules = spark._jvm.org.apache.spark.sql.catalyst.rules.RuleExecutor
+    rules.resetMetrics()
+    asm_op.Assembler().requests_table(rows)._jdf.queryExecution().optimizedPlan()
+    assert 0 < rules.getCurrentMetrics().numRuns() <= 5000
+
+
+def test_request_text_braces_stay_literal(spark):
+    """spark.sql formats the request statement: a brace in the built
+    text stays a brace and never becomes a placeholder."""
+
+    class Braced(asm_op.Assembler):
+        def _branch_exprs(self, page_type):
+            return [], "array(named_struct('kind', '{rows} {}'))"
+
+    rows = spark.createDataFrame(
+        [("u", 1, "topology", [])],
+        "url string, page_no int, page_type string, footer_tags array<string>",
+    )
+    assert [r.kind for r in Braced().requests_table(rows).collect()] == ["{rows} {}"]
 
 
 def test_cold_finisher_build_py4j_round_trips(spark, monkeypatch):
-    """The finisher frames are SQL text too: a cold lazy ``finish``
-    (fresh Assembler subclass, nothing warmed) stays within 1,000 py4j
-    round trips and submits no Spark job."""
+    """The finisher frames are SQL text too: a cold ``finish`` (fresh
+    Assembler subclass, nothing warmed) stays within 1,000 py4j round
+    trips and submits no Spark job; its caches are lazy."""
     import gc
 
     from py4j.java_gateway import GatewayClient
 
+    from indu_doc_transformer_spark.plans.cache import temp_caches
+
     class FreshAssembler(asm_op.Assembler):
         pass
 
-    rows = ex.rows_table(ex.extract(corpus_df(spark, 8, partitions=2), num_partitions=2))
-    reqs = asm_op.Assembler().requests_table(rows)
+    reqs = asm_op.Assembler().requests_table(_request_rows(spark))
     assembler = FreshAssembler()
     sc = spark.sparkContext
     calls = 0
@@ -230,11 +261,12 @@ def test_cold_finisher_build_py4j_round_trips(spark, monkeypatch):
         return original(client, *args, **kwargs)
 
     gc.collect()
-    sc.setJobGroup("cold-finisher-build", "finish(persist=False)")
+    sc.setJobGroup("cold-finisher-build", "finish")
     try:
-        monkeypatch.setattr(GatewayClient, "send_command", counting)
-        tables = assembler.finish(reqs, persist=False)
-        monkeypatch.undo()
+        with temp_caches() as cache:
+            monkeypatch.setattr(GatewayClient, "send_command", counting)
+            tables = assembler.finish(reqs, cache=cache)
+            monkeypatch.undo()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

@@ -703,3 +703,29 @@ def test_warc_frames_flush_threshold(monkeypatch):
             assert len(frames) == len(pairs)
         assert all(f["html"].map(len).sum() >= threshold for f in frames[:-1])
         pd.testing.assert_frame_equal(pd.concat(frames, ignore_index=True), whole)
+
+
+def test_warc_frames_ts_independent_of_neighbours(monkeypatch):
+    """_frames parses every WARC-Date as ISO-8601 on its own: a date of
+    another precision than the frame's first still parses, and a
+    record's warc_ts is the same alone, among neighbours and across
+    flush boundaries; a non-ISO date is NaT wherever it falls."""
+    import pandas as pd
+
+    from indu_doc_transformer_spark.sources import warc as w
+
+    dates = ["2020-01-01T00:00:00Z", "2020-01-03T00:00:00.5Z",
+             "2020-01-04T10:00:00+02:00", "20200105000000"]
+    pairs = [("a.warc.gz", {"url": f"http://h/{i}", "html": b"<p>", "ts": ts,
+                            "lang": None})
+             for i, ts in enumerate(dates)]
+    alone = [next(w._frames([p]))["warc_ts"][0] for p in pairs]
+    assert alone[:3] == [pd.Timestamp("2020-01-01"), pd.Timestamp("2020-01-03 00:00:00.5"),
+                         pd.Timestamp("2020-01-04 08:00:00")]
+    assert pd.isna(alone[3])
+    for threshold in (1 << 20, 4, 7):
+        monkeypatch.setattr(w, "_FLUSH_BYTES", threshold)
+        for order in (pairs, pairs[::-1]):
+            got = pd.concat(w._frames(order), ignore_index=True)
+            want = pd.Series([alone[int(u.rsplit("/", 1)[1])] for u in got["url"]])
+            pd.testing.assert_series_equal(got["warc_ts"], want, check_names=False)
