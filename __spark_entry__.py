@@ -456,10 +456,11 @@ def x_aml_export(spark, sf_dir):
     """S9/A15 pinned BY VALUE: the distributed fragment write
     (write_aml_fragments: partitioned parquet + stitch-order index,
     no driver collect) runs end-to-end over the full-path entities,
-    then stitch_aml_file streams the complete CAEX document and its
-    md5 is compared — together with the per-(hierarchy, section)
-    index rows — against the committed golden
-    (tests/goldens/aml_export.json, regenerate with
+    then aml_file_xml (the string form of the one stitcher,
+    stitch_aml_to) stitches the complete CAEX document from the
+    read-back fragment table and its md5 is compared — together with
+    the per-(hierarchy, section) index rows — against the committed
+    golden (tests/goldens/aml_export.json, regenerate with
     scripts/capture_aux_goldens.py when serialization intentionally
     changes). The fragment serialization itself is reference-pinned
     by tests/test_aml.py; timestamp is a parameter so the bytes are
@@ -473,9 +474,8 @@ def x_aml_export(spark, sf_dir):
     out_dir = f"/tmp/indu_spark_oracle/aml_{name}"
     frags = aml.aml_fragments(_entities(spark, sf_dir))
     aml.write_aml_fragments(frags, out_dir)
-    file_md5 = hashlib.md5(
-        aml.stitch_aml_file(spark, out_dir).encode()
-    ).hexdigest()
+    written = spark.read.parquet(os.path.join(out_dir, "aml_fragments"))
+    file_md5 = hashlib.md5(aml.aml_file_xml(written).encode()).hexdigest()
     idx = spark.read.parquet(os.path.join(out_dir, "aml_index"))
     return idx.select(
         "hierarchy",

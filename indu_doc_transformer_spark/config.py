@@ -89,18 +89,6 @@ DEFAULT_ASPECTS = AspectsConfig.from_list(
     ]
 )
 
-# The tag-level separators used when *parsing/completing* page tags.
-# ':' is the terminal pin separator and is stripped before tag parsing
-# (reference: tag.py:156-176), so the effective aspect config for tags
-# matches the shipped config.json (3 levels =/+/-).
-TAG_ASPECTS = AspectsConfig.from_list(
-    [
-        {"Aspect": "Functional", "Separator": "="},
-        {"Aspect": "Location", "Separator": "+"},
-        {"Aspect": "Product", "Separator": "-"},
-    ]
-)
-
 
 @dataclass(frozen=True)
 class RegionSetup:

@@ -15,7 +15,8 @@ kernels/tagparse.py, which is itself pinned against the reference.
 The entity GUIDs are SQL string templates (``sql_*`` and the four
 ``*_attribute_guid``; arguments and result are SQL expressions), used
 by the SQL-text request and finisher layers of operators/assembly.py
-and, through ``F.expr``, by the Column-DSL callers (aml, search).
+and, through ``F.expr``, by the Column-DSL callers (aml, search,
+sqlite_sink).
 ``md5_uuid`` is the one Column function: it hashes Column-DSL
 expressions (``textstats.fingerprint``, the driver queries).
 """
@@ -145,6 +146,19 @@ def sql_pin_chain(pin_col: str, role: str, link_guid_col: str) -> str:
               {link_guid_col} as link_guid))
         )
         """
+
+
+def sql_top_pin(pin_col: str, role: str, link_guid_col: str) -> str:
+    """The head pin of a link's pin chain, the struct the reference
+    stores as ``link.src_pin``/``dest_pin`` (god.py:553-560): the pin
+    built last by the reversed loop, i.e. the last element of the
+    child-first ``sql_pin_chain`` fold. It is the one pin of that link
+    and role that no other pin names as its child. Assembled pin
+    columns are ':'-prefixed, so their chain is never empty; a NULL
+    pin column, or one with no ':' (a foreign SQLite file), has no head
+    pin and gives NULL (``try_element_at``: ``element_at`` on the empty
+    chain would fail the job under ANSI mode)."""
+    return f"try_element_at({sql_pin_chain(pin_col, role, link_guid_col)}, -1)"
 
 
 def simple_attribute_guid(name: str, value: str) -> str:

@@ -37,6 +37,7 @@ Deliberate divergences (documented, deterministic):
 
 from __future__ import annotations
 
+import io
 import json
 from typing import Iterator
 from xml.sax.saxutils import escape, quoteattr
@@ -84,12 +85,6 @@ def _attr_rows(tables: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def _top_pin(pin_col: str, role: str):
-    """The top-of-chain pin struct of a link's pin column: the last
-    element of the child-first ``sql_pin_chain`` fold."""
-    return F.expr(f"element_at({G.sql_pin_chain(pin_col, role, 'guid')}, -1)")
-
-
 def _owner_payloads(tables: dict[str, DataFrame], attr_rows: DataFrame) -> DataFrame:
     """Per-owner-xtarget payload array: InternalConnection rows for the
     ``through`` target, InternalPin rows for the endpoints
@@ -98,9 +93,9 @@ def _owner_payloads(tables: dict[str, DataFrame], attr_rows: DataFrame) -> DataF
         F.col("guid").alias("connection_guid"), "src_guid", "dst_guid", "through_guid"
     )
     le = tables["links"].join(cn, "connection_guid")
-    le = le.withColumn("src_top", _top_pin("src_pin_name", "src")).withColumn(
-        "dst_top", _top_pin("dest_pin_name", "dst")
-    )
+    le = le.withColumn(
+        "src_top", F.expr(G.sql_top_pin("src_pin_name", "src", "guid"))
+    ).withColumn("dst_top", F.expr(G.sql_top_pin("dest_pin_name", "dst", "guid")))
     link_attrs = attr_rows.groupBy(F.col("object_guid").alias("guid")).agg(
         F.collect_list(F.struct("name", "type", "value_json")).alias("lattrs")
     )
@@ -109,25 +104,18 @@ def _owner_payloads(tables: dict[str, DataFrame], attr_rows: DataFrame) -> DataF
     )
 
     empty_attrs = F.expr(f"cast(array() as {_ATTR_T})")
-    pin_src = le.where(F.col("src_guid").isNotNull()).select(
-        F.col("src_guid").alias("owner"),
-        F.struct(
-            F.lit("pin").alias("kind"),
-            F.col("src_top.guid").alias("guid"),
-            F.lit(None).cast("string").alias("name"),
-            F.col("src_top.name").alias("pin_name"),
-            empty_attrs.alias("attrs"),
-        ).alias("p"),
-    )
-    pin_dst = le.where(F.col("dst_guid").isNotNull()).select(
-        F.col("dst_guid").alias("owner"),
-        F.struct(
-            F.lit("pin").alias("kind"),
-            F.col("dst_top.guid").alias("guid"),
-            F.lit(None).cast("string").alias("name"),
-            F.col("dst_top.name").alias("pin_name"),
-            empty_attrs.alias("attrs"),
-        ).alias("p"),
+    pin_src, pin_dst = (
+        le.where(F.col(f"{role}_guid").isNotNull()).select(
+            F.col(f"{role}_guid").alias("owner"),
+            F.struct(
+                F.lit("pin").alias("kind"),
+                F.col(f"{role}_top.guid").alias("guid"),
+                F.lit(None).cast("string").alias("name"),
+                F.col(f"{role}_top.name").alias("pin_name"),
+                empty_attrs.alias("attrs"),
+            ).alias("p"),
+        )
+        for role in ("src", "dst")
     )
     conn = le.where(F.col("through_guid").isNotNull()).select(
         F.col("through_guid").alias("owner"),
@@ -158,13 +146,13 @@ def internal_links(tables: dict[str, DataFrame]) -> DataFrame:
     le = le.withColumn(
         "src_ext",
         F.concat(
-            _top_pin("src_pin_name", "src")["guid"],
+            F.expr(G.sql_top_pin("src_pin_name", "src", "guid"))["guid"],
             F.lit(":ConnectionPoint"),
         ),
     ).withColumn(
         "dst_ext",
         F.concat(
-            _top_pin("dest_pin_name", "dst")["guid"],
+            F.expr(G.sql_top_pin("dest_pin_name", "dst", "guid"))["guid"],
             F.lit(":ConnectionPoint"),
         ),
     )
@@ -365,9 +353,9 @@ def aml_fragments(
     cache: list | None = None,
 ) -> DataFrame:
     """One fragment row per (hierarchy, root): the serialized subtree
-    plus element counts. ``aml_file_xml`` stitches fragments into the
-    complete CAEX document for bounded exports; at warehouse scale the
-    fragments ARE the export (one XML document per hierarchy root).
+    plus element counts. ``stitch_aml_to`` stitches fragments into the
+    complete CAEX document; at warehouse scale the fragments ARE the
+    export (one XML document per hierarchy root).
     ``cache`` receives the persisted target-join handle (plans.cache
     contract: caller unpersists after materializing)."""
     attr_rows = _attr_rows(tables)
@@ -559,6 +547,16 @@ def _hierarchy_order(config: AspectsConfig) -> list[str]:
     return order
 
 
+def _hierarchy_pos(config: AspectsConfig):
+    """A fragment's stitch position: the index of its ``hierarchy`` in
+    ``_hierarchy_order``, NULL for a hierarchy the config does not name
+    (try_element_at: plain element_at would fail the job under ANSI
+    mode)."""
+    order = _hierarchy_order(config)
+    pos = F.create_map(*[x for i, h in enumerate(order) for x in (F.lit(h), F.lit(i))])
+    return F.try_element_at(pos, F.col("hierarchy"))
+
+
 def _caex_header(file_name: str, timestamp: str) -> list[str]:
     return [
         '<?xml version="1.0" encoding="utf-8"?>',
@@ -572,32 +570,6 @@ def _caex_header(file_name: str, timestamp: str) -> list[str]:
     ]
 
 
-def aml_file_xml(
-    fragments: DataFrame,
-    config: AspectsConfig = DEFAULT_ASPECTS,
-    file_name: str = "export.aml",
-    timestamp: str = "1970-01-01T00:00:00+00:00",
-) -> str:
-    """Assemble the complete CAEX document from fragments (bounded
-    exports / tests; aml_abstractions.py:204-246 CAEXFile). The
-    timestamp is a parameter so the output is deterministic. For
-    unbounded exports use write_aml_fragments + stitch_aml_file."""
-    frags = sorted(
-        fragments.collect(), key=lambda r: (r.hierarchy, r.section, r.root)
-    )
-    by_h: dict[str, list] = {}
-    for r in frags:
-        by_h.setdefault(r.hierarchy, []).append(r)
-    out = _caex_header(file_name, timestamp)
-    for h in _hierarchy_order(config):
-        out.append(f"<InstanceHierarchy Name={quoteattr(h)}><Version>0.0.1</Version>")
-        for r in by_h.get(h, []):
-            out.append(r.xml)
-        out.append("</InstanceHierarchy>")
-    out.append("</CAEXFile>")
-    return "".join(out)
-
-
 def write_aml_fragments(
     fragments: DataFrame,
     out_dir: str,
@@ -609,8 +581,8 @@ def write_aml_fragments(
     index table carrying the global stitch order (h_order from the
     config), fragment counts, and content stats. A downstream consumer
     produces the CAEX file by streaming partitions in index order
-    (stitch_aml_file below); the fragment table itself is the
-    queryable export surface."""
+    (``stitch_aml_to`` over the read-back ``aml_fragments`` table); the
+    fragment table itself is the queryable export surface."""
     import os
 
     spark = fragments.sparkSession
@@ -619,10 +591,6 @@ def write_aml_fragments(
     # index from the *written* table: one cheap scan, no recompute of
     # the serialize pass
     written = spark.read.parquet(frag_path)
-    order = _hierarchy_order(config)
-    h_order = F.create_map(
-        *[x for i, h in enumerate(order) for x in (F.lit(h), F.lit(i))]
-    )
     idx = (
         written.groupBy("hierarchy", "section")
         .agg(
@@ -634,10 +602,9 @@ def write_aml_fragments(
             F.sum("n_links").cast("long").alias("n_links"),
             F.sum(F.length("xml")).cast("long").alias("xml_chars"),
         )
-        # try_element_at: a hierarchy absent from this config gets a NULL
-        # stitch position (the stitcher skips it, like aml_file_xml) —
-        # plain element_at would fail the job under ANSI mode
-        .withColumn("h_order", F.try_element_at(h_order, F.col("hierarchy")))
+        # a hierarchy absent from this config has no stitch position
+        # (the stitcher skips it)
+        .withColumn("h_order", _hierarchy_pos(config))
     )
     idx.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "aml_index")
@@ -645,21 +612,25 @@ def write_aml_fragments(
 
 
 def stitch_aml_to(
-    spark,
-    out_dir: str,
+    fragments: DataFrame,
     sink,
     config: AspectsConfig = DEFAULT_ASPECTS,
     file_name: str = "export.aml",
     timestamp: str = "1970-01-01T00:00:00+00:00",
 ) -> str:
-    """Stream the stitched CAEX document into ``sink`` — a path or a
-    file-like object with ``write(str)`` — and return the md5 hex of
-    the streamed text (utf-8). Each hierarchy's fragments flow through
-    ``toLocalIterator`` in (section, root) order and are written as
-    they arrive, so driver memory is bounded by one arrow batch, not
-    the file size (the round-5 verdict's claim, now actually true:
-    nothing accumulates the document). Byte-identical to aml_file_xml
-    over the same fragments."""
+    """Stitch the complete CAEX document (aml_abstractions.py:204-246
+    CAEXFile) from ``fragments`` into ``sink`` — a path or a file-like
+    object with ``write(str)`` — and return the md5 hex of the written
+    text (utf-8). The timestamp is a parameter so the output is
+    deterministic.
+
+    One ordered scan: fragments flow through ``toLocalIterator`` in
+    (``_hierarchy_pos``, section, root) order and are written as they
+    arrive, so driver memory is bounded by one arrow batch, not the
+    document. Every hierarchy of ``_hierarchy_order`` is emitted, empty
+    or not; fragments of a hierarchy the config does not name are
+    skipped. The scan is one SQL execution, so a persisted frame with a
+    large plan pays its plan rendering once, not once per hierarchy."""
     import hashlib
     import os
 
@@ -674,20 +645,32 @@ def stitch_aml_to(
         f.write(s)
         md5.update(s.encode("utf-8"))
 
+    order = _hierarchy_order(config)
+    opened = 0
+
+    def open_through(h: int) -> None:
+        # open hierarchy h, closing the previous one and emitting any
+        # empty hierarchy between them
+        nonlocal opened
+        while opened <= h:
+            if opened:
+                emit("</InstanceHierarchy>")
+            emit(f"<InstanceHierarchy Name={quoteattr(order[opened])}><Version>0.0.1</Version>")
+            opened += 1
+
+    rows = (
+        fragments.select(_hierarchy_pos(config).alias("h"), "section", "root", "xml")
+        .where(F.col("h").isNotNull())
+        .orderBy("h", "section", "root")
+    )
     try:
-        frag = spark.read.parquet(os.path.join(out_dir, "aml_fragments"))
         for piece in _caex_header(file_name, timestamp):
             emit(piece)
-        for h in _hierarchy_order(config):
-            emit(f"<InstanceHierarchy Name={quoteattr(h)}><Version>0.0.1</Version>")
-            part = (
-                frag.where(F.col("hierarchy") == h)
-                .select("section", "root", "xml")
-                .orderBy("section", "root")
-            )
-            for r in part.toLocalIterator():
-                emit(r.xml)
-            emit("</InstanceHierarchy>")
+        for r in rows.toLocalIterator():
+            open_through(r.h)
+            emit(r.xml)
+        open_through(len(order) - 1)
+        emit("</InstanceHierarchy>")
         emit("</CAEXFile>")
     finally:
         if close:
@@ -695,19 +678,15 @@ def stitch_aml_to(
     return md5.hexdigest()
 
 
-def stitch_aml_file(
-    spark,
-    out_dir: str,
+def aml_file_xml(
+    fragments: DataFrame,
     config: AspectsConfig = DEFAULT_ASPECTS,
     file_name: str = "export.aml",
     timestamp: str = "1970-01-01T00:00:00+00:00",
 ) -> str:
-    """String-returning convenience over ``stitch_aml_to`` (tests,
-    small exports): driver memory is O(document) BY DEFINITION here —
-    the scale path is ``stitch_aml_to`` with a file sink, which never
-    holds more than one arrow batch."""
-    import io
-
+    """``stitch_aml_to`` into a string (tests, small exports): driver
+    memory is O(document) by definition here; the scale path is
+    ``stitch_aml_to`` with a file sink."""
     buf = io.StringIO()
-    stitch_aml_to(spark, out_dir, buf, config, file_name, timestamp)
+    stitch_aml_to(fragments, buf, config, file_name, timestamp)
     return buf.getvalue()

@@ -315,6 +315,60 @@ def hamming_hex(a: Column, b: Column, hex_len: int = 16) -> Column:
     )
 
 
+def _simhash_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    slices: list[tuple[int, int]],
+    max_hamming: int,
+    cache: list | None,
+) -> DataFrame:
+    """SimHash candidate pairs bucketed on each (start, width) hex slice
+    of the fingerprint, self-equi-joined per (slice, value) and
+    verified by exact hamming distance: (id_a, id_b, hamming). Same
+    shape as MinHash-LSH: shuffles only (id, slice), never an
+    all-pairs product."""
+    kernel = _simhash_udf()
+    base = register_cache(
+        df.select(F.col(id_col).alias("id"), kernel(F.col(text_col)).alias("sh")),
+        cache,
+    )  # the signature feeds a self-join: compute once
+    buckets = base.select(
+        "id",
+        "sh",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("band"),
+                        F.substring("sh", start, width).alias("slice"),
+                    )
+                    for j, (start, width) in enumerate(slices)
+                ]
+            )
+        ).alias("bb"),
+    ).select("id", "sh", F.col("bb.band").alias("band"), F.col("bb.slice").alias("slice"))
+    a, b = buckets.alias("a"), buckets.alias("b")
+    cand = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.slice") == F.col("b.slice"))
+        & (F.col("a.id") < F.col("b.id")),
+    ).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.col("a.sh").alias("sh_a"),
+        F.col("b.sh").alias("sh_b"),
+    )
+    if len(slices) > 1:
+        cand = cand.dropDuplicates(["id_a", "id_b"])  # a pair can collide in >1 band
+    return (
+        cand.withColumn("hamming", hamming_hex(F.col("sh_a"), F.col("sh_b")))
+        .where(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
+
+
 def simhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -325,30 +379,10 @@ def simhash_near_dup_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs: bucket on the top ``prefix_hex`` hex
     chars (16 LSH bits), self-equi-join within buckets, verify exact
-    hamming distance. Same shape as MinHash-LSH: shuffles only
-    (id, prefix), never an all-pairs product. Recall misses near-dups
-    whose flipped bits land in the prefix — add rotated-prefix bands to
-    raise it (same band trick as MinHash)."""
-    kernel = _simhash_udf()
-    base = register_cache(
-        df.select(F.col(id_col).alias("id"), kernel(F.col(text_col)).alias("sh")),
-        cache,
-    )  # the signature feeds a self-join: compute once
-    a, b = base.alias("a"), base.alias("b")
-    return (
-        a.join(
-            b,
-            (F.substring(F.col("a.sh"), 1, prefix_hex)
-             == F.substring(F.col("b.sh"), 1, prefix_hex))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming_hex(F.col("a.sh"), F.col("b.sh")).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-    )
+    hamming distance. Recall misses near-dups whose flipped bits land
+    in the prefix — ``simhash_near_dup_pairs_banded`` buckets on every
+    band to raise it (same band trick as MinHash)."""
+    return _simhash_pairs(df, id_col, text_col, [(1, prefix_hex)], max_hamming, cache)
 
 
 def connected_components(
@@ -372,10 +406,10 @@ def connected_components(
     over the label table every iteration — that is the price of early
     exit, and with diameter 2-4 it is 2-4 cheap scans of an id/label
     table. For adversarial long-chain graphs (diameter ~ n) the right
-    move is not to tune the check cadence but to switch to
-    ``connected_components_star`` (large-star/small-star contraction,
-    O(log n) rounds; equivalence + chain tests in
-    tests/test_operators.py).
+    move is not to tune the check cadence but to call
+    ``connected_components_star`` instead (large-star/small-star
+    contraction, O(log n) rounds, same output; equivalence + chain
+    tests in tests/test_operators.py).
     """
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
@@ -440,8 +474,8 @@ def connected_components_star(
     Use this instead of ``connected_components`` when cluster diameter
     is unbounded (e.g. transitive-closure chains from aggressive
     thresholds); for ordinary near-dup workloads (diameter 2-4) the
-    propagation loop runs fewer jobs per round and is the default in
-    ``keep_list_from_edges``."""
+    propagation loop runs fewer jobs per round and is the one
+    ``keep_list_from_edges`` runs."""
 
     def canonical(e: DataFrame) -> DataFrame:
         return (
@@ -526,16 +560,12 @@ def near_dup_keep_list(
     return keep_list_from_edges(df.select(id_col), pairs)
 
 
-def keep_list_from_edges(
-    ids: DataFrame, edges: DataFrame, algorithm: str = "propagation"
-) -> DataFrame:
+def keep_list_from_edges(ids: DataFrame, edges: DataFrame) -> DataFrame:
     """Survivor ids given near-dup edges from ANY signal (or a union of
-    signals): connected components over the edges, keep the min id per
-    cluster plus every unpaired id. ``ids`` is a one-column frame;
-    ``edges`` carries (id_a, id_b) over the same id space.
-    ``algorithm``: 'propagation' (default — fewest jobs at near-dup
-    diameters) or 'star' (large-star/small-star, for unbounded-chain
-    edge sets).
+    signals): ``connected_components`` over the edges (fewest jobs at
+    near-dup diameters), keep the min id per cluster plus every
+    unpaired id. ``ids`` is a one-column frame; ``edges`` carries
+    (id_a, id_b) over the same id space.
 
     The component table is clamped to ``ids`` before picking each
     cluster's representative: if an edge endpoint is NOT in ``ids``
@@ -545,8 +575,7 @@ def keep_list_from_edges(
     contract) the clamp is a no-op and the output is unchanged."""
     id_col = ids.columns[0]
     idn = ids.select(F.col(id_col).alias("id"))
-    cc = connected_components_star if algorithm == "star" else connected_components
-    comp = cc(edges, "id_a", "id_b").join(idn, "id", "left_semi")
+    comp = connected_components(edges, "id_a", "id_b").join(idn, "id", "left_semi")
     rep = comp.groupBy("comp").agg(F.min("id").alias("rep"))
     drop = comp.join(rep, "comp").where(F.col("id") != F.col("rep")).select("id")
     return idn.join(drop, "id", "left_anti").select(F.col("id").alias(id_col))
@@ -565,52 +594,12 @@ def simhash_near_dup_pairs_banded(
     (band, slice), union the candidates, verify exact hamming. By
     pigeonhole, any pair within hamming bands-1 shares at least one
     untouched band — guaranteed recall there, and much higher recall
-    than the single-prefix bucket for larger distances (the rotated-
-    prefix band structure promised at simhash_near_dup_pairs)."""
+    than the single-prefix bucket for larger distances."""
     if 16 % bands:
         raise ValueError("bands must divide 16 hex chars")
     w = 16 // bands
-    kernel = _simhash_udf()
-    base = register_cache(
-        df.select(F.col(id_col).alias("id"), kernel(F.col(text_col)).alias("sh")),
-        cache,
-    )
-    buckets = base.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.substring("sh", j * w + 1, w).alias("slice"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sh", F.col("bb.band").alias("band"), F.col("bb.slice").alias("slice"))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.slice") == F.col("b.slice"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])  # a pair can collide in >1 band
-    )
-    return (
-        cand.withColumn("hamming", hamming_hex(F.col("sh_a"), F.col("sh_b")))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    slices = [(j * w + 1, w) for j in range(bands)]
+    return _simhash_pairs(df, id_col, text_col, slices, max_hamming, cache)
 
 
 def embedding_cosine(a: Column, b: Column) -> Column:

@@ -34,7 +34,7 @@ EXTRACTION_SCHEMA = (
     "spans array<struct<region:string, kind:string, row_idx:int, loc:array<double>, text:string>>, "
     "rows array<struct<row_idx:int, cols:map<string,string>, loc:array<double>, loc_repr:string>>, "
     "errors array<struct<severity:string, message:string>>, "
-    "partition_id int, kernel_docs int"
+    "partition_id int"
 )
 
 
@@ -78,7 +78,6 @@ def make_extract_batches(page_setups_json: str | None = None):
                 "rows": [],
                 "errors": [],
                 "partition_id": [pid] * n,
-                "kernel_docs": [n] * n,
             }
             if "bucket" in pdf.columns:  # checkpointed pipeline passthrough
                 out["bucket"] = pdf["bucket"]

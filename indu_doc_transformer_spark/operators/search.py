@@ -36,7 +36,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StringType, StructType
 
+from ..functions import guids as G
+from ..kernels.tokens import collapse_tokens
 from ..plans.cache import register_cache
+from .textstats import norm_text
 
 _TAGWORD = re.compile(r"^([=+\-.][A-Za-z0-9_]+)+")
 _FILTER = re.compile(
@@ -85,17 +88,17 @@ def run_parser(query: str) -> tuple[str | None, list[Filter]]:
     return tag, filters
 
 
-def _norm(c: Column) -> Column:
-    return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-
-
 def _norm_lit(s: str) -> str:
-    return " ".join(s.lower().strip().split())
+    """``norm_text`` of a query literal: the collapse contract's Python
+    twin, so a literal holding U+00A0, U+3000 or U+001C still matches
+    the column it is compared with (``str.strip()``/``str.split()``
+    would drop them)."""
+    return " ".join(collapse_tokens(s))
 
 
 def _partial(col: Column, q: str) -> Column:
     """__partial_match (searcher.py:147-160): normalized substring."""
-    return _norm(col).contains(F.lit(_norm_lit(q)))
+    return norm_text(col).contains(F.lit(_norm_lit(q)))
 
 
 # ---------------------------------------------------------------------------
@@ -125,8 +128,8 @@ def attr_search_map(tables: dict[str, DataFrame]) -> DataFrame:
     )
     simple = a.where(F.col("type") == "SIMPLE").select(
         "object_guid",
-        _norm(F.col("name")).alias("k"),
-        _norm(F.get_json_object("value_json", "$.value")).alias("v"),
+        norm_text(F.col("name")).alias("k"),
+        norm_text(F.get_json_object("value_json", "$.value")).alias("v"),
     )
     tracks = a.where(F.col("type") == "ROUTING_TRACKS").select(
         "object_guid",
@@ -171,9 +174,9 @@ def build_target_index(
         tables["xtargets"]
         .join(amap, tables["xtargets"].guid == amap.object_guid, "left")
         .select(
-            _norm(F.col("tag")).alias("tag"),
+            norm_text(F.col("tag")).alias("tag"),
             "guid",
-            _norm(F.col("target_type")).alias("type"),
+            norm_text(F.col("target_type")).alias("type"),
             F.coalesce("attributes", F.expr(f"cast(map() as {ATTR_MAP_T})")).alias(
                 "attributes"
             ),
@@ -202,8 +205,8 @@ def build_connection_index(
         .select(
             F.col("guid").alias("xguid"),
             F.col("tag").alias("raw_tag"),
-            _norm(F.col("tag")).alias("tag"),
-            _norm(F.col("target_type")).alias("type"),
+            norm_text(F.col("tag")).alias("tag"),
+            norm_text(F.col("target_type")).alias("type"),
             F.coalesce("attributes", F.expr(f"cast(map() as {ATTR_MAP_T})")).alias(
                 "attributes"
             ),
@@ -242,9 +245,7 @@ def build_connection_index(
 
     def pin_struct(pin_col: str, role_name: str) -> Column:
         names = F.slice(F.split(F.col(pin_col), ":"), 2, 100000)
-        from ..functions import guids as G
-
-        top = F.element_at(F.expr(G.sql_pin_chain(pin_col, role_name, "guid")), -1)
+        top = F.expr(G.sql_top_pin(pin_col, role_name, "guid"))
         return F.struct(
             F.array_join(names, "").alias("name"),
             F.lit(role_name).alias("role"),

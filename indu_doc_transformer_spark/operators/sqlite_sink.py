@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_ASPECTS, AspectsConfig
+from ..functions import guids as G
 # the ONE canonical value_json serializer (compact, sorted keys):
 # load_sqlite re-canonicalizes with it so round-trips can't drift from
 # the God-factory oracle's serialization
@@ -187,19 +188,6 @@ def _stream(
         cur.executemany(sql, buf)
 
 
-def _top_pins(pins: DataFrame) -> DataFrame:
-    """(link_guid, role) -> guid of the chain-HEAD pin: the reference's
-    ``link.src_pin``/``dest_pin`` is the pin built last by create_pin's
-    reversed loop (god.py:398-422, 553-560), i.e. the one no other pin
-    of the same link+role points to via ``child_guid``."""
-    child_refs = pins.where(F.col("child_guid").isNotNull()).select(
-        F.col("child_guid").alias("guid"), "link_guid", "role"
-    )
-    return pins.join(child_refs, ["guid", "link_guid", "role"], "left_anti").select(
-        "link_guid", "role", F.col("guid").alias("pin_guid")
-    )
-
-
 def export_sqlite(
     tables: Dict[str, DataFrame],
     db_file: str,
@@ -223,15 +211,13 @@ def export_sqlite(
     xa = tables["xtarget_aspects"]
     lineage = tables["lineage"]
 
-    # link -> head-pin guids (distributed anti-join, see _top_pins)
-    tops = _top_pins(pins)
-    src_top = tops.where(F.col("role") == "src").select(
-        F.col("link_guid").alias("guid"), F.col("pin_guid").alias("src_pin_id")
+    # link -> head-pin guids: the reference's link.src_pin/dest_pin
+    # (god.py:553-560), re-derived from the link's own pin column
+    links_full = links.withColumn(
+        "src_pin_id", F.expr(G.sql_top_pin("src_pin_name", "src", "guid"))["guid"]
+    ).withColumn(
+        "dest_pin_id", F.expr(G.sql_top_pin("dest_pin_name", "dst", "guid"))["guid"]
     )
-    dst_top = tops.where(F.col("role") == "dst").select(
-        F.col("link_guid").alias("guid"), F.col("pin_guid").alias("dest_pin_id")
-    )
-    links_full = links.join(src_top, "guid", "left").join(dst_top, "guid", "left")
 
     # attributed_obj_type: resolve each object guid against the entity
     # tables it can belong to (db.py:315-348 writes one through row per

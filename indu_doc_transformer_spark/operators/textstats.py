@@ -550,34 +550,6 @@ def unigram_rarity(df, id_col: str, text_col: str, scale: int = 1000):
     )
 
 
-def token_shards(df, id_col: str, text_col: str, tokens_per_shard: int):
-    """Assign documents to fixed-token-budget training shards: docs are
-    laid out in id order and a shard boundary falls every
-    ``tokens_per_shard`` whitespace tokens (shard = floor of the
-    running token count BEFORE the doc / budget — a doc never splits).
-
-    Scale note: the global running sum is one window over the id
-    ordering. At 100 TB you'd range-partition by id first (Spark's
-    window on an unpartitioned frame funnels through one task); the
-    two-pass variant — per-partition subtotals broadcast as offsets —
-    keeps the same output contract. The demonstrator uses the direct
-    window; the contract (deterministic id-ordered packing) is what the
-    oracle pins."""
-    from pyspark.sql import Window
-
-    n = ws_token_count(F.col(text_col)).cast("long")
-    w = (
-        Window.orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum(n).over(w)
-    return df.select(
-        F.col(id_col).alias("id"),
-        n.alias("n_tokens"),
-        F.floor((cum - n) / tokens_per_shard).cast("long").alias("shard_id"),
-    )
-
-
 def _token_starts(base: DataFrame, partitions: int) -> DataFrame:
     """Distributed prefix sum over (id, n_tokens): returns (id, n_tokens,
     _start), where _start is the running token count BEFORE the doc in
@@ -612,9 +584,15 @@ def _token_starts(base: DataFrame, partitions: int) -> DataFrame:
 def token_shards_scalable(
     df, id_col: str, text_col: str, tokens_per_shard: int, partitions: int = 0
 ):
-    """The 100-TB variant of ``token_shards``: the same shards from the
-    distributed prefix sum ``_token_starts``. Output is identical to the
-    single-window version for any partition bounds."""
+    """Assign documents to fixed-token-budget training shards: docs are
+    laid out in id order and a shard boundary falls every
+    ``tokens_per_shard`` whitespace tokens (shard = floor of the
+    running token count BEFORE the doc / budget — a doc never splits).
+
+    The running count is the distributed prefix sum ``_token_starts``
+    (parallel per-partition windows plus broadcast subtotal offsets),
+    never one global window task; the output is the same for any
+    partition bounds. Its subtotal job runs while this plan is built."""
     n = ws_token_count(F.col(text_col)).cast("long")
     base = _token_starts(
         df.select(F.col(id_col).alias("id"), n.alias("n_tokens")), partitions
@@ -628,13 +606,13 @@ def token_shards_scalable(
 
 def sequence_pack(df, id_col: str, text_col: str, seq_len: int, partitions: int = 0):
     """GPT-style pretraining packing — the complement of
-    ``token_shards`` (which never splits a doc): documents are
+    ``token_shards_scalable`` (which never splits a doc): documents are
     concatenated in id order into one global token stream and chunked
     into fixed ``seq_len`` sequences; docs DO split across sequence
     boundaries. One output row per (doc, sequence) overlap:
     (id, n_tokens, seq_id, seq_offset, doc_offset, slice_len) — the
     slice map a training loader needs to materialize packed sequences.
-    Token counts use ws_token_count (the token_shards family
+    Token counts use ws_token_count (the token-shard family
     semantics: an empty string is one token, matching the oracle
     engine); docs with no tokens (NULL text) emit nothing.
 
@@ -719,9 +697,7 @@ def corpus_report(
     )
 
 
-def shard_manifest(
-    df, id_col: str, text_col: str, tokens_per_shard: int, assign=None
-):
+def shard_manifest(df, id_col: str, text_col: str, tokens_per_shard: int):
     """Per-shard release manifest — the artifact a training-data drop
     ships next to its shards: (shard_id, n_docs, n_tokens, first_id,
     last_id, content_hash). content_hash is an order-insensitive
@@ -732,12 +708,12 @@ def shard_manifest(
     identical hex-prefix cast). Verifying a delivered shard = re-xor
     its rows and compare one number.
 
-    ``assign`` is the shard-assignment operator — ``token_shards``
-    (default) or ``token_shards_scalable`` for 100 TB — so the pinned
-    packing formula lives in exactly ONE place; the per-row content
-    hash joins back on id (id-keyed equi-join, scale-safe), then ONE
-    aggregation with map-side combine."""
-    shards = (assign or token_shards)(df, id_col, text_col, tokens_per_shard)
+    Shards come from ``token_shards_scalable``, so the pinned packing
+    formula lives in exactly ONE place, and its prefix-sum subtotal job
+    runs while this plan is built; the per-row content hash joins back
+    on id (id-keyed equi-join, scale-safe), then ONE aggregation with
+    map-side combine."""
+    shards = token_shards_scalable(df, id_col, text_col, tokens_per_shard)
     h = F.conv(
         F.substring(
             F.md5(

@@ -315,6 +315,41 @@ def test_sql_guid_templates_match_kernel(spark):
     assert got[4].l_sql == tp.link_guid("virtual_link", ":a\nb", ":c\rd", g2)
 
 
+def test_top_pin_is_chain_head(spark):
+    """sql_top_pin (the head pin that aml, search and sqlite_sink all
+    export) is, for every link and role of the assembled 8-page
+    fixture, the pin of that link and role that no other pin names as
+    its child: the anti-join over the pins table, kept here as the
+    reference. A pin column with no chain gives NULL, as the anti-join
+    does."""
+    from pyspark.sql import functions as F
+
+    from indu_doc_transformer_spark.functions import guids as G
+
+    tables = asm_op.assemble(_request_rows(spark))
+    pins = tables["pins"]
+    children = pins.where(F.col("child_guid").isNotNull()).select(
+        F.col("child_guid").alias("guid"), "link_guid", "role"
+    )
+    want = {
+        (r.link_guid, r.role, r.guid)
+        for r in pins.join(children, ["guid", "link_guid", "role"], "left_anti").collect()
+    }
+    got = set()
+    for r in tables["links"].select(
+        "guid",
+        F.expr(G.sql_top_pin("src_pin_name", "src", "guid"))["guid"].alias("src"),
+        F.expr(G.sql_top_pin("dest_pin_name", "dst", "guid"))["guid"].alias("dst"),
+    ).collect():
+        got |= {(r.guid, "src", r.src), (r.guid, "dst", r.dst)}
+    assert got == want
+    assert len(got) >= 4
+    # a pin column with no chain has no head pin
+    none = spark.createDataFrame([("X", "g"), (None, "g")], "p string, guid string")
+    heads = none.select(F.expr(G.sql_top_pin("p", "src", "guid")).alias("h")).collect()
+    assert [r.h for r in heads] == [None, None]
+
+
 def test_quoting_hostile_attributes_match_oracle(spark):
     """Attribute keys and values holding SQL/JSON metacharacters ('
     \\ ` newline) and non-ASCII text pass through the request layer as

@@ -622,7 +622,7 @@ def test_warc_nonlocal_scheme_fails_loudly():
 def test_extract_from_warc_matches_chained_path(spark, tmp_path):
     """The fused ingest+extract passes (html never crosses Arrow) must
     produce exactly the rows read_warc -> extract produces: every
-    column but the per-task ``partition_id``/``kernel_docs``."""
+    column but the per-task ``partition_id``."""
     from indu_doc_transformer_spark.operators import extraction as ex
     from indu_doc_transformer_spark.sources import warc as w
     from indu_doc_transformer_spark.sources.corpus import generate_doc
@@ -636,7 +636,7 @@ def test_extract_from_warc_matches_chained_path(spark, tmp_path):
     idx_b = w.write_warc(recs[20:], str(tmp_path / "b.warc.gz"))
 
     def rows(df):
-        cols = [c for c in df.columns if c not in ("partition_id", "kernel_docs")]
+        cols = [c for c in df.columns if c != "partition_id"]
         return sorted(r[0] for r in df.select(F.to_json(F.struct(*cols))).collect())
 
     fused = ex.extract_from_warc(spark, str(tmp_path) + "/*.warc.gz")

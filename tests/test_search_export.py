@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from indu_doc_transformer_spark.operators import export as ex_op
 from indu_doc_transformer_spark.operators import search as s_op
 from indu_doc_transformer_spark.operators.search import run_parser
+from token_cases import TOKEN_CASES
 
 
 class TestParser:
@@ -87,6 +88,21 @@ class TestParser:
     def test_empty_value_strips(self):
         _, fs = run_parser("@guid=\n")
         assert fs[0].value == ""
+
+
+def test_search_literal_normalization_matches_column(spark):
+    """A query literal is normalized as the column it is compared with:
+    _norm_lit(text) equals Spark norm_text(lit(text)) for every
+    non-NULL shared token case, U+00A0, U+3000 and U+001C included
+    (str.strip()/str.split() would drop them)."""
+    from indu_doc_transformer_spark.operators.textstats import norm_text
+
+    texts = [t for t, _, _ in TOKEN_CASES if t is not None]
+    got = spark.range(1).select(
+        *[norm_text(F.lit(t)).alias(f"c{i}") for i, t in enumerate(texts)]
+    ).first()
+    for i, t in enumerate(texts):
+        assert s_op._norm_lit(t) == got[f"c{i}"], repr(t)
 
 
 @pytest.fixture(scope="module")
