@@ -78,6 +78,8 @@ def load_input(spark, spec: str):
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from .operators.sinks import EXPORTERS
+
     ap = argparse.ArgumentParser(
         prog="python -m indu_doc_transformer_spark",
         description="Process a documents table / WARC archive and "
@@ -97,9 +99,9 @@ def build_parser() -> argparse.ArgumentParser:
                     "directory (for --export-format sqlite: the .db "
                     "file path, reference db_builder schema)")
     ap.add_argument("--export-format",
-                    choices=["json", "parquet", "aml", "sqlite"],
+                    choices=list(EXPORTERS),
                     default="json",
-                    help="export format via the exporter registry "
+                    help="export format via the exporter table "
                     "(operators/sinks.py; default: json)")
     ap.add_argument("-v", "--verbose", action="store_true",
                     help="verbose logging (equivalent to --log-level DEBUG)")

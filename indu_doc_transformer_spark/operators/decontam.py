@@ -155,7 +155,7 @@ def semantic_contamination(
     b = bench.select(F.col(vec_col).alias("_bv"))
     from .dedup import embedding_cosine
 
-    sim = embedding_cosine(F.col("_tv"), F.col("_bv"))
+    sim = embedding_cosine("_tv", "_bv")
     agg = t.crossJoin(broadcast(b)).groupBy("id").agg(
         F.max(sim).alias("_mx")
     )

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import sql_cosine
 from ..plans.cache import register_cache, release_local_checkpoint
 from .textstats import _tokens, norm_text
 
@@ -602,28 +603,14 @@ def simhash_near_dup_pairs_banded(
     return _simhash_pairs(df, id_col, text_col, slices, max_hamming, cache)
 
 
-def embedding_cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity via an explicit sequential fold (identical
-    summation order to the DuckDB oracle), rounded to 6 decimals.
-
-    A zero-norm vector yields NaN, NOT a job-killing error: ANSI-mode
-    Spark raises divideByZeroError even for doubles, so the division
-    is guarded; DuckDB's IEEE 0/0 produces the same NaN, and both
-    engines order NaN first under DESC and treat NaN >= t as true, so
-    the semantics stay engine-identical for degenerate vectors."""
-    def dot(x, y):
-        return F.aggregate(
-            F.sequence(F.lit(1), F.size(x)),
-            F.lit(0.0),
-            lambda acc, i: acc
-            + F.element_at(x, i).cast("double") * F.element_at(y, i).cast("double"),
-        )
-
-    denom = F.sqrt(dot(a, a)) * F.sqrt(dot(b, b))
-    return F.round(
-        F.when(denom != 0, dot(a, b) / denom).otherwise(F.lit(float("nan"))),
-        6,
-    )
+def embedding_cosine(a: str, b: str) -> Column:
+    """Cosine similarity of the array columns named by the SQL
+    expressions ``a`` and ``b`` (``functions.vectors.sql_cosine``: an
+    explicit sequential fold, the DuckDB oracle's summation order),
+    rounded to 6 decimals. A zero-norm vector yields NaN; both engines
+    order NaN first under DESC and treat NaN >= t as true, so the
+    semantics stay engine-identical for degenerate vectors."""
+    return F.expr(sql_cosine(a, b))
 
 
 def embedding_near_dup_lsh(
@@ -687,7 +674,7 @@ def embedding_near_dup_lsh(
         .select(
             "id_a",
             "id_b",
-            embedding_cosine(F.col("v_a"), F.col("v_b")).alias("cos_sim"),
+            embedding_cosine("v_a", "v_b").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
     )
@@ -707,7 +694,7 @@ def embedding_near_dup_pairs(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            embedding_cosine(F.col("a.v"), F.col("b.v")).alias("cos_sim"),
+            embedding_cosine("a.v", "b.v").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
     )

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import sql_cosine, sql_dot
 from ..plans.cache import register_cache
 from .dedup import embedding_cosine
 
@@ -68,19 +69,6 @@ def _topk(scored: DataFrame, k: int, num_salts: int = 16) -> DataFrame:
     )
 
 
-def _dot(x: Column, y: Column) -> Column:
-    """The embedding_cosine fold (dedup.embedding_cosine), factored out
-    so norms can be precomputed per vector instead of per joined pair —
-    MUST stay expression-identical to the fold inside embedding_cosine
-    (same sequential order => bit-identical doubles)."""
-    return F.aggregate(
-        F.sequence(F.lit(1), F.size(x)),
-        F.lit(0.0),
-        lambda acc, i: acc
-        + F.element_at(x, i).cast("double") * F.element_at(y, i).cast("double"),
-    )
-
-
 def ann_bruteforce_topk(
     df: DataFrame, id_col: str, vec_col: str, probe_ids: list[int], k: int = 5
 ) -> DataFrame:
@@ -95,7 +83,7 @@ def ann_bruteforce_topk(
     embedding_cosine form (pinned by
     tests/test_operators.py::test_ann_bruteforce_norm_precompute_parity)."""
     base = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    base = base.withColumn("_n", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    base = base.withColumn("_n", F.sqrt(F.expr(sql_dot("v", "v"))))
     probes = base.where(F.col("vec_id").isin(probe_ids)).select(
         F.col("vec_id").alias("probe_id"),
         F.col("v").alias("pv"),
@@ -108,7 +96,7 @@ def ann_bruteforce_topk(
     scored = scored.withColumn(
         "cos_sim",
         F.round(
-            F.when(denom != 0, _dot(F.col("pv"), F.col("v")) / denom).otherwise(
+            F.when(denom != 0, F.expr(sql_dot("pv", "v")) / denom).otherwise(
                 F.lit(float("nan"))
             ),
             6,
@@ -175,7 +163,7 @@ def ann_lsh_topk(
     scored = base.join(
         F.broadcast(probes),
         (F.col("bucket") == F.col("pbucket")) & (F.col("vec_id") != F.col("probe_id")),
-    ).withColumn("cos_sim", embedding_cosine(F.col("pv"), F.col("v")))
+    ).withColumn("cos_sim", embedding_cosine("pv", "v"))
     # multi-probe can reach the same candidate via several buckets
     scored = scored.dropDuplicates(["probe_id", "vec_id"])
     return _topk(scored, k)
@@ -208,26 +196,10 @@ def nearest_cells(v_col: str, centroids: DataFrame, n: int) -> Column:
     reverse(array_sort(struct(sim, cell)))."""
     rows = centroids.collect()  # bounded: the coarse quantizer is small
 
-    def dot(a: str, b: str) -> str:
-        return (
-            f"aggregate(sequence(1, size({a})), cast(0.0 as double), "
-            f"(acc, i) -> acc + cast(element_at({a}, i) as double)"
-            f" * cast(element_at({b}, i) as double))"
-        )
-
-    def cos(cv: str) -> str:
-        # zero-norm guard: ANSI Spark raises divideByZeroError even for
-        # doubles — emit NaN like IEEE/DuckDB instead of killing the job
-        denom = f"(sqrt({dot(cv, cv)}) * sqrt({dot(v_col, v_col)}))"
-        return (
-            f"round(CASE WHEN {denom} != 0 THEN {dot(cv, v_col)} / {denom} "
-            f"ELSE cast('NaN' as double) END, 6)"
-        )
-
     structs = []
     for r in rows:
         cv = "array(" + ",".join(f"cast({float(x)!r} as double)" for x in r.cv) + ")"
-        structs.append(f"struct({cos(cv)} AS sim, {int(r.cell)} AS cell)")
+        structs.append(f"struct({sql_cosine(cv, v_col)} AS sim, {int(r.cell)} AS cell)")
     cells = "array(" + ",".join(structs) + ")"
     return F.expr(
         f"transform(slice(reverse(array_sort({cells})), 1, {n}), c -> c.cell)"
@@ -268,5 +240,5 @@ def ann_ivf_topk(
     scored = assigned.join(
         F.broadcast(probes),
         (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("probe_id")),
-    ).withColumn("cos_sim", embedding_cosine(F.col("pv"), F.col("v")))
+    ).withColumn("cos_sim", embedding_cosine("pv", "v"))
     return _topk(scored, k)

@@ -1,15 +1,15 @@
-"""Pluggable exporter registry: one uniform write surface over the
-entity-table dict.
+"""The exporter table: one uniform write surface over the entity-table
+dict.
 
 Reference analog: /root/reference/src/indu_doc/exporters/exporter.py
 :1-42 (InduDocExporter ABC with export_data/import_data) and its
 db_exporter implementation — re-expressed for Spark: an exporter is a
 callable ``(tables: dict[str, DataFrame], path: str, **opts) -> None``
-registered under a format name; ``export_tables`` dispatches. The
-built-ins wrap the existing json / parquet / AML writers, so the CLI
-and pipeline keep one sink API while custom sinks (Iceberg, a feature
-store, ...) register without touching callers. ``read_entity_tables``
-is the import_data analog for the parquet format (round-trip)."""
+keyed by its format name in ``EXPORTERS``; ``export_tables``
+dispatches, and the CLI's ``--export-format`` offers the same names.
+The entries wrap the json / parquet / AML / SQLite writers, so the CLI
+and pipeline keep one sink API. ``read_entity_tables`` is the
+import_data analog for the parquet format (round-trip)."""
 
 from __future__ import annotations
 
@@ -18,38 +18,7 @@ from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 
-_REGISTRY: Dict[str, Callable] = {}
-
-
-def register_exporter(name: str, fn: Callable) -> None:
-    """Register ``fn(tables, path, **opts)`` under ``name``;
-    re-registering replaces (latest wins, like the reference's
-    plugin registration)."""
-    _REGISTRY[name] = fn
-
-
-def exporter_names() -> list[str]:
-    return sorted(_REGISTRY)
-
-
-def get_exporter(name: str) -> Callable:
-    try:
-        return _REGISTRY[name]
-    except KeyError:
-        raise ValueError(
-            f"Unsupported export format: {name} (known: {', '.join(exporter_names())})"
-        ) from None
-
-
-def export_tables(
-    tables: Dict[str, DataFrame], path: str, format: str = "parquet", **opts
-) -> None:
-    get_exporter(format)(tables, path, **opts)
-
-
-# ---------------------------------------------------------------------------
-# built-ins
-# ---------------------------------------------------------------------------
+from ..plans.cache import temp_caches
 
 
 def _export_parquet(tables, path, **opts):
@@ -65,20 +34,16 @@ def _export_json(tables, path, **opts):
 
 def _export_aml(tables, path, config=None, **opts):
     """Distributed CAEX export: fragment table + stitch index (the
-    value-oracled x_aml_export path)."""
+    value-oracled x_aml_export path). The fragments' persisted target
+    join is released once the export is written."""
     from .aml import aml_fragments, write_aml_fragments
 
     kw = {} if config is None else {"config": config}
-    write_aml_fragments(aml_fragments(tables, **kw), path, **kw)
-
-
-register_exporter("parquet", _export_parquet)
-register_exporter("json", _export_json)
-register_exporter("aml", _export_aml)
+    with temp_caches() as cache:
+        write_aml_fragments(aml_fragments(tables, cache=cache, **kw), path, **kw)
 
 
 def _export_sqlite(tables, path, config=None, documents=None, **opts):
-    # lazy import: sqlite_sink imports register_exporter from here.
     # Forward the remaining opts (notably max_rows) so the bounded-
     # export cap can be raised/disabled through THIS public surface —
     # the cap's error message tells users to do exactly that.
@@ -90,7 +55,26 @@ def _export_sqlite(tables, path, config=None, documents=None, **opts):
     export_sqlite(tables, path, documents=documents, **kw)
 
 
-register_exporter("sqlite", _export_sqlite)
+EXPORTERS: Dict[str, Callable] = {
+    "json": _export_json,
+    "parquet": _export_parquet,
+    "aml": _export_aml,
+    "sqlite": _export_sqlite,
+}
+
+
+def export_tables(
+    tables: Dict[str, DataFrame], path: str, format: str = "parquet", **opts
+) -> None:
+    """Write the entity-table dict with the ``EXPORTERS`` entry named
+    by ``format``."""
+    try:
+        export = EXPORTERS[format]
+    except KeyError:
+        raise ValueError(
+            f"Unsupported export format: {format} (known: {', '.join(sorted(EXPORTERS))})"
+        ) from None
+    export(tables, path, **opts)
 
 
 def read_entity_tables(

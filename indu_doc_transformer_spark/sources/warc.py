@@ -19,13 +19,15 @@ tasks — optional by design; without an index the per-file unit
 stands.
 
 Memory design: nothing in this module ever materializes a whole
-decompressed archive. Decompression is member-wise streamed through
-``zlib.decompressobj`` in bounded chunks, the record walker keeps only
-a compacted window of O(largest record), and the Spark kernels flush
-size-bounded output DataFrames instead of accumulating a batch's worth
-of pages. Peak task memory is therefore O(chunk + largest record
-[+ compressed file, only when the storage scheme forces Spark to hand
-us whole ``content``]) — never O(decompressed file). For local /
+decompressed archive. Decompression is the standard library's
+streaming ``gzip.GzipFile`` (concatenated per-record members, zero
+padding between them, a CRC check per member), read in bounded
+``read1`` chunks; the record walker keeps only a compacted window of
+O(largest record), and the Spark kernels flush size-bounded output
+DataFrames instead of accumulating a batch's worth of pages. Peak task
+memory is therefore O(chunk + largest record [+ compressed file, only
+when the storage scheme forces Spark to hand us whole ``content``]) —
+never O(decompressed file). For local /
 ``file:`` inputs even the compressed side is streamed from disk
 (``binaryFile`` prunes the unused ``content`` column). A
 Common-Crawl-shaped ~1 GiB archive (~4-5 GiB raw) thus costs a task
@@ -55,7 +57,7 @@ WARC_SCHEMA = (
     "warc_file string"
 )
 
-_CHUNK = 1 << 20  # 1 MiB decompressed-output / file-read granularity
+_CHUNK = 1 << 20  # 1 MiB cap on one read1 of an archive
 _FLUSH_BYTES = 64 << 20  # flush kernel output every ~64 MiB of html
 # a Content-Length above this is treated as a malformed record (bad),
 # not buffered: otherwise one adversarial/corrupt length would make
@@ -208,87 +210,6 @@ def parse_warc(data: bytes, emit_skips: bool = False) -> Iterator[dict]:
     return iter_warc_stream((data,), emit_skips=emit_skips)
 
 
-def _iter_gunzip_chunks(
-    compressed: Iterable[bytes], chunk_size: int = _CHUNK
-) -> Iterator[bytes]:
-    """Member-wise streaming gunzip (the .warc.gz layout: one gzip
-    member per record). Output is produced in <=chunk_size pieces via
-    ``zlib.decompressobj(max_length=...)`` — peak memory is
-    O(chunk_size), never O(file). Raises like the gzip module:
-    BadGzipFile on corrupt data / trailing garbage, EOFError on
-    truncation mid-member."""
-    d = zlib.decompressobj(31)  # the caller sniffed the first magic
-    buf = b""
-    it = iter(compressed)
-    eof_in = False
-    while True:
-        if d is None:
-            # between members: zero padding is legal and may span read
-            # chunks — discard it BEFORE sniffing, so the outcome can't
-            # depend on where a chunk boundary falls relative to the
-            # padding (a member after padding must never be dropped)
-            buf = buf.lstrip(b"\x00")
-            if len(buf) < 2 and not eof_in:
-                try:
-                    buf += next(it)
-                except StopIteration:
-                    eof_in = True
-                continue
-            if not buf:
-                return
-            if buf[:2] == b"\x1f\x8b":
-                d = zlib.decompressobj(31)
-                continue
-            raise gzip.BadGzipFile("trailing garbage after gzip member")
-        if not buf:
-            if eof_in:
-                tail = d.flush()
-                if tail:
-                    yield tail
-                raise EOFError("compressed WARC member truncated")
-            try:
-                buf += next(it)
-            except StopIteration:
-                eof_in = True
-            continue
-        try:
-            out = d.decompress(buf, chunk_size)
-        except zlib.error as e:
-            raise gzip.BadGzipFile(str(e)) from e
-        if out:
-            yield out
-        if d.eof:
-            buf = d.unused_data
-            d = None
-        else:
-            buf = d.unconsumed_tail
-
-
-def _iter_raw_chunks(
-    compressed: Iterable[bytes], chunk_size: int = _CHUNK
-) -> Iterator[bytes]:
-    """Transparent decompression over an iterable of compressed (or
-    plain) byte pieces: sniffs the gzip magic on the first piece."""
-    it = iter(compressed)
-    try:
-        first = next(it)
-    except StopIteration:
-        return
-    while len(first) < 2:  # need 2 bytes to sniff the magic
-        try:
-            first += next(it)
-        except StopIteration:
-            break
-    def _chain():
-        yield first
-        yield from it
-    if first[:2] == b"\x1f\x8b":
-        yield from _iter_gunzip_chunks(_chain(), chunk_size)
-    else:
-        for piece in _chain():
-            yield piece
-
-
 def _local_fs_path(path: str) -> str:
     """Normalize a 'file:'/'local:' URI (as produced by binaryFile) to
     a plain filesystem path. A non-local scheme (hdfs://, s3a://, ... —
@@ -312,46 +233,71 @@ def _local_fs_path(path: str) -> str:
     return local
 
 
-def _iter_file_chunks(path: str, chunk_size: int = _CHUNK) -> Iterator[bytes]:
-    """Bounded-size reads of a local file (see _local_fs_path for the
-    scheme rule). The open is EAGER — it happens at call time, not at
-    first next() — so that open()-time failures of ANY class (missing
-    path, permissions, EMFILE fd exhaustion, ELOOP, ...) raise at the
-    call site, OUTSIDE the kernels' mid-stream salvage try-blocks.
+class _GzipArchive(gzip.GzipFile):
+    """A ``GzipFile`` that closes the file it reads: a plain
+    ``GzipFile`` leaves a handed-in ``fileobj`` open."""
+
+    def close(self):
+        f = self.fileobj
+        try:
+            super().close()
+        finally:
+            if f is not None:
+                f.close()
+
+
+def _open_archive(path: str, content=None):
+    """Open one archive for reading: the local file (see _local_fs_path
+    for the scheme rule), or the compressed ``content`` bytes when
+    Spark shipped them. A gzip archive (concatenated members, zero
+    padding between them allowed) comes back as a ``GzipFile``, a plain
+    one as the file itself; closing either closes the file. The open
+    is EAGER, so open()-time failures of ANY class (missing path,
+    permissions, EMFILE fd exhaustion, ELOOP, ...) raise at the call
+    site, OUTSIDE the kernels' mid-stream salvage try-blocks.
     Enumerating 'open-error' exception classes proved incomplete
     (round-6 review): hoisting the open is the structural fix."""
-    f = open(_local_fs_path(path), "rb")
-
-    def chunks() -> Iterator[bytes]:
-        with f:
-            while True:
-                piece = f.read(chunk_size)
-                if not piece:
-                    return
-                yield piece
-
-    return chunks()
-
-
-def _bytes_chunks(content: bytes, chunk_size: int = _CHUNK) -> Iterator[bytes]:
-    mv = memoryview(content)
-    for i in range(0, len(content), chunk_size):
-        yield bytes(mv[i : i + chunk_size])
-
-
-def _file_record_stream(path: str, content=None, emit_skips: bool = False):
-    """Record iterator for one archive: streamed from disk when the
-    compressed bytes weren't shipped (local mode), else streamed over
-    the in-memory compressed bytes. Either way the DECOMPRESSED side
-    is never materialized whole. Opening the archive happens HERE
-    (eagerly, via _iter_file_chunks) — call this OUTSIDE any salvage
-    try-block so unopenable archives fail tasks loudly."""
-    raw = (
-        _iter_file_chunks(path)
+    f = (
+        open(_local_fs_path(path), "rb")
         if content is None
-        else _bytes_chunks(bytes(content))
+        else io.BytesIO(bytes(content))
     )
-    return iter_warc_stream(_iter_raw_chunks(raw), emit_skips=emit_skips)
+    magic = f.read(2)
+    f.seek(0)
+    return _GzipArchive(fileobj=f) if magic == b"\x1f\x8b" else f
+
+
+# the messages of gzip.GzipFile's end-of-member check
+_CHECK_FAILED = ("CRC check failed", "Incorrect length of data produced")
+
+
+def _records(archive, emit_skips: bool = False) -> Iterator[dict]:
+    """Walk the records of an ``_open_archive`` result, closing it at
+    the end. ``read1``, not ``read``: one ``read1`` decodes at most one
+    gzip member, so a corrupt member never discards records already
+    decoded before it (a ``read`` of _CHUNK spans many members).
+
+    ``GzipFile`` checks a member's CRC and size on the read AFTER the
+    one that returned the member's last bytes, so each chunk reaches
+    the walker only once the next read has returned; when that read
+    fails the check, the chunk is dropped and the member never
+    completes a record. Any other failure of the next read (a corrupt
+    next member, trailing garbage) keeps the chunk: it is valid."""
+
+    def checked() -> Iterator[bytes]:
+        held = archive.read1(_CHUNK)
+        while held:
+            try:
+                nxt = archive.read1(_CHUNK)
+            except (OSError, EOFError, zlib.error) as e:
+                if not str(e).startswith(_CHECK_FAILED):
+                    yield held
+                raise
+            yield held
+            held = nxt
+
+    with archive:
+        yield from iter_warc_stream(checked(), emit_skips=emit_skips)
 
 
 def _is_local(path: str) -> bool:
@@ -429,7 +375,7 @@ def _iter_file_records(batches: Iterator[pd.DataFrame]):
             # fails the task loudly, whatever the error class —
             # same rule as the non-local-scheme RuntimeError
             # (ADVICE r5; structural form from the r6 review)
-            stream = _file_record_stream(p, content)
+            stream = _records(_open_archive(p, content))
             try:
                 for rec in stream:
                     if not rec.get("bad"):
@@ -461,7 +407,7 @@ def read_warc(
 
     binaryFile supplies the file listing; for local/'file:' storage the
     ``content`` column is pruned away and each task streams its archive
-    from disk in 1 MiB reads (peak memory O(record)); for remote
+    from disk (peak memory O(record)); for remote
     storage Spark ships the compressed bytes and only the gunzip side
     streams (peak O(compressed + record)). Output rows are flushed in
     ~64 MiB pandas frames, never accumulated per batch. A corrupt
@@ -489,7 +435,7 @@ def warc_file_stats(spark: SparkSession, path: str) -> DataFrame:
                 content = None if contents is None else contents.iloc[i]
                 n_rec = n_resp = n_bad = 0
                 try:
-                    for rec in _file_record_stream(p, content, emit_skips=True):
+                    for rec in _records(_open_archive(p, content), emit_skips=True):
                         n_rec += 1
                         if rec.get("skip"):
                             pass
@@ -649,10 +595,9 @@ def _split_index(
 def _iter_index_records(batches: Iterator[pd.DataFrame]):
     """Walk (path, record) pairs for a task's index rows: one open
     handle per contiguous file run, seek+read+gunzip per member.
-    Corrupt members are skipped (mid-stream salvage rule; BadGzipFile
-    is an OSError subclass); open-time failures raise loudly. The
-    walker of ``index_frames``, so of read_warc_indexed and
-    extraction.extract_from_warc_indexed."""
+    Corrupt members are skipped (mid-stream salvage rule); open-time
+    failures raise loudly. The walker of ``index_frames``, so of
+    read_warc_indexed and extraction.extract_from_warc_indexed."""
     cur_path: str | None = None
     f = None
     try:
@@ -666,15 +611,16 @@ def _iter_index_records(batches: Iterator[pd.DataFrame]):
                 f.seek(int(off))
                 member = f.read(int(ln))
                 try:
-                    for rec in iter_warc_stream(_iter_raw_chunks([member])):
+                    for rec in _records(_open_archive(p, member)):
                         if rec.get("bad"):
                             continue
                         yield p, rec
                 except (OSError, EOFError, zlib.error):
-                    # corrupt member (BadGzipFile is an OSError
-                    # subclass): skip it, keep the rest. The open
-                    # above is outside this try, so unopenable
-                    # archives still fail loudly.
+                    # corrupt member (BadGzipFile, a truncated member's
+                    # EOFError, a bad deflate stream's zlib.error):
+                    # skip it, keep the rest. The file open above is
+                    # outside this try, so unopenable archives still
+                    # fail loudly.
                     continue
     finally:
         if f is not None:

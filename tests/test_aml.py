@@ -32,7 +32,9 @@ def tables(spark):
 
     extracted = ex.extract(corpus_df(spark, 120, partitions=4), num_partitions=4)
     t = asm_op.assemble(ex.rows_table(extracted))
-    return {k: v.persist() for k, v in t.items()}
+    # localCheckpoint, not persist: a persisted table keeps the whole
+    # assembly plan, and every plan that reads it would print it again
+    return {k: v.localCheckpoint() for k, v in t.items()}
 
 
 @pytest.fixture(scope="module")
@@ -263,3 +265,21 @@ def test_distributed_fragment_write_and_stitch(spark, fragments, tmp_path):
     digest = aml.stitch_aml_to(frag, str(dst))
     assert dst.read_text(encoding="utf-8") == stitched
     assert digest == hashlib.md5(stitched.encode("utf-8")).hexdigest()
+
+
+def test_aml_export_releases_session_state(spark, tables, tmp_path):
+    """``export_tables(format="aml")`` releases the persisted target
+    join of ``aml_fragments`` once the export is written: the call
+    adds no persistent RDD and leaves the CacheManager empty."""
+    from indu_doc_transformer_spark.operators import sinks
+
+    jsc = spark.sparkContext._jsc
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    before = set(jsc.getPersistentRDDs().keySet())
+    sinks.export_tables(tables, str(tmp_path / "aml"), format="aml")
+    # other tests' RDDs may be unpersisted by the ContextCleaner at any
+    # time, so only the ids the call adds are checked
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    assert cache_manager.isEmpty()
+    assert spark.read.parquet(str(tmp_path / "aml" / "aml_index")).count() > 0

@@ -330,6 +330,8 @@ def test_warc_stream_parity_and_salvage(spark, tmp_path):
     corrupt tail salvages the valid prefix and flags the file."""
     import gzip
 
+    import pytest
+
     from indu_doc_transformer_spark.sources import warc as w
 
     def rec(headers: bytes, block: bytes) -> bytes:
@@ -353,9 +355,8 @@ def test_warc_stream_parity_and_salvage(spark, tmp_path):
     assert list(w.iter_warc_stream(tiny, emit_skips=True)) == whole
     # member-wise gzip -> streamed gunzip -> same records
     members = b"".join(gzip.compress(raw[i:i + 64]) for i in range(0, len(raw), 64))
-    assert list(w.iter_warc_stream(
-        w._iter_raw_chunks([members[i:i + 11] for i in range(0, len(members), 11)]),
-        emit_skips=True)) == whole
+    assert list(w._records(w._open_archive("members.warc.gz", members),
+                           emit_skips=True)) == whole
     assert [r for r in whole if r.get("skip")] and [r for r in whole if r.get("bad")]
 
     # corrupt tail: valid member + garbage. read_warc keeps the prefix,
@@ -370,6 +371,16 @@ def test_warc_stream_parity_and_salvage(spark, tmp_path):
     assert bytes(rows[0].html) == b"salvaged"
     st = w.warc_file_stats(spark, str(tmp_path / "bad.warc.gz")).collect()[0]
     assert (st.n_records, st.n_response, st.n_bad) == (1, 1, -1)
+
+    # a member that inflates but fails its CRC check completes no
+    # record; the valid member before it is kept
+    bad_crc = bytearray(good)
+    bad_crc[-8] ^= 0xFF  # the CRC32 field of the gzip trailer
+    urls = []
+    with pytest.raises(gzip.BadGzipFile, match="CRC"):
+        for r in w._records(w._open_archive("crc.warc.gz", good + bytes(bad_crc))):
+            urls.append(r["url"])
+    assert urls == ["http://ok/"]
 
 
 def test_warc_missing_file_fails_loudly(spark, tmp_path):
@@ -549,10 +560,10 @@ with open(path, "wb") as f:
     chunk = payload + b"ab cd " * ((small - len(payload)) // 6)
     for i in range(n_small):
         member(b"http://s/%%d" %% i, chunk)
-from indu_doc_transformer_spark.sources.warc import _file_record_stream
+from indu_doc_transformer_spark.sources.warc import _open_archive, _records
 base = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
 n = total = 0
-for rec in _file_record_stream(path):
+for rec in _records(_open_archive(path)):
     if not rec.get("bad"):
         n += 1
         total += len(rec["html"])
@@ -569,14 +580,35 @@ print("OK", n, total, delta_b)
     assert r.stdout.startswith("OK")
 
 
-def test_warc_gunzip_padding_and_bomb_guard():
+def test_warc_gunzip_padding_and_bomb_guard(monkeypatch):
     """Review fixes pinned: (a) zero padding between gzip members must
-    not end the stream regardless of how read-chunk boundaries fall —
+    not end the stream regardless of how the file's raw reads fall —
     members after padding survive; (b) an absurd Content-Length is a
     bad record, not an instruction to buffer the rest of the file."""
     import gzip
+    import io
 
     from indu_doc_transformer_spark.sources import warc as w
+
+    class ShortReads(io.RawIOBase):
+        """A seekable raw file whose reads return at most ``n`` bytes."""
+
+        def __init__(self, data, n):
+            self._b, self._n = io.BytesIO(data), n
+
+        def readable(self):
+            return True
+
+        def seekable(self):
+            return True
+
+        def seek(self, pos, whence=0):
+            return self._b.seek(pos, whence)
+
+        def readinto(self, buf):
+            piece = self._b.read(min(len(buf), self._n))
+            buf[:len(piece)] = piece
+            return len(piece)
 
     def rec(url, body):
         return (b"WARC/1.0\r\nWARC-Type: response\r\n"
@@ -589,8 +621,14 @@ def test_warc_gunzip_padding_and_bomb_guard():
     arc = (gzip.compress(rec(b"http://a/", body)) + b"\x00" * 7
            + gzip.compress(rec(b"http://b/", body)) + b"\x00" * 3)
     for chunk in (1, 2, 5, 11, len(arc)):
-        pieces = [arc[i:i + chunk] for i in range(0, len(arc), chunk)]
-        urls = [r["url"] for r in w.iter_warc_stream(w._iter_raw_chunks(pieces))
+        # a file opened "rb" is buffered: the archive opener always
+        # reads through a BufferedReader, however short the raw reads
+        monkeypatch.setattr(
+            w, "open",
+            lambda path, mode: io.BufferedReader(ShortReads(arc, chunk)),
+            raising=False,
+        )
+        urls = [r["url"] for r in w._records(w._open_archive("/a.warc.gz"))
                 if not r.get("bad")]
         assert urls == ["http://a/", "http://b/"], (chunk, urls)
 
@@ -613,10 +651,10 @@ def test_warc_nonlocal_scheme_fails_loudly():
     mode this guards."""
     import pytest
 
-    from indu_doc_transformer_spark.sources.warc import _iter_file_chunks
+    from indu_doc_transformer_spark.sources.warc import _open_archive
 
     with pytest.raises(RuntimeError, match="non-local path"):
-        list(_iter_file_chunks("hdfs://nn/crawl/x.warc.gz"))
+        _open_archive("hdfs://nn/crawl/x.warc.gz")
 
 
 def test_extract_from_warc_matches_chained_path(spark, tmp_path):

@@ -171,7 +171,7 @@ def test_ann_bruteforce_norm_precompute_parity(spark):
     slow = sim._topk(
         base.crossJoin(F.broadcast(probes))
         .where(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("cos_sim", dd.embedding_cosine(F.col("pv"), F.col("v"))),
+        .withColumn("cos_sim", dd.embedding_cosine("pv", "v")),
         k=40,
     )
     key = lambda r: (r.probe_id, r.rank)

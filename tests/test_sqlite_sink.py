@@ -175,7 +175,7 @@ def test_registry_dispatch(spark, setup, tmp_path):
     from indu_doc_transformer_spark.operators import sinks
 
     tables, _ = setup
-    assert "sqlite" in sinks.exporter_names()
+    assert "sqlite" in sinks.EXPORTERS
     db2 = str(tmp_path / "via_registry.db")
     sinks.export_tables(tables, db2, format="sqlite")
     con = sqlite3.connect(db2)
