@@ -6,14 +6,13 @@
                      (SURVEY.md §2 + training-data-pipeline operators);
                      each callable takes (spark, sf_dir) -> DataFrame.
 ``oracle_sql()``   — DuckDB-equivalent SQL per query. Kernel-computed
-                     VALUES (extracted text, multimodal decodes, the
-                     AML byte stream) are pinned against committed
-                     goldens; everything relational — including the
-                     layers ABOVE the kernels (spans, metrics, search,
-                     trees, lookups) — is reproduced in portable SQL
-                     over staged parquet. Only x_extract_text (below
-                     the cap, subsumed by q_extract_goldens) stays
-                     rows-only.
+                     VALUES (extracted text, the AML byte stream) are
+                     pinned against committed goldens; everything
+                     relational — including the layers ABOVE the
+                     kernels (spans, metrics, search, trees, lookups)
+                     — is reproduced in portable SQL over staged
+                     parquet. Only x_extract_text (below the cap,
+                     subsumed by q_extract_goldens) stays rows-only.
 
 The ``q_*_from_rows`` family oracles the assembly FINISHER layer
 end-to-end: the Spark side stages the typed-request table to parquet
@@ -387,28 +386,6 @@ def x_partition_metrics(spark, sf_dir):
 
     ext = spark.read.parquet(_extracted_parquet(spark, sf_dir))
     return ex.partition_metrics(ext)
-
-
-def x_multimodal_features(spark, sf_dir):
-    """Multimodal features pinned BY VALUE: the real BMP + baseline-
-    JPEG + WAV decodes (and the md5 stand-in for the stubbed codecs)
-    over the deterministic synthetic media table are exact, so the
-    oracle reads the committed golden (tests/goldens/
-    multimodal_features.json, regenerate with scripts/
-    capture_aux_goldens.py). f0 pins dimensions, f3 pins decoded PIXEL
-    content (mean red — a JPEG Huffman/IDCT/color regression moves
-    it). sf-independent: the media table is seeded by id, not by the
-    corpus."""
-    from indu_doc_transformer_spark.operators import multimodal as mm
-
-    media = mm.synth_media_df(spark, 64)
-    return mm.extract_features(media, fake=True).select(
-        "media_id",
-        "kind",
-        F.round(F.element_at("feature", 1), 6).alias("f0"),
-        F.round(F.element_at("feature", 3), 6).alias("f3"),
-        "decode_ok",
-    )
 
 
 def x_ann_lsh(spark, sf_dir):
@@ -1582,10 +1559,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     semantic decontam, temperature mixture, corpus report), and the
     formerly-rows-only x-checks — ALL of which now carry full value
     oracles (staged-parquet SQL reproductions for spans / metrics /
-    search / tree / lookup, committed goldens for the AML byte stream
-    and multimodal features). Entries BELOW the cap marker are green
-    oracled demonstrators whose operators are already pinned by a
-    stronger recorded entry (noted inline); they still run under
+    search / tree / lookup, a committed golden for the AML byte
+    stream). Entries BELOW the cap marker are green oracled
+    demonstrators whose operators are already pinned by a stronger
+    recorded entry (noted inline); they still run under
     ``scripts/validate_entry.py`` (no name args = all queries), which
     is executed each round — nothing here is silently unvalidated."""
     return {
@@ -1644,12 +1621,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_spans": x_spans,
         "x_metrics_errors": x_metrics_errors,
         "x_partition_metrics": x_partition_metrics,
-        "x_multimodal_features": x_multimodal_features,
         "x_search_targets": x_search_targets,
         "x_search_connections": x_search_connections,
         "x_aml_export": x_aml_export,
         "x_aspect_tree": x_aspect_tree,
         "x_lineage_lookup": x_lineage_lookup,
+        "q_url_filter": q_url_filter,  # recorded: the only check of dedup.url_quality
         # ---- driver record cap (50) reached: entries below are green
         # oracled queries either superseded by a stronger recorded check
         # (noted inline) or late additions that no longer fit the cap;
@@ -1662,7 +1639,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x_ann_lsh": x_ann_lsh,  # ⊂ q_ann_lsh_multiprobe (r6 demotion)
         "q_source_caps": q_source_caps,  # per-source quota (late addition)
         "q_url_dedup": q_url_dedup,  # URL canonicalization + dedup (late addition)
-        "q_url_filter": q_url_filter,  # C4/RefinedWeb URL quality gate (r6 late addition; the pure-codegen rule-flag SHAPE is recorded via q_gopher_rules/q_c4_rules — the url-specific regex content is pinned by validate_entry at 2 scales each round)
         "q_shard_manifest": q_shard_manifest,  # per-shard release manifest (r6 late addition; packing ⊂ recorded q_token_shards, manifest agg pinned by validate_entry at 2 scales)
         "q_incremental_dedup": q_incremental_dedup,  # ingest-vs-history dedup (late addition)
         "q_asof_join_bucketed": q_asof_join_bucketed,  # skew-safe as-of ⊂ q_asof_join oracle
@@ -3714,20 +3690,11 @@ def oracle_sql() -> dict[str, str]:
         FROM read_parquet('{_oracle_extracted_glob()}')
         GROUP BY partition_id
     """
-    # golden-pinned value checks (the committed goldens are captured
-    # from the pinned decoders/serializers by scripts/
-    # capture_aux_goldens.py — same philosophy as q_extract_goldens)
-    # explicit column types (same rule as the AML golden below): auto
-    # inference would re-render any UUID/date-shaped value
-    d["x_multimodal_features"] = """
-        SELECT media_id, kind, f0, f3, decode_ok
-        FROM read_json('/root/repo/tests/goldens/multimodal_features.json',
-                       columns={'media_id': 'BIGINT', 'kind': 'VARCHAR',
-                                'f0': 'DOUBLE', 'f3': 'DOUBLE',
-                                'decode_ok': 'BOOLEAN'})
-    """
-    # explicit column types: auto-inference parses the 32-hex md5 as a
-    # UUID and re-renders it with dashes
+    # golden-pinned value check (the committed golden is captured from
+    # the pinned serializer by scripts/capture_aux_goldens.py — same
+    # philosophy as q_extract_goldens). Explicit column types:
+    # auto-inference parses the 32-hex md5 as a UUID and re-renders it
+    # with dashes
     d["x_aml_export"] = f"""
         SELECT hierarchy, section, n_fragments, n_targets, n_aspects,
                n_connections, n_pins, n_links, xml_chars, h_order, file_md5

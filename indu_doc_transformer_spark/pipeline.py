@@ -187,8 +187,9 @@ def run_assembly(
     cancelling the caller's job group cancels the wave. Every write
     finishes before this returns or raises; a failure is re-raised
     after the others finish, the first in output order. ``assemble``'s
-    tag checkpoints and conn_all/xall caches are released once the wave
-    is over; only its requests checkpoint stays with the session."""
+    ``conn_all``, ``xall`` and ``distinct_tags`` caches are released once
+    the wave is over; only its requests checkpoint stays with the
+    session."""
     extracted = read_table(spark, os.path.join(out_dir, "extracted"))
     rows = ex.rows_table(extracted)
     with temp_caches() as cache:

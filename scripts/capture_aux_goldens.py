@@ -1,14 +1,10 @@
-"""Regenerate the auxiliary value goldens:
+"""Regenerate the AML value golden, tests/goldens/aml_export.json: the
+x_aml_export index rows plus the md5 of the complete stitched CAEX
+document per sf dir (the serialization itself is reference-pinned by
+tests/test_aml.py; the timestamp is a fixed parameter, so the bytes are
+deterministic).
 
-- tests/goldens/multimodal_features.json — the exact feature table of
-  x_multimodal_features (real BMP/WAV decodes + md5 stand-ins over the
-  deterministic synthetic media set; sf-independent).
-- tests/goldens/aml_export.json — the AML export index rows plus the
-  md5 of the complete stitched CAEX document per sf dir (the
-  serialization itself is reference-pinned by tests/test_aml.py; the
-  timestamp is a fixed parameter, so the bytes are deterministic).
-
-Run ONLY when the decoder/serializer semantics intentionally change,
+Run ONLY when the serializer semantics intentionally change,
 and say so in the commit:
 
     python scripts/capture_aux_goldens.py
@@ -34,13 +30,6 @@ def main() -> None:
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-
-    mm_rows = [
-        r.asDict() for r in entry.x_multimodal_features(spark, SF_DIRS[0]).collect()
-    ]
-    with open(os.path.join(GOLDEN_DIR, "multimodal_features.json"), "w") as f:
-        json.dump(mm_rows, f, indent=1, sort_keys=True)
-    print(f"multimodal_features.json: {len(mm_rows)} rows")
 
     aml_rows = []
     for sf_dir in SF_DIRS:

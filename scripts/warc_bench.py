@@ -62,14 +62,13 @@ def main() -> None:
     n_hi = int(sys.argv[4]) if len(sys.argv) > 4 else 32
     body = 16 << 10  # ~16 KiB raw html per record
 
-    d = tempfile.mkdtemp(prefix="warc_bench_")
-    for fid in range(n_files):
-        gen_file(os.path.join(d, f"part-{fid:04d}.warc.gz"), fid, recs, body)
     total = n_files * recs
     raw_mb = total * body / (1 << 20)
-
-    lo = run(n_lo, d + "/*.warc.gz", total)
-    hi = run(n_hi, d + "/*.warc.gz", total)
+    with tempfile.TemporaryDirectory(prefix="warc_bench_") as d:
+        for fid in range(n_files):
+            gen_file(os.path.join(d, f"part-{fid:04d}.warc.gz"), fid, recs, body)
+        lo = run(n_lo, d + "/*.warc.gz", total)
+        hi = run(n_hi, d + "/*.warc.gz", total)
     eff = (total / hi) / (total / lo) / (n_hi / n_lo)
     print(json.dumps({
         "metric": "warc ingest docs/sec",

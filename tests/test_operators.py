@@ -1,13 +1,10 @@
-"""Training-data-pipeline operators: dedup, similarity, multimodal,
-streaming — functional checks with planted cases."""
-
-import hashlib
+"""Training-data-pipeline operators: dedup, similarity, streaming —
+functional checks with planted cases."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from indu_doc_transformer_spark.operators import dedup as dd
-from indu_doc_transformer_spark.operators import multimodal as mm
 from indu_doc_transformer_spark.operators import similarity as sim
 from token_cases import TOKEN_CASES
 
@@ -548,90 +545,6 @@ def test_ann_ivf_full_probe_equals_bruteforce(spark):
     assert part
 
 
-def test_multimodal_plumbing(spark):
-    media = mm.synth_media_df(spark, 24)
-    feats = mm.extract_features(media, fake=True).collect()
-    assert len(feats) == 24
-    assert all(len(r.feature) == mm.FEATURE_DIM and r.decode_ok for r in feats)
-    # image rows go through the REAL BMP decode: feature = pixel stats
-    img = next(r.feature for r in feats if r.media_id == 0)
-    w, h, rgb_luma = mm.decode_bmp(
-        mm.encode_bmp(8, 8, lambda x, y: ((x * 31) % 256, (y * 17) % 256, 0))
-    )
-    assert (w, h) == (8, 8)
-    # feature column is float32: compare with float tolerance
-    assert img[2:6] == pytest.approx(rgb_luma, rel=1e-5)
-    # audio rows go through the REAL WAV PCM decode: feature = waveform stats
-    samples = [((j * 38) % 2048 - 1024) * 16 for j in range(160)]
-    rate, ns, stats = mm.decode_wav(mm.encode_wav(16000, samples))
-    assert (rate, ns) == (16000, 160)
-    got = next(r.feature for r in feats if r.media_id == 1)
-    assert list(got[2:6]) == pytest.approx(stats, rel=1e-5)
-    # video rows fall back to the deterministic md5 stand-in
-    hv = hashlib.md5(hashlib.md5(b"media:2").digest() * 4).digest()
-    fv = [hv[i] / 255.0 for i in range(mm.FEATURE_DIM)]
-    got_v = next(r.feature for r in feats if r.media_id == 2)
-    assert list(got_v) == pytest.approx(fv, rel=1e-5)
-
-
-def test_bmp_roundtrip_exact():
-    """Solid-color BMP decodes to exact channel means."""
-    payload = mm.encode_bmp(5, 3, lambda x, y: (200, 100, 50))
-    w, h, (mr, mg, mb, luma) = mm.decode_bmp(payload)
-    assert (w, h) == (5, 3)
-    assert (round(mr, 6), round(mg, 6), round(mb, 6)) == (
-        round(200 / 255, 6),
-        round(100 / 255, 6),
-        round(50 / 255, 6),
-    )
-    assert round(luma, 6) == round(0.299 * mr + 0.587 * mg + 0.114 * mb, 6)
-
-
-def test_multimodal_corrupt_payload_decode_ok_false(spark):
-    """Planted truncated BMPs become decode_ok=False rows, never task
-    failures."""
-    media = mm.synth_media_df(spark, 24, corrupt_every=6)
-    feats = mm.extract_features(media, fake=True).collect()
-    corrupt = {r.media_id for r in feats if not r.decode_ok}
-    # image ids are multiples of 3; corrupted where id % 6 == 0
-    assert corrupt == {i for i in range(24) if i % 3 == 0 and i % 6 == 0}
-    assert all(r.decode_ok for r in feats if r.media_id not in corrupt)
-
-
-def test_multimodal_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"xx", fake=False)
-    with pytest.raises(ValueError):
-        # a corrupt BMP raises even with fake=True (real decode failure)
-        mm.decode_image(mm.encode_bmp(4, 4, lambda x, y: (1, 2, 3))[:20], fake=True)
-    with pytest.raises(NotImplementedError):
-        mm.decode_audio(b"ID3\x04compressed", fake=False)  # non-RIFF → stub
-    with pytest.raises(ValueError):
-        # a corrupt WAV raises even with fake=True (real decode failure)
-        mm.decode_audio(mm.encode_wav(8000, [1, 2, 3, 4])[:30], fake=True)
-    with pytest.raises(NotImplementedError):
-        mm.decode_video(b"anything", fake=False)
-
-
-def test_wav_roundtrip_exact():
-    """Constant/alternating waveforms decode to exact stats."""
-    rate, n, (rms, peak, zcr, mean) = mm.decode_wav(mm.encode_wav(8000, [16384] * 100))
-    assert (rate, n) == (8000, 100)
-    assert (rms, peak, mean) == pytest.approx([0.5, 0.5, 0.5]) and zcr == 0.0
-    _, _, (_, _, zcr2, mean2) = mm.decode_wav(
-        mm.encode_wav(8000, [16384, -16384] * 50)
-    )
-    assert zcr2 == pytest.approx(1.0) and mean2 == 0.0
-
-
-def test_multimodal_resize_and_frames(spark):
-    media = mm.synth_media_df(spark, 12)
-    rs = mm.resize_meta(media.where("kind = 'image'"), 32).collect()
-    assert rs and all(r.new_width <= 32 and r.new_height <= 32 for r in rs)
-    frames = mm.frame_sample_plan(media, 500)
-    assert frames.count() > 0
-
-
 def test_streaming_windowed_metrics(spark, tmp_path):
     from indu_doc_transformer_spark.sources.corpus import corpus_df
     from indu_doc_transformer_spark.streaming.stream import stream_metrics
@@ -1009,57 +922,6 @@ def test_line_dedup_first_occurrence_wins(spark):
     assert out[2].n_lines == 1
     import hashlib
     assert out[2].text_md5 == hashlib.md5(b"delta four").hexdigest()
-
-
-def test_wav_malformed_raises_valueerror_not_task_failure(spark):
-    """Malformed RIFF payloads must raise ValueError (caught per-row),
-    never struct.error/ZeroDivisionError (which would kill the task)."""
-    import struct as st
-
-    # >= 44 bytes so the fmt-chunk-size guard itself is exercised (a
-    # shorter payload trips the length gate before reaching it)
-    short_fmt = (
-        b"RIFF" + st.pack("<I", 40) + b"WAVE"
-        + b"fmt " + st.pack("<I", 4) + b"\x01\x00\x01\x00"
-        + b"data" + st.pack("<I", 16) + b"\x00" * 16
-    )
-    assert len(short_fmt) >= 44
-    with pytest.raises(ValueError, match="short fmt chunk"):
-        mm.decode_wav(short_fmt)
-    zero_rate = mm.encode_wav(0, [1, 2, 3, 4])
-    with pytest.raises(ValueError):
-        mm.decode_wav(zero_rate)
-    # end-to-end: a planted malformed audio payload becomes a
-    # decode_ok=False row, not a task failure
-    media = spark.createDataFrame(
-        [(0, "audio", bytearray(short_fmt), None), (1, "audio", bytearray(zero_rate), None)],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = mm.extract_features(media, fake=True).collect()
-    assert len(rows) == 2 and not any(r.decode_ok for r in rows)
-
-
-def test_riff_non_wave_container_falls_through_to_fake(spark):
-    """A RIFF container that is NOT WAVE (e.g. RIFF/AVI) is another
-    codec, not a corrupt WAV: with fake=True it must take the md5
-    stand-in path (decode_ok=True), not surface as a decode failure
-    (ADVICE r3)."""
-    import hashlib
-    import struct as st
-
-    avi = b"RIFF" + st.pack("<I", 100) + b"AVI " + b"\x00" * 92
-    feats = mm.decode_audio(avi, fake=True)
-    h = hashlib.md5(avi).digest()
-    assert feats == [h[i] / 255.0 for i in range(mm.FEATURE_DIM)]
-    with pytest.raises(NotImplementedError):
-        mm.decode_audio(avi, fake=False)
-    # a corrupt RIFF/WAVE still raises (real decode failure)
-    with pytest.raises(ValueError):
-        mm.decode_audio(b"RIFF" + st.pack("<I", 8) + b"WAVE", fake=True)
-    # a RIFF header truncated BEFORE its form tag is corrupt, not
-    # another codec — must not slip through to the fake path
-    with pytest.raises(ValueError):
-        mm.decode_audio(b"RIFF" + st.pack("<I", 8) + b"WA", fake=True)
 
 
 def test_decontamination_broadcast_gate_degrades_gracefully(spark):

@@ -1,6 +1,6 @@
 """Property-based invariants for the round-2 components: the query
-parser, hamming distance, BMP codec, and the AML tree serializer
-(pure-Python parts — no Spark session needed)."""
+parser, the AML tree serializer and the totality of the HTML and WARC
+ingestion surfaces (pure-Python parts — no Spark session needed)."""
 
 import xml.etree.ElementTree as ET
 
@@ -8,7 +8,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from indu_doc_transformer_spark.config import DEFAULT_ASPECTS
-from indu_doc_transformer_spark.operators import multimodal as mm
 from indu_doc_transformer_spark.operators.aml import _serialize_group
 from indu_doc_transformer_spark.operators.search import run_parser
 
@@ -51,35 +50,6 @@ def test_parser_filter_count(paths):
     q = " ".join("@" + ".".join(p) for p in paths)
     _, fs = run_parser(q)
     assert len(fs) == len(paths)
-
-
-# ---------------------------------------------------------------------------
-# BMP codec
-# ---------------------------------------------------------------------------
-
-
-@given(
-    st.integers(min_value=1, max_value=12),
-    st.integers(min_value=1, max_value=12),
-    st.integers(min_value=0, max_value=255),
-    st.integers(min_value=0, max_value=255),
-    st.integers(min_value=0, max_value=255),
-)
-@settings(max_examples=60)
-def test_bmp_roundtrip_property(w, h, r, g, b):
-    payload = mm.encode_bmp(w, h, lambda x, y: (r, g, b))
-    dw, dh, (mr, mg, mb, luma) = mm.decode_bmp(payload)
-    assert (dw, dh) == (w, h)
-    assert abs(mr - r / 255.0) < 1e-9
-    assert abs(mg - g / 255.0) < 1e-9
-    assert abs(mb - b / 255.0) < 1e-9
-    # any truncation of the pixel data fails loudly
-    if len(payload) > 60:
-        try:
-            mm.decode_bmp(payload[:58])
-            assert False, "truncated BMP must raise"
-        except ValueError:
-            pass
 
 
 # ---------------------------------------------------------------------------
@@ -185,20 +155,6 @@ def test_parse_warc_negative_length_terminates():
            b"Content-Length: -5\r\n\r\npayload\r\n\r\n")
     out = list(parse_warc(raw))
     assert out and out[0].get("bad")
-
-
-@given(st.binary(max_size=512))
-@settings(max_examples=300, deadline=None)
-def test_media_decoders_total(payload):
-    """extract_features catches only ValueError/NotImplementedError per
-    row; any other exception type escaping a decoder would kill the
-    task — arbitrary bytes (including BMP headers declaring huge
-    dimensions over truncated data) must stay inside that contract."""
-    for dec in (mm.decode_image, mm.decode_audio, mm.decode_video):
-        try:
-            dec(payload, fake=True)
-        except (ValueError, NotImplementedError):
-            pass
 
 
 @given(st.binary(max_size=4096), st.integers(min_value=1, max_value=97))
